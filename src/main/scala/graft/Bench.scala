@@ -9,11 +9,12 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = core.GraftSession.cpus.toString
     // SPARK_GRAFT_MASTER=local-cluster[2,16,8192]: same bench, tasks in
     // separate executor JVMs (multi-JVM serialization/shuffle evidence).
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val builder0 = SparkSession.builder()
+      .config(core.GraftSession.codegenSettings)
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -41,15 +42,27 @@ object Bench {
     // pass over everything keeps the timed pass comparable run-to-run.
     // Caches clear per query here too — the same memory conditions the
     // timed pass runs under.
+    val (c0, cms0) = (core.GraftSession.compiles, core.GraftSession.compileMs)
     qs.foreach { q =>
       try runOnce(q.run) catch { case _: Throwable => () }
       queries.Extensions.clearPersistedIntermediates()
     }
+    // Janino compiles of the warm-up pass: the distinct generated classes
+    // one full pass needs, the working set GraftSession sizes its cache to.
+    val warmupCompiles = core.GraftSession.compiles - c0
+    val warmupCompileMs = core.GraftSession.compileMs - cms0
+    // compiles and their ms inside each query's timed runs, all passes
+    val compiled = scala.collection.mutable.Map.empty[String, (Long, Double)]
+      .withDefaultValue((0L, 0.0))
     var sinceGc = 0
     def timeOne(q: queries.Q): Double = {
+      val (c, cms) = (core.GraftSession.compiles, core.GraftSession.compileMs)
       val t0 = System.nanoTime()
       val ok = try { runOnce(q.run); true } catch { case _: Throwable => false }
       val dt = (System.nanoTime() - t0) / 1e9
+      val (n, ms) = compiled(q.name)
+      compiled(q.name) = (n + core.GraftSession.compiles - c,
+        ms + core.GraftSession.compileMs - cms)
       // Release this query's cached intermediates BEFORE the next timed
       // query: leaving all 80+ queries' persisted blocks resident made
       // the unified memory manager squeeze execution memory for
@@ -153,15 +166,22 @@ object Bench {
     // round: the stdout line survives only as the tail of a build log
     // (whose parse has shipped as null since r10), so round-over-round
     // diffs read THIS file instead of re-parsing strings. Full query
-    // names here (no tail-window budget), same numbers as the line.
+    // names here (no tail-window budget), same `wall` as the line, plus
+    // the compiles of each query's timed runs (0 once the codegen cache
+    // holds the working set).
     val qjFull = results
-      .map { case (k, v) => "\"" + k + "\":" + num(v) }
+      .map { case (k, v) =>
+        val (n, ms) = compiled(k)
+        "\"" + k + "\":{\"wall\":" + num(v) + ",\"compiles\":" + n +
+          ",\"compile_ms\":" + num(ms) + "}"
+      }
       .mkString("{", ",", "}")
     val failedFull = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LAST.json"),
       s"""{"metric":"total","value":${num(total)},"unit":"sec","headline":${
-        num(headline)},"failed":$failedFull,"queries":$qjFull,"sf":"$sfDir"}""" + "\n")
+        num(headline)},"failed":$failedFull,"warmup":{"compiles":$warmupCompiles,"compile_ms":${
+        num(warmupCompileMs)}},"queries":$qjFull,"sf":"$sfDir"}""" + "\n")
     catch { case _: java.io.IOException => () } // diagnostics only
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","headline":${num(headline)},"failed":$failedJson,"spread":$spreadJson,"queries":$qj,"sf":"$sfDir"}""")
     spark.stop()

@@ -47,7 +47,10 @@ import graft.streaming.{BounceDetector, DedupDaily, FileTopic, Jobs, PageLog, So
   *
   * Reported per topology: wall seconds to drain the topic,
   * events/sec, and per-micro-batch latency (p50/max of
-  * `triggerExecution` from query progress). Two passes, min per
+  * `triggerExecution` from query progress), and the Janino compiles
+  * (with their ms) inside each pass's window — pass 1 is cold, pass 2
+  * compiles ~0 once the codegen cache holds the topology's classes
+  * ([[core.GraftSession.codegenSettings]]). Two passes, min per
   * topology (same stall-burst rationale as [[Bench]]); divergent
   * topologies land in `spread`; full per-pass detail goes to
   * `target/stream_bench_passes.json`. Prints ONE JSON line.
@@ -72,7 +75,8 @@ object StreamBench {
       StructField("pos", IntegerType), StructField("item", StringType)))))))
 
   private final case class BatchStat(rows: Long, ms: Long)
-  private final case class TopoResult(sec: Double, batches: Seq[BatchStat])
+  private final case class TopoResult(sec: Double, batches: Seq[BatchStat],
+                                      compiles: Long, compileMs: Double)
 
   /** The media leg's blob corpus: THREE deterministic byte-template
     * families (disjoint alphabets → disjoint dominant trigram bins),
@@ -148,7 +152,7 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = core.GraftSession.cpus.toString
     // SPARK_GRAFT_STATE_STORE=rocksdb benches the production state
     // backend (large stateful deploys run RocksDB, not the default
     // HDFS-backed in-memory map; the TWS operators require it).
@@ -161,6 +165,7 @@ object StreamBench {
           s"unknown SPARK_GRAFT_STATE_STORE '$other' (use default|rocksdb)")
       }
     val builder = SparkSession.builder()
+      .config(core.GraftSession.codegenSettings)
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.adaptive.enabled", "true")
@@ -268,6 +273,7 @@ object StreamBench {
         val dir = work.resolve(key)
         Files.createDirectories(dir)
         val raw = FileTopic.stream(spark, topic, maxFilesPerTrigger = Some(2))
+        val (c0, cms0) = (core.GraftSession.compiles, core.GraftSession.compileMs)
         val t0 = System.nanoTime()
         val q = start(raw, dir)
         try q.processAllAvailable() finally q.stop()
@@ -275,7 +281,8 @@ object StreamBench {
         val dt = (System.nanoTime() - t0) / 1e9
         val b = stats.synchronized(stats.getOrElse(key, Seq.empty).toList)
         deleteTree(dir) // state/checkpoint/sinks are per-pass scratch
-        TopoResult(dt, b)
+        TopoResult(dt, b, core.GraftSession.compiles - c0,
+          core.GraftSession.compileMs - cms0)
       }
 
       def runPass(pass: Int): Map[String, TopoResult] = Map(
@@ -452,6 +459,7 @@ object StreamBench {
         val dir = work.resolve(key)
         Files.createDirectories(dir.resolve("survivors"))
         val raw = FileTopic.stream(spark, topic, maxFilesPerTrigger = Some(2))
+        val (c0, cms0) = (core.GraftSession.compiles, core.GraftSession.compileMs)
         val t0 = System.nanoTime()
         val q1 = graft.streaming.StreamingFunnel.startGateStage(
           funnelDocs(raw), funnelRatio, dir.toString,
@@ -473,7 +481,8 @@ object StreamBench {
           (stats.getOrElse(key, Seq.empty) ++
             stats.getOrElse(s"${key}_nd", Seq.empty)).toList)
         deleteTree(dir)
-        TopoResult(dt, b)
+        TopoResult(dt, b, core.GraftSession.compiles - c0,
+          core.GraftSession.compileMs - cms0)
       }
 
       val p1 = runPass(1)
@@ -489,7 +498,9 @@ object StreamBench {
         val ms = best.batches.map(_.ms)
         s""""$name":{"sec":${num(best.sec)},"events_per_sec":${
           num(nEvents / best.sec)},"batches":${best.batches.size},"batch_ms_p50":${
-          p50(ms)},"batch_ms_max":${ms.foldLeft(0L)(math.max)}}"""
+          p50(ms)},"batch_ms_max":${ms.foldLeft(0L)(math.max)},"compiles":[${
+          p1(name).compiles},${p2(name).compiles}],"compile_ms":[${
+          num(p1(name).compileMs)},${num(p2(name).compileMs)}]}"""
       }
       val names =
         Seq("split", "split_atomic", "uv_dim", "bounce", "clusters", "media",
@@ -503,7 +514,8 @@ object StreamBench {
       }.mkString("{", ",", "}")
       val total = names.map(n => math.min(p1(n).sec, p2(n).sec)).sum
       def passJson(p: Map[String, TopoResult]): String =
-        allNames.map(n => s""""$n":{"sec":${num(p(n).sec)},"batches":[${
+        allNames.map(n => s""""$n":{"sec":${num(p(n).sec)},"compiles":${
+          p(n).compiles},"compile_ms":${num(p(n).compileMs)},"batches":[${
           p(n).batches.map(b => s"[${b.rows},${b.ms}]").mkString(",")}]}""")
           .mkString("{", ",", "}")
       try Files.writeString(java.nio.file.Paths.get("target/stream_bench_passes.json"),

@@ -10,7 +10,7 @@ object Verify {
     // local debugging of a single red row (driver passes only two args).
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(',').toSet) else None
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = core.GraftSession.cpus.toString
     // SPARK_GRAFT_MASTER=local-cluster[2,8,8192] runs the same gate
     // with tasks deserialized in SEPARATE executor JVMs — the closest
     // local stand-in for a real cluster (exercises kernel/task
@@ -18,6 +18,7 @@ object Verify {
     // Executors are fresh JVMs, so they need this build's classes.
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
     val builder = SparkSession.builder()
+      .config(core.GraftSession.codegenSettings)
       .master(master)
       .config("spark.sql.shuffle.partitions", cpus)
       .config("spark.sql.session.timeZone", "UTC")

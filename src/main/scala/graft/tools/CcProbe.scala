@@ -28,7 +28,7 @@ import org.apache.spark.sql.functions._
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val propCap = args.headOption.map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

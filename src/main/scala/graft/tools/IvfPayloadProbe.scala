@@ -50,7 +50,7 @@ object IvfPayloadProbe {
       .split(",").toSeq.map { s =>
         val Array(nl, d) = s.split("x"); (nl.toInt, d.toInt)
       }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -22,7 +22,7 @@ object JobOverheadProbe {
   def main(args: Array[String]): Unit = {
     val jobs = args.headOption.map(_.toInt).getOrElse(12)
     val passes = args.lift(1).map(_.toInt).getOrElse(5)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -47,7 +47,7 @@ object MaintainProbe {
     val distEdges = args.lift(1).map(_.toLong).getOrElse(500000L)
     val drvEdges = args.lift(2).map(_.toLong).getOrElse(150000L)
     val segLen = 32L
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

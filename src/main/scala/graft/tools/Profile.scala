@@ -19,7 +19,7 @@ object Profile {
     val nRuns = positional.lift(1).map(_.toInt).getOrElse(3)
     val names = positional.lift(2).getOrElse("all")
     val explain = flags.contains("+explain")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -25,7 +25,7 @@ object RebucketProbe {
     val nRows = args.headOption.map(_.toLong).getOrElse(200000L)
     val narrow = args.lift(1).map(_.toInt).getOrElse(8)
     val wide = args.lift(2).map(_.toInt).getOrElse(64)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

@@ -45,7 +45,7 @@ object StagedRebuildProbe {
       case s @ ("FAIR" | "FIFO") => s
       case other => sys.error(s"unknown SPARK_GRAFT_SCHED '$other'")
     }
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = graft.core.GraftSession.cpus.toString
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
       .config("spark.sql.shuffle.partitions", cpus)

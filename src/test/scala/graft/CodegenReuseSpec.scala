@@ -1,0 +1,64 @@
+package graft
+
+import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.expressions.{Add, BoundReference, Literal, UnsafeProjection}
+import org.apache.spark.sql.types.LongType
+import org.scalatest.funsuite.AnyFunSuite
+import org.scalatest.matchers.should.Matchers
+
+import graft.core.GraftSession
+
+/** Each generated class is compiled once per JVM
+  * ([[GraftSession.codegenSettings]]). Spark's cache of generated
+  * classes is JVM-wide and earlier suites leave it in any state, so
+  * every assertion is on a compile-count delta taken after the test's
+  * own warm-up run. */
+class CodegenReuseSpec extends AnyFunSuite with Matchers with SparkFixture {
+
+  // q03 plans the same generated code with AQE on and off, and a commit
+  // session of the caller's width hash-partitions its shuffles the same
+  // way, so that session differs from the caller's only by being another
+  private val q = queries.Registry.byName("q03_star_join_broadcast")
+  private def width = spark.sessionState.conf.numShufflePartitions
+
+  private def compilesOf(body: => Unit): Long = {
+    val c0 = GraftSession.compiles
+    body
+    GraftSession.compiles - c0
+  }
+
+  private def runQ(s: SparkSession): Long =
+    compilesOf(q.run(s, sf0001).write.format("noop").mode("overwrite").save())
+
+  test("a second run of the same registry query compiles no class") {
+    runQ(spark)
+    runQ(spark) shouldBe 0
+  }
+
+  test("re-planning the query on a DimStore commit session compiles no class") {
+    runQ(spark)
+    // with per-session artifact isolation the child's executors load
+    // through a class loader of their own and compile q03 again (12
+    // classes on sf0.001)
+    runQ(ops.DimStore.commitSession(spark, width)) shouldBe 0
+  }
+
+  test("the cache keeps a working set five times Spark's default cap") {
+    // 500 distinct generated classes: three times the ~160 one pass of
+    // registry_batch compiles; a second sweep finds every one cached
+    SparkSession.setActiveSession(spark)
+    def sweep(): Long = compilesOf((1 to 500).foreach { i =>
+      UnsafeProjection.create(
+        Seq(Add(BoundReference(0, LongType, nullable = false), Literal(i.toLong))))
+    })
+    sweep()
+    sweep() shouldBe 0
+  }
+
+  test("the session and its child sessions report the shipped settings") {
+    GraftSession.codegenSettings("spark.sql.artifact.isolation.enabled") shouldBe "false"
+    for (s <- Seq(spark, spark.newSession(), ops.DimStore.commitSession(spark, width));
+         (k, v) <- GraftSession.codegenSettings)
+      s.conf.get(k) shouldBe v
+  }
+}

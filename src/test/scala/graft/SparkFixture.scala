@@ -13,6 +13,7 @@ object SharedSpark {
     // build's classes, hence the forwarded classpath).
     val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", "local[4]")
     val builder = SparkSession.builder()
+      .config(graft.core.GraftSession.codegenSettings)
       .appName("graft-test")
       .master(master)
       .config("spark.sql.shuffle.partitions", "4")
