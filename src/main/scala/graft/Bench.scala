@@ -9,42 +9,35 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = core.GraftSession.cpus.toString
-    // SPARK_GRAFT_MASTER=local-cluster[2,16,8192]: same bench, tasks in
-    // separate executor JVMs (multi-JVM serialization/shuffle evidence).
-    val master = sys.env.getOrElse("SPARK_GRAFT_MASTER", s"local[$cpus]")
-    val builder0 = SparkSession.builder()
-      .config(core.GraftSession.codegenSettings)
-      .master(master)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = core.GraftSession.builder("graft-bench")
       // ContextCleaner only reclaims dead broadcast/shuffle state when a
       // GC actually runs; its default periodic full GC is every 30 min —
       // longer than the whole bench. 200+ query executions accumulate
       // state faster than incidental GCs collect it (observed as 10-90x
       // late-registry inflation on an identical-code rerun).
       .config("spark.cleaner.periodicGC.interval", "1min")
-    if (master.startsWith("local-cluster"))
-      builder0.config("spark.executor.extraClassPath",
-        sys.props("java.class.path"))
-    val spark = builder0.getOrCreate()
+      .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def runOnce(fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Unit =
       fn(spark, sfDir).write.format("noop").mode("overwrite").save()
 
     val qs = queries.Registry.all
+    // "<class>: <message>" of each query's latest failure; a query that
+    // fails in every timed run reports it on its BENCH_LAST.json row
+    val errors = scala.collection.mutable.Map.empty[String, String]
+    def recordFailure(q: queries.Q, phase: String, e: Throwable): Unit = {
+      val msg = Option(e.getMessage).flatMap(_.linesIterator.nextOption()).getOrElse("")
+      errors(q.name) = s"${e.getClass.getName}: $msg"
+      System.err.println(s"[bench] ${q.name} failed ($phase): ${errors(q.name)}")
+    }
     // Warm-up: JIT, parquet footer cache, codegen compilation. One light
     // pass over everything keeps the timed pass comparable run-to-run.
     // Caches clear per query here too — the same memory conditions the
     // timed pass runs under.
     val (c0, cms0) = (core.GraftSession.compiles, core.GraftSession.compileMs)
     qs.foreach { q =>
-      try runOnce(q.run) catch { case _: Throwable => () }
+      try runOnce(q.run) catch { case e: Throwable => recordFailure(q, "warm-up", e) }
       queries.Extensions.clearPersistedIntermediates()
     }
     // Janino compiles of the warm-up pass: the distinct generated classes
@@ -58,7 +51,8 @@ object Bench {
     def timeOne(q: queries.Q): Double = {
       val (c, cms) = (core.GraftSession.compiles, core.GraftSession.compileMs)
       val t0 = System.nanoTime()
-      val ok = try { runOnce(q.run); true } catch { case _: Throwable => false }
+      val ok = try { runOnce(q.run); true }
+        catch { case e: Throwable => recordFailure(q, "timed", e); false }
       val dt = (System.nanoTime() - t0) / 1e9
       val (n, ms) = compiled(q.name)
       compiled(q.name) = (n + core.GraftSession.compiles - c,
@@ -172,8 +166,9 @@ object Bench {
     val qjFull = results
       .map { case (k, v) =>
         val (n, ms) = compiled(k)
+        val error = if (v < 0) ",\"error\":" + Verify.jsonString(errors(k)) else ""
         "\"" + k + "\":{\"wall\":" + num(v) + ",\"compiles\":" + n +
-          ",\"compile_ms\":" + num(ms) + "}"
+          ",\"compile_ms\":" + num(ms) + error + "}"
       }
       .mkString("{", ",", "}")
     val failedFull = failed.map("\"" + _ + "\"").mkString("[", ",", "]")

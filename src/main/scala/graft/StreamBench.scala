@@ -152,10 +152,9 @@ object StreamBench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = core.GraftSession.cpus.toString
     // SPARK_GRAFT_STATE_STORE=rocksdb benches the production state
     // backend (large stateful deploys run RocksDB, not the default
-    // HDFS-backed in-memory map; the TWS operators require it).
+    // HDFS-backed in-memory map).
     // Unknown values fail loudly: a typo silently running the default
     // store would stamp a mislabeled artifact.
     val stateStore =
@@ -164,13 +163,7 @@ object StreamBench {
         case other => sys.error(
           s"unknown SPARK_GRAFT_STATE_STORE '$other' (use default|rocksdb)")
       }
-    val builder = SparkSession.builder()
-      .config(core.GraftSession.codegenSettings)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val builder = core.GraftSession.builder("graft-stream-bench")
       .config("spark.cleaner.periodicGC.interval", "1min")
     if (stateStore == "rocksdb")
       builder.config("spark.sql.streaming.stateStore.providerClass",

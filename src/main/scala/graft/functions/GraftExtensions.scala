@@ -4,14 +4,11 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-/** Engine extension installer — the supported hook for native functions
-  * (and, later, rules/strategies):
-  *
-  * {{{
-  * SparkSession.builder()
-  *   .withExtensions(new GraftExtensions)          // programmatic
-  * // or: spark.sql.extensions=graft.functions.GraftExtensions
-  * }}}
+/** Engine extension installer — the supported hook for native
+  * functions, planner strategies and optimizer rules. Every graft
+  * session gets it from [[graft.core.GraftSession.builder]]; a foreign
+  * session can add it with
+  * `spark.sql.extensions=graft.functions.GraftExtensions`.
   *
   * After installation `vec_cosine(a, b)` is available in SQL and
   * `expr("vec_cosine(...)")`, planned as a native codegen'd expression.
@@ -83,18 +80,4 @@ object GraftExtensions {
       "char_bigrams(s) - distinct adjacent code-point pairs packed as (a << 21) | b",
       "", "", "", "", "", "", "built-in"),
     unary("char_bigrams")(CharBigrams(_)))
-
-  /** Register into an already-built session (tests, REPL) — the same
-    * registry write `injectFunction` performs at session build time.
-    * Production code should prefer `withExtensions`/`spark.sql.extensions`. */
-  def install(spark: org.apache.spark.sql.SparkSession): Unit = {
-    spark.sessionState.functionRegistry
-      .registerFunction(vecCosine._1, vecCosine._2, vecCosine._3)
-    spark.sessionState.functionRegistry
-      .registerFunction(ngrams._1, ngrams._2, ngrams._3)
-    spark.sessionState.functionRegistry
-      .registerFunction(charStats._1, charStats._2, charStats._3)
-    spark.sessionState.functionRegistry
-      .registerFunction(charBigrams._1, charBigrams._2, charBigrams._3)
-  }
 }

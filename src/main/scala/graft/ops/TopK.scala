@@ -76,8 +76,9 @@ object TopK {
     * (graft.plans.TopKPerKey → partial/final TopKPerKeyExec), planned
     * by Catalyst via an injected strategy. Registers the strategy in
     * the session's `experimental.extraStrategies` (the public hook) on
-    * first use; `GraftExtensions` injects it at build time for
-    * production sessions. Prefer this form where the planner must see
+    * first use, so a plain session plans it too; every
+    * `GraftSession.builder` session already has it from
+    * `GraftExtensions`. Prefer this form where the planner must see
     * the operator (e.g. under further rule rewrites); `perKey` where a
     * library-level transform suffices. */
   def perKeyPlanned(df: DataFrame, keyCols: Seq[String],

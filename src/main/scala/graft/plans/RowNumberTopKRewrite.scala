@@ -38,7 +38,9 @@ import org.apache.spark.sql.catalyst.rules.Rule
   *     but we leave it alone).
   *
   * Registered via GraftExtensions (injectOptimizerRule) or
-  * `spark.experimental.extraOptimizations`.
+  * `spark.experimental.extraOptimizations`; a session runs the window
+  * form unrewritten with
+  * `spark.sql.optimizer.excludedRules=graft.plans.RowNumberTopKRewrite`.
   */
 object RowNumberTopKRewrite extends Rule[LogicalPlan] {
 

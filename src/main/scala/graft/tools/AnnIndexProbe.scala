@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-side ANN-index maintenance probe (NOT part of the driver
@@ -20,14 +19,7 @@ object AnnIndexProbe {
   def main(args: Array[String]): Unit = {
     val n = args.headOption.map(_.toLong).getOrElse(200000L)
     val b = args.lift(1).map(_.toLong).getOrElse(math.max(1L, n / 100))
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("AnnIndexProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val work = Files.createTempDirectory("ann_probe_")
 

@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Dev-side connected-components scaling probe (NOT part of the driver
@@ -28,14 +28,7 @@ import org.apache.spark.sql.functions._
 object CcProbe {
   def main(args: Array[String]): Unit = {
     val propCap = args.headOption.map(_.toInt).getOrElse(64)
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("CcProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.{Files, Path}
 
-import org.apache.spark.sql.{DataFrame, Dataset, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, Row}
 import org.apache.spark.sql.functions._
 
 import graft.streaming.{FileTopic, StreamingClusters, StreamingNearDup}
@@ -36,13 +36,7 @@ object ClustersReadBench {
     val readsList = args.headOption.getOrElse("0,1,4")
       .split(',').map(_.trim.toInt).toSeq
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession.builder("ClustersReadBench")
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

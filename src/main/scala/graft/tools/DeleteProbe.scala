@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-side targeted-deletion write-amplification probe (NOT part of
@@ -31,14 +30,7 @@ object DeleteProbe {
   def main(args: Array[String]): Unit = {
     val nRows = args.headOption.map(_.toLong).getOrElse(1000000L)
     val nBuckets = args.lift(1).map(_.toInt).getOrElse(64)
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("DeleteProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val work = Files.createTempDirectory("delete_probe_")

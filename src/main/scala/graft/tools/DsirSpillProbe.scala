@@ -68,14 +68,7 @@ object DsirSpillProbe {
   def main(args: Array[String]): Unit = {
     val passes = args.headOption.map(_.toInt).getOrElse(2)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("DsirSpillProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val shapes = Seq("registry", "mem_disk", "disk_only", "two_pass")

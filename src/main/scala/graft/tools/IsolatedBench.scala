@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-side isolated re-run of a handful of registry queries (NOT part
   * of the driver contract): the full Bench times 145 queries back to
   * back, so a single query's bimodal passes (x32 in BENCH_r13: 1.53 /
@@ -25,16 +23,7 @@ object IsolatedBench {
     val wanted = args.headOption.getOrElse("x32").split(',').map(_.trim).toSeq
     val passes = args.lift(1).map(_.toInt).getOrElse(5)
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .config(graft.core.GraftSession.codegenSettings)
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-      .config("spark.sql.adaptive.skewJoin.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
+    val spark = graft.core.GraftSession.builder("IsolatedBench")
       .config("spark.cleaner.periodicGC.interval", "1min")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")

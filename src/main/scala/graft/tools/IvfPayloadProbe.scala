@@ -1,6 +1,6 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.IvfKit
@@ -50,14 +50,7 @@ object IvfPayloadProbe {
       .split(",").toSeq.map { s =>
         val Array(nl, d) = s.split("x"); (nl.toInt, d.toInt)
       }
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("IvfPayloadProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     def num(v: Double) =

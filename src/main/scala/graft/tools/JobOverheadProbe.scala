@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-side calibration for MANY-SMALL-JOB queries (NOT part of the
   * driver contract). The x32 anchor calibrates DATA-BOUND drift between
   * sessions (one shuffle, wall ∝ rows scanned), but queries like the
@@ -22,12 +20,7 @@ object JobOverheadProbe {
   def main(args: Array[String]): Unit = {
     val jobs = args.headOption.map(_.toInt).getOrElse(12)
     val passes = args.lift(1).map(_.toInt).getOrElse(5)
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("JobOverheadProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     // warm-up: JIT + codegen for the probe shape itself

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.{ConnectedComponents, DimStore}
@@ -47,14 +47,7 @@ object MaintainProbe {
     val distEdges = args.lift(1).map(_.toLong).getOrElse(500000L)
     val drvEdges = args.lift(2).map(_.toLong).getOrElse(150000L)
     val segLen = 32L
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("MaintainProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
 

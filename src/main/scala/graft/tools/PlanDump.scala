@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev-side plan-dump helper (NOT driver contract): writes each named
   * query's `.explain("formatted")` output to `<outDir>/<name>_<tag>.txt`
   * under the bench harness's session config — the judge-facing
@@ -15,14 +13,7 @@ object PlanDump {
     val tag = args(1)
     val names = args(2).split(',').map(_.trim).toSet
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("PlanDump").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val sel = graft.queries.Registry.all.filter(q =>

@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev profiler: re-run named queries under the bench harness's exact
   * conditions (forked JVM, noop sink, warm session) and print per-run
   * timings plus the formatted plan. Not part of the driver contract —
@@ -19,14 +17,7 @@ object Profile {
     val nRuns = positional.lift(1).map(_.toInt).getOrElse(3)
     val names = positional.lift(2).getOrElse("all")
     val explain = flags.contains("+explain")
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("Profile").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val selected =

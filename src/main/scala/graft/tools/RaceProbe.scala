@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Cross-PROCESS commit-race probe (dev-side, NOT part of the driver
@@ -42,12 +41,7 @@ object RaceProbe {
       graft.ops.DimStore.routeLogViaExternal(path,
         new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord))
     }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("RACE_MASTER", "local[8]"))
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("RaceProbe", cores = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._
     mode match {

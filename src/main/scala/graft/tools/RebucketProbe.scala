@@ -2,7 +2,6 @@ package graft.tools
 
 import java.nio.file.{Files, Paths}
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Dev-side rebucket write-amplification probe (NOT part of the driver
@@ -25,14 +24,7 @@ object RebucketProbe {
     val nRows = args.headOption.map(_.toLong).getOrElse(200000L)
     val narrow = args.lift(1).map(_.toInt).getOrElse(8)
     val wide = args.lift(2).map(_.toInt).getOrElse(64)
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = graft.core.GraftSession.builder("RebucketProbe").getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
 
     val work = Files.createTempDirectory("rebucket_probe_")

@@ -2,7 +2,7 @@ package graft.tools
 
 import java.nio.file.Files
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.ops.AnnIndex
@@ -45,14 +45,8 @@ object StagedRebuildProbe {
       case s @ ("FAIR" | "FIFO") => s
       case other => sys.error(s"unknown SPARK_GRAFT_SCHED '$other'")
     }
-    val cpus = graft.core.GraftSession.cpus.toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+    val spark = graft.core.GraftSession.builder("StagedRebuildProbe")
       .config("spark.scheduler.mode", sched)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
       .getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     val work = Files.createTempDirectory("staged_probe_")

@@ -68,7 +68,6 @@ class CharBigramsSpec extends AnyFunSuite with Matchers with SparkFixture {
   test("codegen'd query path agrees with compute and stays in WholeStageCodegen") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftExtensions.install(s)
     val inputs = Seq("", "a", "abcabc", "the quick brown fox 中中é")
     val dir = java.nio.file.Files.createTempDirectory("charbigrams").toString
     inputs.toDF("t").write.mode("overwrite").parquet(dir)

@@ -41,7 +41,6 @@ class CharStatsSpec extends AnyFunSuite with Matchers with SparkFixture {
   test("codegen'd query path agrees with compute and stays in WholeStageCodegen") {
     val s = spark
     import s.implicits._
-    graft.functions.GraftExtensions.install(s)
     val inputs = Seq("", "aaa", "abcabc", "x", "the quick brown fox 中中é")
     // parquet round-trip: a LocalTableScan computes projections eagerly
     // without codegen — a file scan puts char_stats in the generated stage
@@ -62,7 +61,6 @@ class CharStatsSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("char_stats with wrong arity raises an analysis error, not an index error") {
     val s = spark
-    graft.functions.GraftExtensions.install(s)
     an[org.apache.spark.sql.AnalysisException] should be thrownBy
       s.sql("SELECT char_stats('a', 'b')").collect()
   }

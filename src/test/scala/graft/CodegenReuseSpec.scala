@@ -12,7 +12,9 @@ import graft.core.GraftSession
   * ([[GraftSession.codegenSettings]]). Spark's cache of generated
   * classes is JVM-wide and earlier suites leave it in any state, so
   * every assertion is on a compile-count delta taken after the test's
-  * own warm-up run. */
+  * own warm-up run. The last test pins the rest of the one session
+  * definition (`GraftSession.builder`) on the test session and its
+  * children. */
 class CodegenReuseSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   // q03 plans the same generated code with AQE on and off, and a commit
@@ -57,8 +59,17 @@ class CodegenReuseSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("the session and its child sessions report the shipped settings") {
     GraftSession.codegenSettings("spark.sql.artifact.isolation.enabled") shouldBe "false"
+    // the test session is GraftSession.builder at 4 cores
+    val shipped = GraftSession.codegenSettings ++ Map(
+      "spark.sql.session.timeZone" -> "UTC",
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.ui.enabled" -> "false")
     for (s <- Seq(spark, spark.newSession(), ops.DimStore.commitSession(spark, width));
-         (k, v) <- GraftSession.codegenSettings)
-      s.conf.get(k) shouldBe v
+         (k, v) <- shipped)
+      withClue(s"$k: ") { s.conf.get(k) shouldBe v }
+    spark.sparkContext.uiWebUrl shouldBe None
+    // and its GraftExtensions: w05's row_number top-k plans as TopKPerKey
+    queries.Registry.byName("w05_uv_dedup").run(spark, sf0001)
+      .queryExecution.executedPlan.toString should include("TopKPerKeyFinal")
   }
 }

@@ -4,7 +4,6 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.functions.GraftExtensions
 import graft.ops.{MediaIn, Multimodal, MultimodalTransforms}
 
 /** Multimodal binary-column pipeline: decode-stub metadata, resize,
@@ -35,7 +34,6 @@ class MultimodalSpec extends AnyFunSuite with Matchers with SparkFixture {
   test("embed: unit-norm, content-determined; duplicate media is cosine top-1") {
     val s = spark
     import s.implicits._
-    GraftExtensions.install(s)
     // doc 3 is a byte-for-byte duplicate of doc 1; doc 2 differs
     val in = Seq(media(1, 7, 2000), media(2, 13, 2000),
       MediaIn(3, media(1, 7, 2000).media)).toDS()

@@ -1,23 +1,14 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
-
-import graft.functions.GraftExtensions
 
 /** The native ngrams table function (Catalyst Generator — the UDTF
   * extension tier): streamed fan-out equivalence with the
   * explode(zip_with...) built-in formulation, edge cases, and LATERAL
   * VIEW / SQL usability. */
-class NGramsGeneratorSpec extends AnyFunSuite with Matchers {
-
-  private lazy val spark: SparkSession = {
-    val s = SharedSpark.spark
-    GraftExtensions.install(s)
-    s
-  }
+class NGramsGeneratorSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("ngrams(toks, 3) equals the zip_with trigram formulation on the fixture") {
     val s = spark

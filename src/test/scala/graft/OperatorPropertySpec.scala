@@ -127,39 +127,23 @@ class OperatorPropertySpec extends AnyFunSuite with Matchers with SparkFixture {
     } yield (k, v, p))
   } yield rows
 
-  private def withTopKRewrite[A](body: => A): A = {
-    val s = spark
-    val prevOpt = s.experimental.extraOptimizations
-    val prevStrat = s.experimental.extraStrategies
-    if (!prevOpt.contains(graft.plans.RowNumberTopKRewrite))
-      s.experimental.extraOptimizations = prevOpt :+ graft.plans.RowNumberTopKRewrite
-    if (!prevStrat.contains(graft.plans.TopKPerKeyStrategy))
-      s.experimental.extraStrategies = prevStrat :+ graft.plans.TopKPerKeyStrategy
-    try body finally {
-      s.experimental.extraOptimizations = prevOpt
-      s.experimental.extraStrategies = prevStrat
-    }
-  }
-
   test("rank() = 1 rewrites to TopKPerKey(withTies) and keeps ALL tied best rows") {
     val s = spark
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    withTopKRewrite {
-      forAllSampled(genKV) { rows =>
-        val df = rows.toDF("k", "v", "p")
-        val w = Window.partitionBy($"k").orderBy($"v".desc, $"p")
-        val idiom = df.withColumn("r", rank().over(w))
-          .filter($"r" === 1).select($"k", $"v", $"p")
-        idiom.queryExecution.executedPlan.toString should include("TopKPerKeyFinal")
-        val got = idiom.as[(Long, Long, String)].collect().sorted
-        // ground truth computed directly: every row tying the per-key best
-        val best = rows.groupBy(_._1).view.mapValues(g =>
-          g.map(r => (r._2, r._3)).min(Ordering.Tuple2(Ordering[Long].reverse, Ordering[String])))
-        val expected = rows.filter(r => best(r._1) == ((r._2, r._3))).sorted
-        got.toList shouldBe expected
-      }
+    forAllSampled(genKV) { rows =>
+      val df = rows.toDF("k", "v", "p")
+      val w = Window.partitionBy($"k").orderBy($"v".desc, $"p")
+      val idiom = df.withColumn("r", rank().over(w))
+        .filter($"r" === 1).select($"k", $"v", $"p")
+      idiom.queryExecution.executedPlan.toString should include("TopKPerKeyFinal")
+      val got = idiom.as[(Long, Long, String)].collect().sorted
+      // ground truth computed directly: every row tying the per-key best
+      val best = rows.groupBy(_._1).view.mapValues(g =>
+        g.map(r => (r._2, r._3)).min(Ordering.Tuple2(Ordering[Long].reverse, Ordering[String])))
+      val expected = rows.filter(r => best(r._1) == ((r._2, r._3))).sorted
+      got.toList shouldBe expected
     }
   }
 
@@ -168,13 +152,11 @@ class OperatorPropertySpec extends AnyFunSuite with Matchers with SparkFixture {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    withTopKRewrite {
-      val df = (1 to 100).map(i => (i % 5L, i % 7L, "x")).toDF("k", "v", "p")
-      val w = Window.partitionBy($"k").orderBy($"v".desc)
-      val q = df.withColumn("r", rank().over(w))
-        .filter($"r" <= 2).select($"k", $"v")
-      q.queryExecution.executedPlan.toString.contains("TopKPerKey") shouldBe false
-    }
+    val df = (1 to 100).map(i => (i % 5L, i % 7L, "x")).toDF("k", "v", "p")
+    val w = Window.partitionBy($"k").orderBy($"v".desc)
+    val q = df.withColumn("r", rank().over(w))
+      .filter($"r" <= 2).select($"k", $"v")
+    q.queryExecution.executedPlan.toString.contains("TopKPerKey") shouldBe false
   }
 
   test("subquery shape Filter-above-Project rewrites and matches the window form") {
@@ -182,25 +164,23 @@ class OperatorPropertySpec extends AnyFunSuite with Matchers with SparkFixture {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    withTopKRewrite {
-      forAllSampled(genKV) { rows =>
-        val df = rows.toDF("k", "v", "p")
-        df.createOrReplaceTempView("topk_subq")
-        // SQL plans as Project(drop rn) <- Filter <- Project(incl rn) <- Window
-        val idiom = s.sql("""
-          SELECT k, v, p FROM (
-            SELECT k, v, p,
-              row_number() OVER (PARTITION BY k ORDER BY v DESC, p) AS rn
-            FROM topk_subq) t
-          WHERE rn <= 2""")
-        idiom.queryExecution.executedPlan.toString should include("TopKPerKeyFinal")
-        val got = idiom.as[(Long, Long, String)].collect().sorted
-        val w = Window.partitionBy($"k").orderBy($"v".desc, $"p")
-        val expected = df.withColumn("rn", row_number().over(w))
-          .filter($"rn" <= 2).select($"k", $"v", $"p")
-          .as[(Long, Long, String)].collect().sorted
-        got shouldBe expected
-      }
+    forAllSampled(genKV) { rows =>
+      val df = rows.toDF("k", "v", "p")
+      df.createOrReplaceTempView("topk_subq")
+      // SQL plans as Project(drop rn) <- Filter <- Project(incl rn) <- Window
+      val idiom = s.sql("""
+        SELECT k, v, p FROM (
+          SELECT k, v, p,
+            row_number() OVER (PARTITION BY k ORDER BY v DESC, p) AS rn
+          FROM topk_subq) t
+        WHERE rn <= 2""")
+      idiom.queryExecution.executedPlan.toString should include("TopKPerKeyFinal")
+      val got = idiom.as[(Long, Long, String)].collect().sorted
+      val w = Window.partitionBy($"k").orderBy($"v".desc, $"p")
+      val expected = windowReference(df.withColumn("rn", row_number().over(w))
+        .filter($"rn" <= 2).select($"k", $"v", $"p")
+        .as[(Long, Long, String)]).sorted
+      got shouldBe expected
     }
   }
 }

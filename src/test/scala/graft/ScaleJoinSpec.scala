@@ -116,9 +116,9 @@ class ScaleJoinSpec extends AnyFunSuite with Matchers with SparkFixture {
       .select($"o_custkey", $"o_orderkey").as[(Long, Long)].collect().sorted
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_totalprice".desc, $"o_orderkey")
-    val window = orders.withColumn("rn", row_number().over(w))
+    val window = windowReference(orders.withColumn("rn", row_number().over(w))
       .filter($"rn" <= 3)
-      .select($"o_custkey", $"o_orderkey").as[(Long, Long)].collect().sorted
+      .select($"o_custkey", $"o_orderkey").as[(Long, Long)]).sorted
     heap shouldBe window
   }
 
@@ -138,9 +138,9 @@ class ScaleJoinSpec extends AnyFunSuite with Matchers with SparkFixture {
       .as[(Long, Long)].collect().sorted
     val w = Window.partitionBy($"o_custkey")
       .orderBy($"o_totalprice".desc, $"o_orderkey")
-    val expected = orders.withColumn("rn", row_number().over(w))
+    val expected = windowReference(orders.withColumn("rn", row_number().over(w))
       .filter($"rn" <= 3)
-      .select($"o_custkey", $"o_orderkey").as[(Long, Long)].collect().sorted
+      .select($"o_custkey", $"o_orderkey").as[(Long, Long)]).sorted
     got shouldBe expected
   }
 
@@ -149,34 +149,26 @@ class ScaleJoinSpec extends AnyFunSuite with Matchers with SparkFixture {
     import s.implicits._
     import org.apache.spark.sql.expressions.Window
     import org.apache.spark.sql.functions._
-    val prev = s.experimental.extraOptimizations
-    try {
-      if (!prev.contains(graft.plans.RowNumberTopKRewrite))
-        s.experimental.extraOptimizations = prev :+ graft.plans.RowNumberTopKRewrite
-      if (!s.experimental.extraStrategies.contains(graft.plans.TopKPerKeyStrategy))
-        s.experimental.extraStrategies =
-          s.experimental.extraStrategies :+ graft.plans.TopKPerKeyStrategy
-      val orders = graft.core.Tables.load(s, sf0001, "orders")
-      val w = Window.partitionBy($"o_custkey")
-        .orderBy($"o_totalprice".desc, $"o_orderkey")
-      // the user writes the window idiom and DROPS rn — rewrite fires
-      val idiom = orders.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"o_custkey", $"o_orderkey")
-      val plan = idiom.queryExecution.executedPlan.toString
-      plan should include("TopKPerKeyFinal")
-      plan.contains("WindowExec") shouldBe false
-      // keeping rn in the output must NOT rewrite (operator can't emit it)
-      val keepsRn = orders.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3)
-        .select($"o_custkey", $"rn")
-      keepsRn.queryExecution.executedPlan.toString.contains("TopKPerKey") shouldBe false
-      // and results match the unrewritten form
-      val expected = orders.withColumn("rn", row_number().over(w))
-        .filter($"rn" <= 3).select($"o_custkey", $"o_orderkey")
-        .as[(Long, Long)].collect().sorted
-      idiom.as[(Long, Long)].collect().sorted shouldBe expected
-    } finally s.experimental.extraOptimizations = prev
+    val orders = graft.core.Tables.load(s, sf0001, "orders")
+    val w = Window.partitionBy($"o_custkey")
+      .orderBy($"o_totalprice".desc, $"o_orderkey")
+    // the user writes the window idiom and DROPS rn — rewrite fires
+    val idiom = orders.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3)
+      .select($"o_custkey", $"o_orderkey")
+    val plan = idiom.queryExecution.executedPlan.toString
+    plan should include("TopKPerKeyFinal")
+    plan.contains("WindowExec") shouldBe false
+    // keeping rn in the output must NOT rewrite (operator can't emit it)
+    val keepsRn = orders.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3)
+      .select($"o_custkey", $"rn")
+    keepsRn.queryExecution.executedPlan.toString.contains("TopKPerKey") shouldBe false
+    // and results match the unrewritten form
+    val expected = windowReference(orders.withColumn("rn", row_number().over(w))
+      .filter($"rn" <= 3).select($"o_custkey", $"o_orderkey")
+      .as[(Long, Long)]).sorted
+    idiom.as[(Long, Long)].collect().sorted shouldBe expected
   }
 
   test("TopK.perKey map-side pruning bounds the shuffled rows") {
@@ -219,9 +211,9 @@ class ScaleJoinSpec extends AnyFunSuite with Matchers with SparkFixture {
       val got = TopK.perKeyPlanned(df, Seq("k"), Seq(("v", false)), k = 2)
         .as[(Long, Long)].collect().sorted
       val w = Window.partitionBy($"k").orderBy($"v".desc)
-      val expected = df.withColumn("rn", row_number().over(w))
+      val expected = windowReference(df.withColumn("rn", row_number().over(w))
         .filter($"rn" <= 2).select($"k", $"v")
-        .as[(Long, Long)].collect().sorted
+        .as[(Long, Long)]).sorted
       got shouldBe expected
     } finally {
       s.conf.unset(key)

@@ -1,26 +1,13 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.functions.GraftExtensions
-
 /** The native vec_cosine expression: correctness vs the built-in
   * formulation, null handling, and SQL registration via
-  * SparkSessionExtensions. Uses its own session (extensions are a
-  * session-construction-time hook). */
-class VecCosineSpec extends AnyFunSuite with Matchers {
-
-  // getOrCreate would silently ignore withExtensions once another spec
-  // created the JVM's session, so register into the shared session via
-  // the same registry write injectFunction performs.
-  private lazy val spark: SparkSession = {
-    val s = SharedSpark.spark
-    GraftExtensions.install(s)
-    s
-  }
+  * SparkSessionExtensions (the shared session is built with them). */
+class VecCosineSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   test("vec_cosine matches the built-in zip_with/aggregate formulation bit-for-bit") {
     val s = spark
