@@ -34,29 +34,28 @@ object Bench {
     // Warm-up: JIT, parquet footer cache, codegen compilation. One light
     // pass over everything keeps the timed pass comparable run-to-run.
     // Caches clear per query here too — the same memory conditions the
-    // timed pass runs under.
-    val (c0, cms0) = (core.GraftSession.compiles, core.GraftSession.compileMs)
-    qs.foreach { q =>
-      try runOnce(q.run) catch { case e: Throwable => recordFailure(q, "warm-up", e) }
-      queries.Extensions.clearPersistedIntermediates()
+    // timed pass runs under. Its compiles are the distinct generated
+    // classes one full pass needs, the working set GraftSession sizes
+    // its cache to.
+    val (_, warmup) = core.RunCounters.window(spark) {
+      qs.foreach { q =>
+        try runOnce(q.run) catch { case e: Throwable => recordFailure(q, "warm-up", e) }
+        queries.Extensions.clearPersistedIntermediates()
+      }
     }
-    // Janino compiles of the warm-up pass: the distinct generated classes
-    // one full pass needs, the working set GraftSession sizes its cache to.
-    val warmupCompiles = core.GraftSession.compiles - c0
-    val warmupCompileMs = core.GraftSession.compileMs - cms0
-    // compiles and their ms inside each query's timed runs, all passes
-    val compiled = scala.collection.mutable.Map.empty[String, (Long, Double)]
-      .withDefaultValue((0L, 0.0))
+    // what each timed run cost (jobs, tasks, shuffle and spill bytes,
+    // planning ms, compiles), per query, in run order
+    val costs = scala.collection.mutable.Map.empty[String, Vector[core.Counters]]
+      .withDefaultValue(Vector.empty)
     var sinceGc = 0
     def timeOne(q: queries.Q): Double = {
-      val (c, cms) = (core.GraftSession.compiles, core.GraftSession.compileMs)
-      val t0 = System.nanoTime()
-      val ok = try { runOnce(q.run); true }
-        catch { case e: Throwable => recordFailure(q, "timed", e); false }
-      val dt = (System.nanoTime() - t0) / 1e9
-      val (n, ms) = compiled(q.name)
-      compiled(q.name) = (n + core.GraftSession.compiles - c,
-        ms + core.GraftSession.compileMs - cms)
+      val ((ok, dt), c) = core.RunCounters.window(spark) {
+        val t0 = System.nanoTime()
+        val ok = try { runOnce(q.run); true }
+          catch { case e: Throwable => recordFailure(q, "timed", e); false }
+        (ok, (System.nanoTime() - t0) / 1e9)
+      }
+      costs(q.name) = costs(q.name) :+ c.copy(plans = Nil)
       // Release this query's cached intermediates BEFORE the next timed
       // query: leaving all 80+ queries' persisted blocks resident made
       // the unified memory manager squeeze execution memory for
@@ -103,9 +102,12 @@ object Bench {
     val samples: Seq[(String, Seq[Double])] = p1.zip(p2).map {
       case ((n, d1), (_, d2)) => n -> (Seq(d1, d2) ++ p3.get(n))
     }
+    // the reported wall is the fastest clean run, and the row's counters
+    // are that run's; a query with no clean run reports its last run's
     val results = samples.map { case (n, ss) =>
-      val ok = ss.filter(_ >= 0)
-      n -> (if (ok.isEmpty) -1.0 else ok.min)
+      val ok = ss.zipWithIndex.filter(_._1 >= 0)
+      if (ok.isEmpty) (n, -1.0, costs(n).last)
+      else { val (v, i) = ok.minBy(_._1); (n, v, costs(n)(i)) }
     }
     // Locale.ROOT: the default-locale f-interpolator would print a
     // comma decimal separator on e.g. de_DE JVMs and break json.load
@@ -120,7 +122,7 @@ object Bench {
     def shortKey(name: String): String = name.split('_').head
     require(results.map(r => shortKey(r._1)).distinct.size == results.size,
       "short bench keys must stay unique")
-    val qj = results.map { case (k, v) => "\"" + shortKey(k) + "\":" + num(v) }
+    val qj = results.map { case (k, v, _) => "\"" + shortKey(k) + "\":" + num(v) }
       .mkString("{", ",", "}")
     val total = results.map(_._2).filter(_ >= 0).sum
     val failed = results.filter(_._2 < 0).map(_._1)
@@ -161,22 +163,19 @@ object Bench {
     // (whose parse has shipped as null since r10), so round-over-round
     // diffs read THIS file instead of re-parsing strings. Full query
     // names here (no tail-window budget), same `wall` as the line, plus
-    // the compiles of each query's timed runs (0 once the codegen cache
-    // holds the working set).
+    // the counters of the run that `wall` reports (RunCounters).
     val qjFull = results
-      .map { case (k, v) =>
-        val (n, ms) = compiled(k)
+      .map { case (k, v, c) =>
         val error = if (v < 0) ",\"error\":" + Verify.jsonString(errors(k)) else ""
-        "\"" + k + "\":{\"wall\":" + num(v) + ",\"compiles\":" + n +
-          ",\"compile_ms\":" + num(ms) + error + "}"
+        "\"" + k + "\":{\"wall\":" + num(v) + "," + c.json + error + "}"
       }
       .mkString("{", ",", "}")
     val failedFull = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
     try java.nio.file.Files.writeString(
       java.nio.file.Paths.get("BENCH_LAST.json"),
       s"""{"metric":"total","value":${num(total)},"unit":"sec","headline":${
-        num(headline)},"failed":$failedFull,"warmup":{"compiles":$warmupCompiles,"compile_ms":${
-        num(warmupCompileMs)}},"queries":$qjFull,"sf":"$sfDir"}""" + "\n")
+        num(headline)},"failed":$failedFull,"warmup":{"compiles":${warmup.compiles},"compile_ms":${
+        num(warmup.compileMs)}},"queries":$qjFull,"sf":"$sfDir"}""" + "\n")
     catch { case _: java.io.IOException => () } // diagnostics only
     println(s"""{"metric":"total","value":${num(total)},"unit":"sec","headline":${num(headline)},"failed":$failedJson,"spread":$spreadJson,"queries":$qj,"sf":"$sfDir"}""")
     spark.stop()

@@ -47,13 +47,15 @@ import graft.streaming.{BounceDetector, DedupDaily, FileTopic, Jobs, PageLog, So
   *
   * Reported per topology: wall seconds to drain the topic,
   * events/sec, and per-micro-batch latency (p50/max of
-  * `triggerExecution` from query progress), and the Janino compiles
-  * (with their ms) inside each pass's window — pass 1 is cold, pass 2
-  * compiles ~0 once the codegen cache holds the topology's classes
-  * ([[core.GraftSession.codegenSettings]]). Two passes, min per
-  * topology (same stall-burst rationale as [[Bench]]); divergent
-  * topologies land in `spread`; full per-pass detail goes to
-  * `target/stream_bench_passes.json`. Prints ONE JSON line.
+  * `triggerExecution` from query progress), and the counters of each
+  * pass's window ([[core.RunCounters]]: jobs, tasks, CPU, shuffle and
+  * spill bytes, planning ms, Janino compiles and their ms) — pass 1 is
+  * cold, pass 2 compiles ~0 once the codegen cache holds the
+  * topology's classes ([[core.GraftSession.codegenSettings]]). Two
+  * passes, min per topology (same stall-burst rationale as
+  * [[Bench]]); divergent topologies land in `spread`; full per-pass
+  * detail goes to `target/stream_bench_passes.json`. Prints ONE JSON
+  * line.
   *
   * The `calibration` field is a fixed pure-CPU reference topology
   * (parse-only over the same topic) run first in each pass and kept
@@ -76,7 +78,7 @@ object StreamBench {
 
   private final case class BatchStat(rows: Long, ms: Long)
   private final case class TopoResult(sec: Double, batches: Seq[BatchStat],
-                                      compiles: Long, compileMs: Double)
+                                      cost: core.Counters)
 
   /** The media leg's blob corpus: THREE deterministic byte-template
     * families (disjoint alphabets → disjoint dominant trigram bins),
@@ -126,11 +128,8 @@ object StreamBench {
     * events fixture onto the page-log grain — mid from user_id (5k
     * devices), ~1/3 session entries, a sprinkle of err/start records,
     * display arrays on ~1/11 pages, and ~1% corrupt lines so the dirty
-    * diversion does real work. Columns (ts, line). Shared with the
-    * dev-side read-heavy clusters probe so its numbers are
-    * load-comparable with this bench's `clusters` leg. */
-  private[graft] def pageLogLines(spark: SparkSession,
-                                  sfDir: String): DataFrame =
+    * diversion does real work. Columns (ts, line). */
+  private def pageLogLines(spark: SparkSession, sfDir: String): DataFrame =
     core.Tables.load(spark, sfDir, "events")
       .select(col("event_id"), unix_millis(col("ts")).as("ts"),
         concat(lit("m"), pmod(col("user_id"), lit(5000))).as("mid"),
@@ -266,16 +265,18 @@ object StreamBench {
         val dir = work.resolve(key)
         Files.createDirectories(dir)
         val raw = FileTopic.stream(spark, topic, maxFilesPerTrigger = Some(2))
-        val (c0, cms0) = (core.GraftSession.compiles, core.GraftSession.compileMs)
-        val t0 = System.nanoTime()
-        val q = start(raw, dir)
-        try q.processAllAvailable() finally q.stop()
-        andThen(dir) // post-stream consultation, inside the timed window
-        val dt = (System.nanoTime() - t0) / 1e9
+        // one collector window per topology pass: the whole drain,
+        // every micro-batch session included
+        val (dt, cost) = core.RunCounters.window(spark) {
+          val t0 = System.nanoTime()
+          val q = start(raw, dir)
+          try q.processAllAvailable() finally q.stop()
+          andThen(dir) // post-stream consultation, inside the timed window
+          (System.nanoTime() - t0) / 1e9
+        }
         val b = stats.synchronized(stats.getOrElse(key, Seq.empty).toList)
         deleteTree(dir) // state/checkpoint/sinks are per-pass scratch
-        TopoResult(dt, b, core.GraftSession.compiles - c0,
-          core.GraftSession.compileMs - cms0)
+        TopoResult(dt, b, cost.copy(plans = Nil))
       }
 
       def runPass(pass: Int): Map[String, TopoResult] = Map(
@@ -452,30 +453,30 @@ object StreamBench {
         val dir = work.resolve(key)
         Files.createDirectories(dir.resolve("survivors"))
         val raw = FileTopic.stream(spark, topic, maxFilesPerTrigger = Some(2))
-        val (c0, cms0) = (core.GraftSession.compiles, core.GraftSession.compileMs)
-        val t0 = System.nanoTime()
-        val q1 = graft.streaming.StreamingFunnel.startGateStage(
-          funnelDocs(raw), funnelRatio, dir.toString,
-          langs = Seq("en"), minToks = funnelMinToks,
-          watermark = "1 hour", minScorePpm = funnelMinScore,
-          checkpoint = s"$dir/chk1", queryName = Some(key))
-        val q2 = graft.streaming.StreamingFunnel.startNeardupStage(
-          spark, dir.toString, s"$dir/chk2",
-          queryName = Some(s"${key}_nd"),
-          ttl = ttl, watermarkDelay = "30 days")
-        try q1.processAllAvailable() finally q1.stop()
-        try q2.processAllAvailable() finally q2.stop()
-        val sc = graft.streaming.StreamingFunnel
-          .stageCounts(spark, dir.toString)
-        witness.set(s"""{"raw":$nEvents,"gated":${sc.gated},"neardup_kept":${
-          sc.neardupKept},"dsir_accepted":${sc.dsirAccepted}}""")
-        val dt = (System.nanoTime() - t0) / 1e9
+        val (dt, cost) = core.RunCounters.window(spark) {
+          val t0 = System.nanoTime()
+          val q1 = graft.streaming.StreamingFunnel.startGateStage(
+            funnelDocs(raw), funnelRatio, dir.toString,
+            langs = Seq("en"), minToks = funnelMinToks,
+            watermark = "1 hour", minScorePpm = funnelMinScore,
+            checkpoint = s"$dir/chk1", queryName = Some(key))
+          val q2 = graft.streaming.StreamingFunnel.startNeardupStage(
+            spark, dir.toString, s"$dir/chk2",
+            queryName = Some(s"${key}_nd"),
+            ttl = ttl, watermarkDelay = "30 days")
+          try q1.processAllAvailable() finally q1.stop()
+          try q2.processAllAvailable() finally q2.stop()
+          val sc = graft.streaming.StreamingFunnel
+            .stageCounts(spark, dir.toString)
+          witness.set(s"""{"raw":$nEvents,"gated":${sc.gated},"neardup_kept":${
+            sc.neardupKept},"dsir_accepted":${sc.dsirAccepted}}""")
+          (System.nanoTime() - t0) / 1e9
+        }
         val b = stats.synchronized(
           (stats.getOrElse(key, Seq.empty) ++
             stats.getOrElse(s"${key}_nd", Seq.empty)).toList)
         deleteTree(dir)
-        TopoResult(dt, b, core.GraftSession.compiles - c0,
-          core.GraftSession.compileMs - cms0)
+        TopoResult(dt, b, cost.copy(plans = Nil))
       }
 
       val p1 = runPass(1)
@@ -489,11 +490,12 @@ object StreamBench {
       def topoJson(name: String): String = {
         val best = if (p1(name).sec <= p2(name).sec) p1(name) else p2(name)
         val ms = best.batches.map(_.ms)
+        // each counter as [pass1, pass2]
+        val cost = p1(name).cost.fields.zip(p2(name).cost.fields)
+          .map { case ((k, v1), (_, v2)) => s""","$k":[$v1,$v2]""" }.mkString
         s""""$name":{"sec":${num(best.sec)},"events_per_sec":${
           num(nEvents / best.sec)},"batches":${best.batches.size},"batch_ms_p50":${
-          p50(ms)},"batch_ms_max":${ms.foldLeft(0L)(math.max)},"compiles":[${
-          p1(name).compiles},${p2(name).compiles}],"compile_ms":[${
-          num(p1(name).compileMs)},${num(p2(name).compileMs)}]}"""
+          p50(ms)},"batch_ms_max":${ms.foldLeft(0L)(math.max)}$cost}"""
       }
       val names =
         Seq("split", "split_atomic", "uv_dim", "bounce", "clusters", "media",
@@ -507,8 +509,8 @@ object StreamBench {
       }.mkString("{", ",", "}")
       val total = names.map(n => math.min(p1(n).sec, p2(n).sec)).sum
       def passJson(p: Map[String, TopoResult]): String =
-        allNames.map(n => s""""$n":{"sec":${num(p(n).sec)},"compiles":${
-          p(n).compiles},"compile_ms":${num(p(n).compileMs)},"batches":[${
+        allNames.map(n => s""""$n":{"sec":${num(p(n).sec)},${
+          p(n).cost.json},"batches":[${
           p(n).batches.map(b => s"[${b.rows},${b.ms}]").mkString(",")}]}""")
           .mkString("{", ",", "}")
       try Files.writeString(java.nio.file.Paths.get("target/stream_bench_passes.json"),

@@ -5,10 +5,11 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
 
 /** The one definition of a graft session. Every entry point (`Bench`,
-  * `StreamBench`, `Verify`, the `tools/` mains, the benchmark under
-  * `perfbench/`) and the test session build from [[builder]] and add
-  * only their own extras, so gates, tests and benchmarks run the
-  * session that ships:
+  * `StreamBench`, `Verify`, the benchmark under `perfbench/`) and the
+  * test session build from [[builder]] and add only their own extras,
+  * so gates, tests and benchmarks run the session that ships. It
+  * attaches no listener: a harness that reads counters attaches
+  * [[RunCounters]] around its own run. What it sets:
   *
   *   - `cores` (default [[cpus]]) sets both `local[cores]` and
   *     `spark.sql.shuffle.partitions`; on a real cluster the partition
@@ -40,8 +41,10 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodeGenerator
   * session; they run on whatever session the caller hands them, and a
   * plain `SparkSession` without the extensions must give the same rows.
   * Queries therefore plant native expressions into the logical plan
-  * rather than call them by SQL name, and register the strategy
-  * themselves where they need it (`TopK.perKeyPlanned`).
+  * rather than call them by SQL name, and where they ask for a graft
+  * plan node on a session without the strategy they take the library
+  * route with the same rows (`TopK.perKeyPlanned` falls back to
+  * `TopK.perKey`) instead of installing the strategy on it.
   */
 object GraftSession {
 

@@ -44,7 +44,8 @@ import org.apache.spark.sql.types._
   * index shape (4096 lists × 1024 dims) the boxed payload serialized
   * to 56 MB costing ~2.3 s to write and ~1.0 s to read PER STAGE,
   * with `semanticEquals` walking 4M boxed doubles per candidate pair
-  * (IvfPayloadProbe, SCALEPROBE round 17). The broadcast form ships a
+  * (SCALEPROBE.md "IVF/PQ kernel payload: baked literal → Broadcast
+  * handle (round 17)"). The broadcast form ships a
   * flat PRIMITIVE payload ONCE per query (TorrentBroadcast: executors
   * fetch once and cache, every later stage reuses it), the plan
   * carries an O(1) handle, and canonicalization/equality are O(1)

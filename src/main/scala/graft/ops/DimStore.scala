@@ -160,8 +160,9 @@ object DimStore {
   // small-commit planning session. AQE executes every action stage by
   // stage — one Spark job per exchange materialization — so a
   // fixture-scale commit pays 2-3 jobs (each ~50 ms scheduling floor
-  // plus 40-130 ms of per-action planning, measured via QueryJobProbe
-  // on w17: ~6 jobs / ~0.55 s per apply) for plans AQE cannot improve:
+  // plus 40-130 ms of per-action planning, measured per job on w17:
+  // ~6 jobs / ~0.55 s per apply; OPTIMIZATION_r21.md, store-commit
+  // machinery) for plans AQE cannot improve:
   // the generation write's partitioning is an explicit repartition AQE
   // never rewrites, and the commit probes are bounded-cardinality
   // aggregations over the bucket fan-out. Running those actions on a
@@ -1611,8 +1612,9 @@ object DimStore {
 
   /** Auto-maintenance policy: measure the table from its manifest —
     * O(buckets) metadata, no data read — then recommend-or-run the
-    * maintenance commit the measurements call for (the RebucketProbe
-    * math productized):
+    * maintenance commit the measurements call for (the rebucket
+    * write-amplification math of SCALEPROBE.md "Rebucket write
+    * amplification (round 11)", productized):
     *
     *  - REBUCKET when the per-bucket byte load has drifted ≥2× from
     *    `targetBucketBytes` in either direction: a table grown past

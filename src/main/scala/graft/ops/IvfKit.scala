@@ -53,8 +53,9 @@ private[graft] object IvfKit {
     * assign/ranked/residual over the same model share one payload, so
     * a query plan carries O(1) handles instead of re-shipping the
     * nLists×dim doubles inside every stage's task binary — the round-
-    * 17 payload fix (IvfPayloadProbe measured the baked form at
-    * ~3.3 s ser+deser PER STAGE at 4096 lists × 1024 dims). A cache
+    * 17 payload fix (the baked form measured ~3.3 s ser+deser PER
+    * STAGE at 4096 lists × 1024 dims; SCALEPROBE.md "IVF/PQ kernel
+    * payload: baked literal → Broadcast handle (round 17)"). A cache
     * miss (fresh set, or the entry's context was stopped — tests
     * recycle sessions) pays one driver-side flatten + broadcast
     * write; executors fetch once and reuse across stages. Weak keys:

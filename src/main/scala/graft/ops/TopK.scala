@@ -74,27 +74,28 @@ object TopK {
 
   /** The same operator as a first-class plan node
     * (graft.plans.TopKPerKey → partial/final TopKPerKeyExec), planned
-    * by Catalyst via an injected strategy. Registers the strategy in
-    * the session's `experimental.extraStrategies` (the public hook) on
-    * first use, so a plain session plans it too; every
-    * `GraftSession.builder` session already has it from
-    * `GraftExtensions`. Prefer this form where the planner must see
-    * the operator (e.g. under further rule rewrites); `perKey` where a
-    * library-level transform suffices. */
+    * by Catalyst via the strategy `GraftExtensions` injects into every
+    * `GraftSession.builder` session. On a session whose planner lacks
+    * that strategy (a plain session) this is [[perKey]] over the same
+    * frame — the same rows — and the session is left as it was. Prefer
+    * this form where the planner must see the operator (e.g. under
+    * further rule rewrites); `perKey` where a library-level transform
+    * suffices. */
   def perKeyPlanned(df: DataFrame, keyCols: Seq[String],
                     order: Seq[(String, Boolean)], k: Int): DataFrame = {
     import org.apache.spark.sql.catalyst.expressions.{Ascending, Descending, SortOrder}
     import graft.plans.{TopKPerKey, TopKPerKeyStrategy}
     val spark = df.sparkSession
-    if (!spark.experimental.extraStrategies.contains(TopKPerKeyStrategy))
-      spark.experimental.extraStrategies =
-        spark.experimental.extraStrategies :+ TopKPerKeyStrategy
-    val analyzed = df.queryExecution.analyzed
-    def attr(name: String) = analyzed.output.find(_.name == name).getOrElse(
-      throw new IllegalArgumentException(s"column $name not in ${analyzed.output.map(_.name)}"))
-    val sortOrder = order.map { case (c, asc) =>
-      SortOrder(attr(c), if (asc) Ascending else Descending) }
-    org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
-      TopKPerKey(k, keyCols.map(attr), sortOrder, analyzed))
+    if (!spark.sessionState.planner.strategies.contains(TopKPerKeyStrategy))
+      perKey(df, keyCols, order, k)
+    else {
+      val analyzed = df.queryExecution.analyzed
+      def attr(name: String) = analyzed.output.find(_.name == name).getOrElse(
+        throw new IllegalArgumentException(s"column $name not in ${analyzed.output.map(_.name)}"))
+      val sortOrder = order.map { case (c, asc) =>
+        SortOrder(attr(c), if (asc) Ascending else Descending) }
+      org.apache.spark.sql.GraftPlanBridge.ofRows(spark,
+        TopKPerKey(k, keyCols.map(attr), sortOrder, analyzed))
+    }
   }
 }

@@ -84,8 +84,18 @@ object Extensions extends ExtensionsDedup with ExtensionsAnn
     persistCaches.clear()
   }
 
-  private[queries] lazy val corpusCounts =
-    new java.util.concurrent.ConcurrentHashMap[(Int, String), java.lang.Long]()
+  /** Rows of the `documents` corpus under `dir`, counted once per
+    * session and dir (a cached, metadata-only count). Sessions key a
+    * WeakHashMap, as in [[persistCaches]]: two sessions never share an
+    * entry, and a collected session's counts go with it. */
+  private lazy val corpusCounts =
+    new java.util.WeakHashMap[SparkSession,
+      java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]]()
+  private[queries] def corpusCount(s: SparkSession, dir: String): Long =
+    corpusCounts.synchronized(corpusCounts.computeIfAbsent(s,
+      _ => new java.util.concurrent.ConcurrentHashMap[String, java.lang.Long]()))
+      .computeIfAbsent(dir, _ => java.lang.Long.valueOf(docs(s, dir).count()))
+      .longValue
 
   /** Capacity that provably keeps a QuantileSketch in its EXACT regime
     * for this dataset: compaction first fires past `capacity` values,
@@ -102,19 +112,12 @@ object Extensions extends ExtensionsDedup with ExtensionsAnn
     * a corpus too large to hold exactly fails loudly here rather
     * than silently approximating against an exact-rank oracle. */
   private[queries] def exactSketchCapacity(s: SparkSession, dir: String): Int = {
-    val n = corpusCounts.computeIfAbsent(
-      (System.identityHashCode(s), dir),
-      _ => java.lang.Long.valueOf(docs(s, dir).count()))
+    val n = corpusCount(s, dir)
     require(n <= (1L << 24),
       s"exact-regime sketch requested for $n rows; " +
       "switch the query to the approximate regime and an error-banded oracle")
-    math.max(1024L, n.longValue).toInt
+    math.max(1024L, n).toInt
   }
-
-  /** Dev-probe access to the shared pair table (tools.LifecycleProbe) —
-    * not part of the query API. */
-  def neardupPairsProbe(s: SparkSession, dir: String): DataFrame =
-    neardupPairs(s, dir)
 
   def queries: Seq[Q] = Seq(
     x01, x02, x03, x04, x05, x06, x07, x08, x09, x10, x11, x12, x13, x14,

@@ -201,9 +201,7 @@ private[queries] trait ExtensionsSketches { this: Extensions.type =>
           regexp_replace($"text", "[^\\x00-\\x7F]", "?")
             .cast("binary").as("media"))
         .as[graft.ops.MediaIn]
-      val nDocs = corpusCounts.computeIfAbsent(
-        (System.identityHashCode(s), dir),
-        _ => java.lang.Long.valueOf(docs(s, dir).count())).longValue
+      val nDocs = corpusCount(s, dir)
       // in-row landmark extraction (landmarkRows ≡ landmarks(window-
       // Features(...)) bit-for-bit, pinned by StreamingMediaClustersSpec):
       // the per-doc fingerprint folds inside one narrow map instead of a

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** Bridge into the `private[sql]` Dataset constructor so graft's custom
@@ -7,7 +8,8 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * the standard technique Spark extension libraries use — the whole
   * extension API (strategies, rules) exchanges LogicalPlans, but the
   * only sanctioned DataFrame constructor from a plan lives behind
-  * `private[sql]`. Kept to this single call, nothing else internal. */
+  * `private[sql]`. Besides that call, only the Column ⇄ Expression pair
+  * and the listener-bus drain below reach anything internal. */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
@@ -23,4 +25,9 @@ object GraftPlanBridge {
     classic.ExpressionUtils.column(e)
   def expr(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     classic.ExpressionUtils.expression(c)
+
+  /** Waits until every queued listener event has been delivered
+    * (`private[spark]`), so counters read afterwards
+    * (`graft.core.RunCounters`) cover all the work before the call. */
+  def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -14,7 +14,8 @@ import graft.ops.DimStore
 class MaintainSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   /** Bytes of the generation(s) committed at `version` — what that
-    * commit physically wrote (the RebucketProbe measurement). */
+    * commit physically wrote (the measurement of SCALEPROBE.md
+    * "Rebucket write amplification (round 11)"). */
   private def genBytes(path: String, version: Long): Long = {
     val gd = Paths.get(path, "_gens")
     val l = Files.list(gd)

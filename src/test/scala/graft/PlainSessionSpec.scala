@@ -12,15 +12,19 @@ import org.scalatest.matchers.should.Matchers
 
 /** The session contract of `core.GraftSession`: `SparkEntry.queries`
   * may be handed a plain session, without `GraftExtensions`, and must
-  * return the same rows there; and `GraftSession.builder` is the only
-  * place in `src/main` that builds a session. */
+  * return the same rows there without installing planner strategies on
+  * it; `GraftSession.builder` is the only place in `src/main` that
+  * builds a session, and `core.RunCounters` the only one that attaches
+  * a Spark or query-execution listener. */
 class PlainSessionSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   // native expressions planted into the plan (x30 char_bigrams, x35
-  // char_stats), the TopKPerKey node by TopK.perKeyPlanned (x57), and
-  // the row_number top-k idiom the shared session rewrites (w05, q09)
+  // char_stats), the TopKPerKey node by TopK.perKeyPlanned (x48, x57,
+  // x59), and the row_number top-k idiom the shared session rewrites
+  // (w05, q09)
   private val names = Seq("x30_rare_bigram_ratio", "x35_char_diversity",
-    "x57_tfidf_topterms", "w05_uv_dedup", "q09_window_topn_per_key")
+    "x48_bottomk_sample", "x57_tfidf_topterms", "x59_knn_label_vote",
+    "w05_uv_dedup", "q09_window_topn_per_key")
 
   private def rows(s: SparkSession, name: String): Seq[String] =
     queries.Registry.byName(name).run(s, sf0001).collect().map(_.toString).toSeq.sorted
@@ -40,9 +44,11 @@ class PlainSessionSpec extends AnyFunSuite with Matchers with SparkFixture {
       spark.sessionState.functionRegistry
         .functionExists(FunctionIdentifier("char_stats")) shouldBe true
       for (n <- names) withClue(s"$n: ") {
+        val strategies = plain.experimental.extraStrategies
         val got = rows(plain, n)
         got should not be empty
         got shouldBe expected(n)
+        plain.experimental.extraStrategies shouldBe strategies
       }
     } finally {
       queries.Extensions.clearPersistedIntermediates()
@@ -50,14 +56,23 @@ class PlainSessionSpec extends AnyFunSuite with Matchers with SparkFixture {
     }
   }
 
-  test("src/main builds sessions only through GraftSession.builder") {
+  /** Files under `src/main/scala` that contain any of `calls`, except `owner`. */
+  private def callersOutside(owner: String, calls: String*): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (${root.toAbsolutePath})")
-    val offenders = Using.resource(Files.walk(root))(_.iterator().asScala
+    Using.resource(Files.walk(root))(_.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.endsWith(Paths.get("graft/core/GraftSession.scala")))
-      .filter(p => Files.readString(p).contains("SparkSession.builder("))
+      .filterNot(_.endsWith(Paths.get(owner)))
+      .filter { p => val src = Files.readString(p); calls.exists(src.contains) }
       .map(root.relativize(_).toString).toSeq.sorted)
-    offenders shouldBe empty
+  }
+
+  test("src/main builds sessions only through GraftSession.builder") {
+    callersOutside("graft/core/GraftSession.scala", "SparkSession.builder(") shouldBe empty
+  }
+
+  test("src/main attaches Spark and query-execution listeners only in RunCounters") {
+    callersOutside("graft/core/RunCounters.scala",
+      "addSparkListener(", "listenerManager.register(") shouldBe empty
   }
 }
