@@ -1,5 +1,7 @@
 package graft.core
 
+import org.apache.parquet.schema.LogicalTypeAnnotation.{TimeUnit, TimestampLogicalTypeAnnotation}
+import org.apache.parquet.schema.MessageType
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr}
 import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
@@ -8,9 +10,11 @@ import org.apache.spark.sql.types.{LongType, TimestampNTZType, TimestampType}
   *
   * Every query receives the scale-factor directory at call time, so the
   * same code runs on sf0.001 smoke, sf0.01 oracle, and sf0.1 bench — and,
-  * unchanged, on a 100 TB table: `spark.read.parquet` scans are
-  * partition-parallel, filters and projections are pushed to the parquet
-  * reader by Catalyst, and nothing here materializes on the driver.
+  * unchanged, on a 100 TB table: parquet scans are partition-parallel,
+  * filters and projections are pushed to the parquet reader by Catalyst,
+  * and the driver reads one bounded thing per load: the footer of one
+  * file, for the schema (`ParquetFooter.read`, cached per file version),
+  * in place of Spark's one-task schema-inference job.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -29,12 +33,14 @@ object Tables {
     //    pinned to UTC, so the cast is value-preserving and matches DuckDB's
     //    naive-timestamp semantics, and downstream `unix_micros`/window code
     //    never has to care which encoding the fixture used.
-    // The legacy flag is session-wide and sticky — scope the mutation
-    // to the one table that needs it (the scan consults the conf at
-    // execution, so set-and-restore would break the deferred read).
-    if (name == "events")
+    // The legacy flag is session-wide and sticky, so it is set only when
+    // the footer really stores `ts` as TIMESTAMP(NANOS) (the scan consults
+    // the conf at execution, so set-and-restore would break the deferred
+    // read). No current fixture does.
+    val path = s"$dir/$name.parquet"
+    if (name == "events" && ParquetFooter.parquetType(spark, path).exists(nanosTs))
       spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    val raw = spark.read.parquet(s"$dir/$name.parquet")
+    val raw = ParquetFooter.read(spark, path)
     val df =
       if (name == "events" && raw.schema("ts").dataType == LongType)
         raw.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
@@ -49,6 +55,12 @@ object Tables {
       df.select(cols: _*)
     }
   }
+
+  private def nanosTs(m: MessageType): Boolean =
+    m.containsField("ts") && (m.getType(m.getFieldIndex("ts")).getLogicalTypeAnnotation match {
+      case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
+      case _ => false
+    })
 
   /** Register every fixture table as a temp view (for spark.sql paths). */
   def registerAll(spark: SparkSession, dir: String): Unit =

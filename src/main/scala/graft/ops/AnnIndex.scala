@@ -3,6 +3,8 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
+import graft.core.ParquetFooter
+
 /** Persisted, incrementally-maintained IVFADC index (Jégou/Douze/
   * Schmid, TPAMI 2011 §IV) over a versioned [[DimStore]] table — the
   * retrieval family's DIM-layer: train the coarse quantizer + product-
@@ -1183,7 +1185,7 @@ object AnnIndex {
       val adopted = meta.filter { case (rv, _) =>
         floor <= rv + pending.size + 1L }
       val buildVer = adopted.map(_._1).getOrElse(floor)
-      val modelRows = spark.read.parquet(s"$dir/model")
+      val modelRows = ParquetFooter.read(spark, s"$dir/model")
         .select("key", "kind", "i1", "i2", "vals").collect()
       val model = parseModelRows(modelRows, buildVer,
         s"staged ANN rebuild at $dir")
@@ -1204,7 +1206,7 @@ object AnnIndex {
           // the staged content through the commit log at `floor` —
           // the staged files carry the stale reserved version and the
           // physical bucket column, both replaced here
-          val staged = spark.read.parquet(s"$dir/codes")
+          val staged = ParquetFooter.read(spark, s"$dir/codes")
             .drop(DimStore.bucketColName).drop("__batch_ver")
           commitFull(spark, codesPath(path), staged,
             pk = "vec_id", ver = buildVer,
@@ -1222,7 +1224,7 @@ object AnnIndex {
       // pathological backlog.
       val v = buildVer + pending.size
       pending.zipWithIndex.map { case (pd, i) =>
-        val spilled = spark.read.parquet(pd)
+        val spilled = ParquetFooter.read(spark, pd)
         // an append spill carries (idCol, vCol); a DELETE spill
         // ([[ingestDelete]]) carries only the ids — replay it as
         // tombstones so a takedown issued during the build window

@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions.{broadcast, coalesce, col, count, hash, lit, max, pmod, row_number, struct}
-import org.apache.spark.sql.types.{DataType, IntegerType, StructField, StructType}
+import org.apache.spark.sql.types.{IntegerType, StructField, StructType}
 
 /** K3/K4 — keyed upsert (MERGE) dim store over parquet, with a
   * Delta/Iceberg-style versioned-snapshot commit protocol.
@@ -525,27 +525,8 @@ object DimStore {
         val bp = bucketPath(path, gen, b)
         st.list(bp).filter(isVisible).sorted.headOption.map(f => s"$bp/$f")
       }.next()
-      // a TRUE driver-side footer read (spark.read.parquet(file).schema
-      // still launches a one-task inference job): Spark writers stamp
-      // the exact original schema into the footer's extra metadata —
-      // the same key Spark's own inference prefers — and a foreign file
-      // falls back to converting the parquet MessageType with the
-      // session's conversion flags, exactly as inference would.
-      val footer = {
-        val p = new Path(first)
-        val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
-          p, spark.sparkContext.hadoopConfiguration)
-        val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
-        try r.getFooter.getFileMetaData finally r.close()
-      }
-      val s = Option(footer.getKeyValueMetaData
-          .get("org.apache.spark.sql.parquet.row.metadata"))
-        .map(j => DataType.fromJson(j).asInstanceOf[StructType])
-        .getOrElse {
-          new org.apache.spark.sql.execution.datasources.parquet
-            .ParquetToSparkSchemaConverter(spark.sessionState.conf)
-            .convert(footer.getSchema)
-        }
+      // a driver-side footer read, no Spark job (graft.core.ParquetFooter)
+      val s = graft.core.ParquetFooter.fileSchema(spark, new Path(first))
       if (genSchemaCache.size > 4096) genSchemaCache.clear()
       genSchemaCache.put(key, s)
       s

@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{ParquetFooter, Tables}
 
 /** Deduplication family: exact, MinHash-LSH, SimHash,
   * n-gram-Jaccard, edit-distance, span, semantic and incremental
@@ -132,7 +132,7 @@ private[queries] trait ExtensionsDedup { this: Extensions.type =>
   private[queries] def stagedClusters(s: SparkSession, dir: String): DataFrame = {
     val path = graft.ops.Staging.ensure("x28_labels", dir,
       Seq("documents"))(x28.run(s, dir))
-    s.read.parquet(path)
+    ParquetFooter.read(s, path)
   }
 
   /** Oracle CTE prefix — per-doc shingle hashes, minhash signatures,
@@ -842,7 +842,7 @@ private[queries] trait ExtensionsDedup { this: Extensions.type =>
       val a = persisted(s, "x39_assign", dir) {
         val path = graft.ops.Staging.ensure("km_assign2", dir,
           Seq("embeddings"))(kmeansAssign2(s, dir))
-        s.read.parquet(path)
+        ParquetFooter.read(s, path)
       }.select($"vec_id", $"embedding", $"cluster")
       a.as("x").join(a.as("y"),
           col("x.cluster") === col("y.cluster") && col("x.vec_id") < col("y.vec_id"))
@@ -1106,7 +1106,7 @@ private[queries] trait ExtensionsDedup { this: Extensions.type =>
         val incr = neardupPairs(s, dir)
           .filter($"doc_a" % 10 === 0 || $"doc_b" % 10 === 0)
           .select($"doc_a".as("a"), $"doc_b".as("b"))
-        val histStars = s.read.parquet(histPath)
+        val histStars = ParquetFooter.read(s, histPath)
           .filter($"id" =!= $"rep")
           .select($"id".as("a"), $"rep".as("b"))
         graft.ops.ConnectedComponents.starContraction(

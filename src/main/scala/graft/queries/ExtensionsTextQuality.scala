@@ -4,7 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.expressions.Window
 
-import graft.core.Tables
+import graft.core.{ParquetFooter, Tables}
 
 /** Text-quality family: stats, language-ID,
   * token counts, fingerprints, repetition/rarity/diversity filters,
@@ -1099,7 +1099,7 @@ private[queries] trait ExtensionsTextQuality { this: Extensions.type =>
       val path = graft.ops.Staging.ensure("x90_ratio", dir,
         Seq("documents"))(dsirRatio(s, dir))
       graft.streaming.DsirGate
-        .score(docs(s, dir), s.read.parquet(path), DsirBuckets)
+        .score(docs(s, dir), ParquetFooter.read(s, path), DsirBuckets)
         .withColumn("keep",
           when($"score_ppm" >= 1000000L, 1L).otherwise(0L))
     },
@@ -1171,7 +1171,7 @@ private[queries] trait ExtensionsTextQuality { this: Extensions.type =>
       // already materialized for x90/x92), against the STAGED model
       val selected = dsirMatrix(s, dir)
         .join(k2, Seq("doc_id"))
-        .join(broadcast(s.read.parquet(ratioPath)), Seq("b"))
+        .join(broadcast(ParquetFooter.read(s, ratioPath)), Seq("b"))
         .groupBy($"doc_id", $"lang")
         .agg(sum($"cnt").as("n_bigrams"),
           expr("sum(cnt * r_ppm) div sum(cnt)").as("score_ppm"))

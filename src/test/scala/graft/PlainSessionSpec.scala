@@ -14,8 +14,9 @@ import org.scalatest.matchers.should.Matchers
   * may be handed a plain session, without `GraftExtensions`, and must
   * return the same rows there without installing planner strategies on
   * it; `GraftSession.builder` is the only place in `src/main` that
-  * builds a session, and `core.RunCounters` the only one that attaches
-  * a Spark or query-execution listener. */
+  * builds a session, `core.RunCounters` the only one that attaches
+  * a Spark or query-execution listener, and `core.ParquetFooter` the
+  * only one that reads parquet without a schema. */
 class PlainSessionSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   // native expressions planted into the plan (x30 char_bigrams, x35
@@ -56,23 +57,43 @@ class PlainSessionSpec extends AnyFunSuite with Matchers with SparkFixture {
     }
   }
 
-  /** Files under `src/main/scala` that contain any of `calls`, except `owner`. */
+  test("loading every fixture table leaves a plain session's conf unchanged") {
+    val plain = SparkSession.builder().create()
+    val before = plain.conf.getAll
+    for (n <- core.Tables.names) core.Tables.load(plain, sf0001, n)
+    (plain.conf.getAll.toSet diff before.toSet) shouldBe empty
+    plain.conf.getAll shouldBe before
+  }
+
+  /** Files under `src/main/scala` that match any of `calls`, except `owner`. */
   private def callersOutside(owner: String, calls: String*): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (${root.toAbsolutePath})")
+    val patterns = calls.map(_.r.unanchored)
     Using.resource(Files.walk(root))(_.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
       .filterNot(_.endsWith(Paths.get(owner)))
-      .filter { p => val src = Files.readString(p); calls.exists(src.contains) }
+      .filter { p => val src = Files.readString(p); patterns.exists(_.matches(src)) }
       .map(root.relativize(_).toString).toSeq.sorted)
   }
 
   test("src/main builds sessions only through GraftSession.builder") {
-    callersOutside("graft/core/GraftSession.scala", "SparkSession.builder(") shouldBe empty
+    callersOutside("graft/core/GraftSession.scala", """SparkSession\.builder\(""") shouldBe empty
   }
 
   test("src/main attaches Spark and query-execution listeners only in RunCounters") {
     callersOutside("graft/core/RunCounters.scala",
-      "addSparkListener(", "listenerManager.register(") shouldBe empty
+      """addSparkListener\(""", """listenerManager\.register\(""") shouldBe empty
+  }
+
+  /** Files allowed a schema-less parquet read outside `ParquetFooter`,
+    * each with the reason it cannot supply a schema. */
+  private val schemaLessReads: Map[String, String] = Map.empty
+
+  test("src/main reads parquet without a schema only through ParquetFooter") {
+    // `spark.read.parquet(p)` runs a one-task schema-inference job per
+    // call; `ParquetFooter.read` reads the same footer on the driver
+    callersOutside("graft/core/ParquetFooter.scala", """\.read\s*\.parquet\(""")
+      .filterNot(schemaLessReads.contains) shouldBe empty
   }
 }
