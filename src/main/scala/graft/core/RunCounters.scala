@@ -16,6 +16,10 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *   - `jobs`, `tasks`: Spark jobs started and tasks ended;
   *   - `cpuMs`: executor CPU time of those tasks;
   *   - `shuffleBytes`: shuffle bytes written plus bytes read;
+  *   - `shuffleRecords`: shuffle records written plus records read.
+  *     Spark counts shuffle bytes after compression, so the same rows
+  *     written in another order can change `shuffleBytes` by a few
+  *     bytes; the record count repeats exactly on unchanged code;
   *   - `spillBytes`: memory plus disk spill;
   *   - `planMs`: driver planning (analysis, optimization, physical
   *     planning) of the executions of the window's session and of the
@@ -28,8 +32,8 @@ import org.apache.spark.sql.util.QueryExecutionListener
   *     when AQE re-planned it.
   */
 final case class Counters(jobs: Long, tasks: Long, cpuMs: Long, shuffleBytes: Long,
-                          spillBytes: Long, planMs: Long, compiles: Long,
-                          compileMs: Double, plans: Seq[String]) {
+                          shuffleRecords: Long, spillBytes: Long, planMs: Long,
+                          compiles: Long, compileMs: Double, plans: Seq[String]) {
 
   /** The numeric fields as (JSON key, JSON number) pairs, in the order
     * a `BENCH_LAST.json` row lists them after `wall`. */
@@ -40,6 +44,7 @@ final case class Counters(jobs: Long, tasks: Long, cpuMs: Long, shuffleBytes: Lo
     "tasks" -> tasks.toString,
     "cpu_ms" -> cpuMs.toString,
     "shuffle_bytes" -> shuffleBytes.toString,
+    "shuffle_records" -> shuffleRecords.toString,
     "spill_bytes" -> spillBytes.toString,
     "plan_ms" -> planMs.toString)
 
@@ -69,7 +74,7 @@ object RunCounters {
     * The listeners detach whether or not `body` throws. */
   def window[T](spark: SparkSession)(body: => T): (T, Counters) = {
     val sc = spark.sparkContext
-    val jobs, tasks, cpuNs, shuffle, spill, planMs = new LongAdder
+    val jobs, tasks, cpuNs, shuffle, shuffleRecords, spill, planMs = new LongAdder
     val plans = new ConcurrentSkipListMap[java.lang.Long, String]()
     val contextListener = new SparkListener {
       override def onJobStart(e: SparkListenerJobStart): Unit = jobs.increment()
@@ -79,6 +84,8 @@ object RunCounters {
         if (m != null) {
           cpuNs.add(m.executorCpuTime)
           shuffle.add(m.shuffleWriteMetrics.bytesWritten + m.shuffleReadMetrics.totalBytesRead)
+          shuffleRecords.add(
+            m.shuffleWriteMetrics.recordsWritten + m.shuffleReadMetrics.recordsRead)
           spill.add(m.memoryBytesSpilled + m.diskBytesSpilled)
         }
       }
@@ -103,8 +110,8 @@ object RunCounters {
       val (c0, ms0) = (GraftSession.compiles, GraftSession.compileMs)
       val result = body
       GraftPlanBridge.drainListeners(sc)
-      (result, Counters(jobs.sum, tasks.sum, cpuNs.sum / 1000000L, shuffle.sum, spill.sum,
-        planMs.sum, GraftSession.compiles - c0, GraftSession.compileMs - ms0,
+      (result, Counters(jobs.sum, tasks.sum, cpuNs.sum / 1000000L, shuffle.sum,
+        shuffleRecords.sum, spill.sum, planMs.sum, GraftSession.compiles - c0, GraftSession.compileMs - ms0,
         plans.values.asScala.toSeq))
     } finally {
       spark.listenerManager.unregister(sessionListener)

@@ -61,8 +61,4 @@ object Tables {
       case t: TimestampLogicalTypeAnnotation => t.getUnit == TimeUnit.NANOS
       case _ => false
     })
-
-  /** Register every fixture table as a temp view (for spark.sql paths). */
-  def registerAll(spark: SparkSession, dir: String): Unit =
-    names.foreach(n => load(spark, dir, n).createOrReplaceTempView(n))
 }

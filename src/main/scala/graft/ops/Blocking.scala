@@ -22,7 +22,7 @@ import org.apache.spark.sql.functions._
   *    — O(|block|) pairs. A block that oversized is near-identical
   *    boilerplate by construction (its members collide on the blocking
   *    key), the keeper representative still surfaces the cluster, and
-  *    downstream transitive clustering (x28's label propagation)
+  *    downstream transitive clustering (x28's connected components)
   *    recovers full-cluster membership through the star's center.
   *
   * Worst-case pair count per block is therefore max(cap², |block|−1) —

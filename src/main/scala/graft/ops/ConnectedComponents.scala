@@ -5,31 +5,24 @@ import org.apache.spark.sql.functions._
 
 /** Connected components by alternating large-star / small-star
   * contraction (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
-  * "Connected Components in MapReduce and Beyond", SoCC 2014) — the
-  * O(log n)-round counterpart to min-label propagation (x28), which
-  * needs O(graph diameter) rounds and carries the full adjacency list
-  * through every one of them.
-  *
-  * Why a second algorithm for the same answer: near-dup graphs at
-  * corpus scale are mostly tiny cliques, where propagation wins — but
-  * one boilerplate template shared by a crawl slice can chain tens of
-  * thousands of documents into a path-shaped component whose diameter,
-  * not the corpus size, becomes the round count. Star contraction
-  * halves the effective height per round pair regardless of shape
-  * (provably O(log² n), empirically ~log n), and each round SHRINKS
-  * the edge set it carries (every rewrite points an edge at a
-  * component-local minimum, and duplicates collapse in the per-round
-  * dedup), so late rounds touch a fraction of the input instead of
-  * re-joining all of it. Both operations are one keyed aggregation +
-  * one keyed join per round — the same shuffle shape as propagation,
-  * just fewer rounds on deep graphs.
+  * "Connected Components in MapReduce and Beyond", SoCC 2014): the
+  * engine's one connected-components implementation (x28, x73, x74,
+  * x96, x97 and [[graft.streaming.StreamingClusters]]). Min-label
+  * propagation needs O(graph diameter) rounds, and one boilerplate
+  * template shared by a crawl slice can chain tens of thousands of
+  * documents into a path-shaped component. Star contraction halves
+  * the effective height per round pair regardless of shape (provably
+  * O(log² n), empirically ~log n), and each round SHRINKS the edge set
+  * it carries (every rewrite points an edge at a component-local
+  * minimum, and duplicates collapse in the per-round dedup), so late
+  * rounds touch a fraction of the input. Each operation is one keyed
+  * aggregation + one keyed join per round.
   *
   * Contract: input is an undirected edge list (any orientation, self
   * loops ignored); output is one row per distinct endpoint,
-  * `(id, rep)` with `rep` = the component's minimum node id — byte-
-  * identical to what [[graft.queries.Extensions]] x28's propagation
-  * emits, which is exactly what a dedup pass wants (the canonical
-  * keeper id per duplicate cluster).
+  * `(id, rep)` with `rep` = the component's minimum node id — exactly
+  * what a dedup pass wants (the canonical keeper id per duplicate
+  * cluster).
   *
   * Determinism: min() everywhere — no hashing, no randomness; the
   * fixpoint (disjoint stars centered at component minima) is unique,
@@ -78,11 +71,6 @@ object ConnectedComponents {
   // the full Long id range (an arithmetic Σ would overflow under ANSI
   // mode on hash-range ids).
 
-  /** Run alternating rounds to the unique fixpoint and return
-    * `(id, rep)` labels. `maxRounds` is a loud failsafe, not a quality
-    * knob — contraction provably converges in O(log² n) rounds, so
-    * hitting the cap means a broken invariant, and silently returning
-    * a half-contracted forest would be WRONG labels. */
   /** Per-round lineage truncation: each round's plan references the
     * previous round's frame SEVERAL times (large-star self-unions,
     * small-star self-joins), so an uncut lineage grows exponentially
@@ -105,22 +93,16 @@ object ConnectedComponents {
     * reliable route therefore checkpoints an RDD we hold (public
     * `RDD.checkpoint`/`getCheckpointFile`), persisted around the
     * materializing count so the checkpoint write reads cached blocks
-    * instead of recomputing the round. */
-  private def truncated(df: DataFrame,
-                        out: SparkSession): (DataFrame, () => Unit) = {
-    val (f, _, r) = truncatedW(df, out); (f, r)
-  }
-
-  /** [[truncated]] with the convergence witness computed IN the
-    * materializing action: the checkpoint used to pay one job to
-    * materialize (`count`) and the loop a second to checksum
-    * ([[witness]]) — per round, at ~50 ms job-scheduling floor each.
-    * The witness only ever compares round-to-round, so any
-    * deterministic order-independent set checksum works; this one is a
+    * instead of recomputing the round.
+    *
+    * The convergence witness is computed IN the materializing action,
+    * one job per round at the ~50 ms job-scheduling floor. It only
+    * ever compares round-to-round, so any deterministic
+    * order-independent set checksum works; this one is a
     * splitmix-style mix of (a, b) XOR-folded per partition, reduced
-    * driver-side — one pass, one job, and the pass itself is the
-    * checkpoint materialization. */
-  /** `out` is the session the truncated frame is REBUILT on — the loop
+    * driver-side.
+    *
+    * `out` is the session the truncated frame is REBUILT on — the loop
     * passes its private narrowed session ([[starContractionReleasable]]),
     * result frames the caller's. RDD work is context-level either way. */
   private def truncatedW(df: DataFrame, out: SparkSession)
@@ -169,6 +151,11 @@ object ConnectedComponents {
     * unchanged, so a 100 TB pair graph never touches the driver. */
   val DriverFoldMaxEdges: Int = 200000
 
+  /** Run alternating rounds to the unique fixpoint and return
+    * `(id, rep)` labels. `maxRounds` is a loud failsafe, not a quality
+    * knob — contraction provably converges in O(log² n) rounds, so
+    * hitting the cap means a broken invariant, and silently returning
+    * a half-contracted forest would be WRONG labels. */
   def starContraction(edges: DataFrame, maxRounds: Int = 32): DataFrame =
     starContractionReleasable(edges, maxRounds)._1
 
@@ -236,7 +223,7 @@ object ConnectedComponents {
     val sess = edges.sparkSession
     // drop self loops, orient big→small once so round 1 can start on
     // small-star's precondition without a wasted symmetrize; truncate
-    // per round (see [[truncated]]). Planned on the CALLER's session —
+    // per round (see [[truncatedW]]). Planned on the CALLER's session —
     // the width derivation needs the count first, same as before.
     var (e, prev, releaseE) = truncatedW(edges
       .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
@@ -332,7 +319,8 @@ object ConnectedComponents {
         // after this method returns — and the returned handle is how
         // a caller reclaims it once the labels are materialized
         // elsewhere.
-        truncated(labelsRaw, sess)
+        val (l, _, release) = truncatedW(labelsRaw, sess)
+        (l, release)
       } else if (loopSess eq sess) (labelsRaw, () => ())
       else (sess.createDataFrame(labelsRaw.rdd, labelsRaw.schema), () => ())
     labels.persist()

@@ -10,7 +10,7 @@ import org.apache.spark.sql.DataFrame
   * labels) are narrow aggregations over an ALREADY-BUILT intermediate
   * at 100 TB; without a staging story each standalone invocation
   * re-paid the full upstream pipeline (shingle → minhash → band join →
-  * label propagation) from scratch. `ensure` gives them the production
+  * connected components) from scratch. `ensure` gives them the production
   * shape: first consumer builds and atomically publishes the parquet,
   * every later consumer — across queries AND across JVMs — pays one
   * scan.

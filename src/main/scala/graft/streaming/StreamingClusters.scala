@@ -177,7 +177,7 @@ object StreamingClusters {
       .map { case (x, y) => (repOf.getOrElse(x, x), repOf.getOrElse(y, y)) }
       .filter { case (x, y) => x != y }.toArray
     if (quotient.isEmpty) return // replay / already absorbed: no commit
-    val label = unionFindMin(quotient)
+    val label = ConnectedComponents.unionFindMin(quotient)
     // old reps whose component minimum moved → relabel ALL their
     // members (including the rep's own self-row), distributed: the
     // label table is only ever scanned against a broadcast of the
@@ -202,14 +202,6 @@ object StreamingClusters {
       delta.withColumn("ver", lit(batchId)), pk = "id",
       versionCol = "ver", nBuckets = nBuckets)
   }
-
-  /** Component-minimum labels driver-side — shared with the batch
-    * operator ([[ConnectedComponents.unionFindMin]]): one definition
-    * of the keep-the-minimum contract across both bounded-collect
-    * routes. */
-  private def unionFindMin(
-      edges: Array[(Long, Long)]): Map[Long, Long] =
-    ConnectedComponents.unionFindMin(edges)
 
   private def updateBatchMaintainedDistributed(spark: SparkSession,
       store: String, incr: DataFrame, batchId: Long,

@@ -12,7 +12,7 @@ import org.apache.spark.sql.functions._
   *    block, over-cap block count, the per-block capped pair bound
   *    Σ min(|b|·(|b|−1)/2, bound) that wall-time should track);
   *  - the DISTINCT candidate-pair count the cap actually emits;
-  *  - wall times of x02 (pair detection), x28 (cluster propagation),
+  *  - wall times of x02 (pair detection), x28 (connected components),
   *    x36 (keep-list apply) — every run is printed, not just the min,
   *    because x36's first run pays the one-time stage build and the
   *    later runs show the steady-state scan, and both numbers matter.

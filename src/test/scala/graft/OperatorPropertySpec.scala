@@ -216,4 +216,28 @@ object OperatorPropertySpec {
       if (closeOut) pending.foreach(p => out += Bounce(mid, p, "timeout"))
       out.result()
     }
+
+  /** Linear model of A2's repair rules (BaseLogApp.java:66-96), as
+    * `VisitorFlagRepair` applies them to a stream cut into `batches`:
+    * each batch's rows per device in (ts, pageId) order, with the
+    * device's first-visit date carried from batch to batch.
+    *   - is_new=1, no date       → store today, keep 1
+    *   - is_new=1, date ≠ today  → rewrite to 0
+    *   - is_new=1, date = today  → keep 1
+    *   - is_new=0, no date       → store yesterday, keep 0 */
+  def simulateRepair(batches: Seq[Seq[PageLog]]): Seq[PageLog] = {
+    val first = scala.collection.mutable.Map.empty[String, String]
+    batches.flatMap { batch =>
+      batch.sortBy(e => (e.mid, e.ts, e.pageId)).map { e =>
+        val today = Dates.toDate(e.ts)
+        (e.isNew, first.get(e.mid)) match {
+          case ("1", None) => first(e.mid) = today; e
+          case ("1", Some(d)) if d != today => e.copy(isNew = "0")
+          case ("1", Some(_)) => e
+          case (_, None) => first(e.mid) = Dates.yesterday(today); e
+          case (_, Some(_)) => e
+        }
+      }
+    }
+  }
 }

@@ -26,11 +26,32 @@ class RelationalPlanSpec extends AnyFunSuite with Matchers with SparkFixture {
       "x96_cluster_takedown",
       "x97_cluster_takedown_maintained")
     Registry.all.foreach { q =>
+      val before = sessionSnapshot()
       val n = q.run(spark, sf0001).count()
       withClue(s"${q.name}: ") {
         if (!mayBeEmpty(q.name)) assert(n > 0, "expected rows")
+        val after = sessionSnapshot()
+        val changed = (before.keySet ++ after.keySet).toSeq.sorted
+          .filter(k => before.get(k) != after.get(k))
+        assert(changed.isEmpty, s"left its session changed: ${changed.mkString(", ")}")
       }
     }
+  }
+
+  /** What a query must leave as it found it on the session it runs on,
+    * keyed by what it is: conf entries, planner strategies, temporary
+    * views and the function registry (temporary functions). */
+  private def sessionSnapshot(): Map[String, String] = {
+    val s = spark
+    // Tables.load sets this sticky flag when an events fixture stores
+    // `ts` as TIMESTAMP(NANOS): the scan reads the conf at execution,
+    // so it cannot be restored after the load (no current fixture does)
+    val conf = s.conf.getAll - "spark.sql.legacy.parquet.nanosAsLong"
+    conf.map { case (k, v) => s"conf $k" -> v } ++
+      Map("extraStrategies" ->
+        s.experimental.extraStrategies.map(_.getClass.getName).mkString(",")) ++
+      s.sessionState.catalog.getTempViewNames().map(v => s"temp view $v" -> "") ++
+      s.sessionState.functionRegistry.listFunction().map(f => s"function $f" -> "")
   }
 
   test("registry names are unique and every query has an oracle") {

@@ -5,12 +5,13 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.ops.ConnectedComponents
 
-/** Pins [[ConnectedComponents.starContraction]] — the O(log n)-round
-  * connected-components twin of x28's min-label propagation — on the
-  * graph shapes the near-dup oracle fixture can't produce: deep chains
-  * (where propagation's round count is the diameter), random multi-
-  * component graphs (against a driver-side union-find model), and the
-  * degenerate inputs a maintenance job meets. */
+/** Pins [[ConnectedComponents.starContraction]] — the engine's one
+  * connected-components implementation (x28, x73, x74) — against a
+  * driver-side union-find model: on the near-dup fixture's pair graph,
+  * and on the shapes that fixture can't produce: deep chains (where
+  * min-label propagation's round count would be the diameter), random
+  * multi-component graphs, and the degenerate inputs a maintenance job
+  * meets. */
 class StarContractionSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private def edgesDF(pairs: Seq[(Long, Long)]) = {
@@ -66,9 +67,8 @@ class StarContractionSpec extends AnyFunSuite with Matchers with SparkFixture {
     labels should have size 64
     labels.values.toSet shouldBe Set(0L)
     val rounds = ConnectedComponents.lastRounds.get()
-    // diameter 63 would cost min-label propagation ~63 rounds (x28's
-    // seeded first hop halves that at best); contraction's height
-    // halves per round pair — allow slack over log2(64)=6 but pin the
+    // diameter 63 would cost min-label propagation ~63 rounds;
+    // contraction's height halves per round pair — allow slack over log2(64)=6 but pin the
     // asymptotic class
     rounds should be <= 10
     rounds should be >= 1
@@ -161,13 +161,16 @@ class StarContractionSpec extends AnyFunSuite with Matchers with SparkFixture {
     }
   }
 
-  test("x28 propagation, x73 contraction, x74 incremental agree on the fixture") {
+  test("x28, x73 and x74 each equal a union-find model of x02's pairs on the fixture") {
     val s = spark
     val byName = graft.queries.Registry.byName
-    def labels(q: String) = byName(q).run(s, sf0001)
-      .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
-    val prop = labels("x28_dedup_clusters")
-    labels("x73_cc_star_contraction") shouldBe prop
-    labels("x74_cc_incremental") shouldBe prop
+    def rows(q: String) = byName(q).run(s, sf0001)
+      .collect().map(r => (r.getLong(0), r.getLong(1)))
+    val expected = model(rows("x02_minhash_lsh_neardup").toSeq).toSet
+    // the oracle finds 28 verified pairs at sf0.001: a non-empty model
+    // keeps the comparison from passing on two empty tables
+    expected should not be empty
+    for (q <- Seq("x28_dedup_clusters", "x73_cc_star_contraction", "x74_cc_incremental"))
+      withClue(s"$q: ")(rows(q).toSet shouldBe expected)
   }
 }
