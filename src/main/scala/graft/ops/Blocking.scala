@@ -1,6 +1,6 @@
 package graft.ops
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
@@ -13,8 +13,8 @@ import org.apache.spark.sql.functions._
   * turn one block into 5·10⁹ pairs and a straggler task no salt can
   * split, because the pairs are REAL, not a distribution artifact.
   *
-  * The cap is the count-then-filter pattern (one window count over the
-  * block key the join shuffles on anyway):
+  * The cap is the count-then-filter pattern (one count per block key,
+  * in the pass that gathers the block anyway):
   *
   *  - blocks ≤ `cap`: all (a < b) pairs, unchanged — Σ|block|² with
   *    |block| bounded by the cap;
@@ -38,25 +38,24 @@ object Blocking {
 
   /** Candidate pairs from LSH band rows (doc_id, band, k1, k2) —
     * [[MinHash.bands]] output — with the per-block cap. Returns
-    * DISTINCT (doc_a, doc_b), doc_a < doc_b. The window count rides the
-    * same (band, k1, k2) hash partitioning the self-join needs, so the
-    * cap costs a sort within the existing exchange, not a new shuffle. */
+    * DISTINCT (doc_a, doc_b), doc_a < doc_b. One aggregation per block
+    * key takes the row count (null and repeated doc ids included) and
+    * the sorted members, and the block's pairs are listed in its row,
+    * so the band rows cross one exchange, not a new one per route. */
   def cappedBandPairs(bands: DataFrame, cap: Int = DefaultBlockCap): DataFrame = {
-    val w = Window.partitionBy(col("band"), col("k1"), col("k2"))
-    val sized = bands
-      .withColumn("__bcnt", count(lit(1)).over(w))
-      .withColumn("__keeper", min(col("doc_id")).over(w))
-    val small = sized.filter(col("__bcnt") <= cap)
-      .select(col("doc_id"), col("band"), col("k1"), col("k2"))
-    val allPairs = small.as("a")
-      .join(small.as("b"),
-        col("a.band") === col("b.band") && col("a.k1") === col("b.k1") &&
-        col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
-    val star = sized
-      .filter(col("__bcnt") > cap && col("doc_id") =!= col("__keeper"))
-      .select(col("__keeper").as("doc_a"), col("doc_id").as("doc_b"))
-    allPairs.unionByName(star).distinct()
+    val blocks = bands.groupBy(col("band"), col("k1"), col("k2"))
+      .agg(count(lit(1)).as("n"), array_sort(collect_list(col("doc_id"))).as("ids"))
+    val ids = col("ids")
+    def pair(a: Column, b: Column) = struct(a.as("doc_a"), b.as("doc_b"))
+    val all = flatten(transform(ids, (a, i) =>
+      transform(slice(ids, i + 2, size(ids)), b => pair(a, b))))
+    val star = transform(slice(ids, lit(2), size(ids)), b => pair(ids(0), b))
+    blocks
+      .select(explode(when(col("n") <= cap, all).otherwise(star)).as("p"))
+      .select(col("p.doc_a"), col("p.doc_b"))
+      // a repeated doc id pairs with itself; a strict < drops it
+      .filter(col("doc_a") < col("doc_b"))
+      .distinct()
   }
 
   /** Candidate pairs for edit-distance dedup from prefix blocking with

@@ -1,7 +1,8 @@
 package graft.ops
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, ShortType, StructType}
 
 /** Connected components by alternating large-star / small-star
   * contraction (Kiveris, Lattanzi, Mirrokni, Rastogi, Vassilvitskii,
@@ -143,12 +144,12 @@ object ConnectedComponents {
     (out.createDataFrame(rdd, df.schema), w, release)
   }
 
-  /** Edge sets at or below this take the bounded-collect driver route
-    * in [[starContractionReleasable]] — the same bounded-collect
-    * contract [[graft.streaming.StreamingClusters.updateBatchMaintained]]
-    * documents for micro-batch folds (200k edges ≈ 3 MB of longs on
-    * the driver). Above it the distributed contraction loop runs
-    * unchanged, so a 100 TB pair graph never touches the driver. */
+  /** Edge lists of at most this many input rows take the driver fold
+    * in [[starContractionReleasable]] — the bounded collect
+    * [[graft.streaming.StreamingClusters.updateBatchMaintained]] makes
+    * too (200k edges ≈ 3 MB of longs on the driver). Longer ones run
+    * the distributed contraction loop, so a 100 TB pair graph never
+    * touches the driver. */
   val DriverFoldMaxEdges: Int = 200000
 
   /** Run alternating rounds to the unique fixpoint and return
@@ -186,7 +187,9 @@ object ConnectedComponents {
 
   /** As [[starContraction]], plus a release handle for the labels'
     * durable checkpoint copy on the reliable-checkpoint route (a
-    * no-op on the eager-local route). Spark never deletes reliable
+    * no-op on the eager-local route and on the driver fold, whose
+    * labels are an unpersisted local relation; the loop's labels are
+    * persisted). Spark never deletes reliable
     * checkpoint files on its own, so a long-lived session that
     * contracts per consultation strands one O(nodes) copy per call
     * unless something runs the handle; a caller that materializes or
@@ -202,6 +205,40 @@ object ConnectedComponents {
   private[graft] def starContractionReleasable(edges: DataFrame,
       maxRounds: Int, driverFoldMaxEdges: Int)
       : (DataFrame, () => Unit) = {
+    val sess = edges.sparkSession
+    // orient big→small once so round 1 can start on small-star's
+    // precondition without a wasted symmetrize (a null endpoint orients
+    // into a self loop: greatest/least skip nulls)
+    val oriented = edges
+      .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
+    // Driver fold: one bounded collect of the input rows as they come,
+    // one union-find; the same component minima as the loop below
+    // (StarContractionSpec pins the routes on both sides of the bound)
+    val head = graft.core.Bounded.collect(oriented, driverFoldMaxEdges)
+    if (head.isDefined) {
+      val pairs = head.get.filterNot(_.isNullAt(0))
+        .map(r => (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
+        .filter { case (a, b) => a != b }
+      val Array(fa, fb) = oriented.schema.fields
+      def asCol(v: Long, t: DataType): Any = t match {
+        case IntegerType => v.toInt
+        case ShortType => v.toShort
+        case _ => v
+      }
+      val rows = unionFindMin(pairs).toSeq.sortBy(_._1).map { case (id, rep) =>
+        Row(asCol(id, fa.dataType), asCol(rep, fb.dataType)) }
+      import scala.jdk.CollectionConverters._
+      lastRounds.set(0)
+      // one partition: a staged copy is one file, a scan of it one task
+      return (sess.createDataFrame(rows.asJava, StructType(Seq(
+        fa.copy(name = "id"), fb.copy(name = "rep")))).coalesce(1), () => ())
+    }
+    // drop self loops; truncate per round (see [[truncatedW]]). Planned
+    // on the CALLER's session — the width derivation needs the count.
+    var (e, prev, releaseE) = truncatedW(
+      oriented.filter(col("a") =!= col("b")).distinct(), sess)
+    var rounds = 0
+    var done = prev._1 == 0L
     // Scale the loop's shuffle width to the EDGE COUNT, not the session
     // default: every round pays two keyed aggregations and a join whose
     // exchanges inherit spark.sql.shuffle.partitions, and on a
@@ -220,55 +257,6 @@ object ConnectedComponents {
     // 100 TB regime) the loop simply runs on the caller's session —
     // plans byte-identical to an untouched session, AQE skew handling
     // intact.
-    val sess = edges.sparkSession
-    // drop self loops, orient big→small once so round 1 can start on
-    // small-star's precondition without a wasted symmetrize; truncate
-    // per round (see [[truncatedW]]). Planned on the CALLER's session —
-    // the width derivation needs the count first, same as before.
-    var (e, prev, releaseE) = truncatedW(edges
-      .select(greatest(col("a"), col("b")).as("a"), least(col("a"), col("b")).as("b"))
-      .filter(col("a") =!= col("b"))
-      .distinct(), sess)
-    var rounds = 0
-    var done = prev._1 == 0L
-    if (!done && prev._1 <= driverFoldMaxEdges) {
-      // Bounded-collect route: the distinct edge set is micro-batch-
-      // sized (the witness pass just counted it, and its blocks are
-      // already materialized in the cache), so the fixpoint comes from
-      // one driver-side union-find instead of O(log n) distributed
-      // rounds each paying two keyed shuffles at the ~50 ms job floor.
-      // Same bounded-collect contract as StreamingClusters'
-      // updateBatchMaintained fold; identical labels BY CONSTRUCTION
-      // (component minima — StarContractionSpec pins the two routes to
-      // each other), and a graph past the bound never touches the
-      // driver: the distributed loop below runs exactly as before.
-      val fields = e.schema.fields
-      val pairs = e.collect().map(r =>
-        (r.getAs[Number](0).longValue, r.getAs[Number](1).longValue))
-      val lbl = unionFindMin(pairs)
-      def asCol(v: Long, t: org.apache.spark.sql.types.DataType): Any =
-        t match {
-          case org.apache.spark.sql.types.IntegerType => v.toInt
-          case org.apache.spark.sql.types.ShortType => v.toShort
-          case _ => v
-        }
-      val rows = lbl.toSeq.sortBy(_._1).map { case (id, rep) =>
-        org.apache.spark.sql.Row(
-          asCol(id, fields(0).dataType), asCol(rep, fields(1).dataType)) }
-      val schema = org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField(
-          "id", fields(0).dataType, fields(0).nullable),
-        org.apache.spark.sql.types.StructField(
-          "rep", fields(1).dataType, fields(1).nullable)))
-      import scala.jdk.CollectionConverters._
-      val labels = sess.createDataFrame(rows.asJava, schema)
-      labels.persist()
-      labels.count()
-      e.unpersist()
-      releaseE()
-      lastRounds.set(0)
-      return (labels, () => ())
-    }
     val sessionParts = sess.sessionState.conf.numShufflePartitions
     val loopParts = math.max(1, math.min(
       sessionParts, (prev._1 / 100000L + 1).toInt))

@@ -106,9 +106,9 @@ private[queries] trait ExtensionsSketches { this: Extensions.type =>
         .select($"doc_id", $"t".cast("binary").as("media"))
         .as[graft.ops.MediaIn]
       // materialize the per-doc packed hash table (~40 bytes/doc) once:
-      // the pair machinery consumes it from five subtrees (band window,
-      // candidate self-join, star route, two verify joins), and without
-      // the persist each subtree re-ran the regexp + trigram-histogram
+      // the pair machinery consumes it from three subtrees (the band
+      // aggregation and two verify joins), and without the persist each
+      // subtree re-ran the regexp + trigram-histogram
       // + 64-term threshold pipeline over its own full parquet scan
       val hs = persisted(s, "x87_hashes", dir) {
         graft.ops.PHash.bandedHashes(
@@ -289,8 +289,8 @@ private[queries] trait ExtensionsSketches { this: Extensions.type =>
       // per-doc distinct fold inside ONE narrow map — the frame-row
       // fan-out, the distinct exchange and the collect_set aggregation
       // all disappear. The one-row-per-doc set table is then persisted:
-      // it feeds the bucket explode, the capped-pair window/self-join/
-      // star routes and two broadcast verify builds (the broadcast
+      // it feeds the bucket explode into the capped-pair aggregation
+      // and two broadcast verify builds (the broadcast
       // builds are what make the persist pay — x87's lesson; a persist
       // of the row-level fh table measured NEGATIVE because its map
       // side fed one reusable exchange)

@@ -59,10 +59,10 @@ object StreamingClusters {
   }
 
   /** Current (id, rep) keeper labels from the journal — component
-    * minima, identical semantics to x28/x73/x74. Returns a PERSISTED
-    * frame (contraction materializes its fixpoint); callers that are
-    * done with it may unpersist. Empty store → empty labels. The
-    * contraction's durable checkpoint copy (reliable-checkpoint
+    * minima, identical semantics to x28/x73/x74: the driver fold's
+    * unpersisted local relation, or past its bound a PERSISTED frame
+    * (callers done with it may unpersist). Empty store → empty labels.
+    * The contraction's durable checkpoint copy (reliable-checkpoint
     * sessions) is released HERE, after the labels are materialized —
     * the persisted blocks serve the caller, and a consultation cadence
     * must not strand one labels checkpoint per read in
@@ -114,10 +114,9 @@ object StreamingClusters {
     *
     * Routing: the quotient graph is O(micro-batch) BY CONSTRUCTION, so
     * when the batch's distinct edge set fits under
-    * `driverFoldMaxEdges` the fold runs driver-side — one bounded
-    * collect, one narrow label-table lookup scan, a path-compressed
-    * union-find, one upsert (the same bounded-collect contract the
-    * rest of the engine documents for batch-sized state). A larger
+    * `driverFoldMaxEdges` the fold runs driver-side — one
+    * [[graft.core.Bounded]] collect, one narrow label-table lookup
+    * scan, a path-compressed union-find, one upsert. A larger
     * micro-batch takes the fully distributed quotient-contraction
     * path below — identical fixpoint, spec-pinned on both routes — so
     * nothing breaks when a backfill replays a huge batch. */
@@ -139,15 +138,13 @@ object StreamingClusters {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       // ONE action both routes the batch and (on the fast path)
-      // delivers its edges: ≤ bound+1 rows come back, so total ≤ bound
-      // means head IS the complete edge set
-      val head = incr.limit(driverFoldMaxEdges + 1).collect()
-      if (head.isEmpty) ()
-      else if (head.length <= driverFoldMaxEdges)
-        foldDriver(spark, store,
+      // delivers its edges
+      graft.core.Bounded.collect(incr, driverFoldMaxEdges) match {
+        case Some(head) => if (head.nonEmpty) foldDriver(spark, store,
           head.map(r => (r.getLong(0), r.getLong(1))), batchId, nBuckets)
-      else updateBatchMaintainedDistributed(spark, store, incr, batchId,
-        nBuckets)
+        case None => updateBatchMaintainedDistributed(spark, store, incr,
+          batchId, nBuckets)
+      }
     } finally { incr.unpersist(); () }
   }
 

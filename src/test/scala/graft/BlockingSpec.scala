@@ -1,8 +1,10 @@
 package graft
 
 import graft.ops.Blocking
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.{functions => F}
+import org.apache.spark.sql.types._
+import org.apache.spark.sql.{DataFrame, Row, functions => F}
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
@@ -52,6 +54,93 @@ class BlockingSpec extends AnyFunSuite with Matchers with SparkFixture {
     capped.as[(Long, Long)].collect().sorted shouldBe
       uncapped.as[(Long, Long)].collect().sorted
     capped.count() shouldBe 15L // C(6,2), with (1,2) deduped
+  }
+
+  /** The window + self-join + star formulation `cappedBandPairs` had
+    * before it became one aggregation per block key: a window count
+    * and min over the block, a banded self-join of the under-cap rows,
+    * and the min-doc star of the over-cap ones. Kept as the reference
+    * model. */
+  private def windowJoinPairs(bands: DataFrame, cap: Int): DataFrame = {
+    val w = Window.partitionBy(col("band"), col("k1"), col("k2"))
+    val sized = bands
+      .withColumn("__bcnt", count(lit(1)).over(w))
+      .withColumn("__keeper", min(col("doc_id")).over(w))
+    val small = sized.filter(col("__bcnt") <= cap)
+      .select(col("doc_id"), col("band"), col("k1"), col("k2"))
+    val allPairs = small.as("a")
+      .join(small.as("b"),
+        col("a.band") === col("b.band") && col("a.k1") === col("b.k1") &&
+        col("a.k2") === col("b.k2") && col("a.doc_id") < col("b.doc_id"))
+      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
+    val star = sized
+      .filter(col("__bcnt") > cap && col("doc_id") =!= col("__keeper"))
+      .select(col("__keeper").as("doc_a"), col("doc_id").as("doc_b"))
+    allPairs.unionByName(star).distinct()
+  }
+
+  private def sortedPairs(df: DataFrame): Seq[(Long, Long)] =
+    df.collect().map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
+
+  test("cappedBandPairs equals the window + self-join + star model on " +
+       "random blocks of cap-1, cap, cap+1 and 10×cap rows, with repeated " +
+       "and null doc ids, multi-band collisions, Int and Long bands") {
+    val cap = 8
+    val schema = StructType(Seq(StructField("doc_id", LongType),
+      StructField("band", IntegerType), StructField("k1", LongType),
+      StructField("k2", LongType)))
+    val rnd = new scala.util.Random(20261019L)
+    for (trial <- 1 to 4) withClue(s"trial $trial: ") {
+      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
+      var key = 0L
+      def block(band: Int, docs: Seq[java.lang.Long]): Seq[java.lang.Long] = {
+        key += 1
+        docs.foreach(d => rows += Row(d, band, key, key % 3))
+        docs
+      }
+      def draw(n: Int): Seq[java.lang.Long] =
+        rnd.shuffle((0L until 300L).toList).take(n).map(Long.box)
+      val under = block(0, draw(cap - 1))
+      block(1, draw(cap))
+      block(2, draw(cap + 1))
+      block(0, draw(10 * cap))
+      Seq.fill(5)(1 + rnd.nextInt(2 * cap)).foreach(n => block(rnd.nextInt(3), draw(n)))
+      // the under-cap block's members collide again in two more bands
+      block(1, under)
+      block(2, under.take(3) ++ draw(2))
+      // a repeated (doc, band) row inside an under-cap block
+      block(0, draw(cap - 2) ++ Seq(under.head, under.head))
+      // null doc ids count toward the block size: cap docs plus a null
+      // is cap+1 rows, so it stars; a small block keeps its pairs
+      block(1, draw(cap) :+ null)
+      block(2, draw(3) :+ null)
+      block(0, Seq(null, null))
+      val intBands = spark.createDataFrame(
+        java.util.Arrays.asList(rnd.shuffle(rows.toList): _*), schema)
+      for (bands <- Seq(intBands, intBands.withColumn("band", col("band").cast("long")))) {
+        val want = sortedPairs(windowJoinPairs(bands, cap))
+        want.size should be > 10 * cap
+        sortedPairs(Blocking.cappedBandPairs(bands, cap)) shouldBe want
+      }
+    }
+  }
+
+  test("cappedBandPairs plans one exchange on the block key before the " +
+       "distinct's, with no window and no join") {
+    val s = spark
+    import s.implicits._
+    val bands = Seq((1L, 0, 1L, 1L), (2L, 0, 1L, 1L), (3L, 1, 2L, 2L))
+      .toDF("doc_id", "band", "k1", "k2")
+    val p = Blocking.cappedBandPairs(bands, cap = 8)
+      .queryExecution.executedPlan.toString
+    p should not include "Window"
+    p should not include "Join"
+    p should not include "CartesianProduct"
+    // top-down: the distinct's exchange, then the block key's
+    val keys = """Exchange hashpartitioning\(([^)]*)\)""".r
+      .findAllMatchIn(p).map(_.group(1).split(", ").toList.map(_.takeWhile(_ != '#')))
+      .toList
+    keys.map(_.init) shouldBe List(List("doc_a", "doc_b"), List("band", "k1", "k2"))
   }
 
   test("cappedPrefixPairs: 10k identical-prefix same-length docs make " +

@@ -42,6 +42,21 @@ package graft {
       windows("x73_cc_star_contraction")
     }
 
+    test("x73 at sf0.001 builds its pairs and labels in at most 10 Spark jobs") {
+      // the band rows cross one exchange and the labels come from one
+      // bounded collect: 10 jobs, where the window + self-join pair
+      // route and the witness fold took 20
+      val q = queries.Registry.byName("x73_cc_star_contraction")
+      def run(): Unit = {
+        queries.Extensions.clearPersistedIntermediates()
+        q.run(spark, sf0001).write.format("noop").mode("overwrite").save()
+      }
+      run()
+      val (_, c) = RunCounters.window(spark)(run())
+      c.jobs should be > 0L
+      c.jobs should be <= 10L
+    }
+
     test("a DimStore upsert's commit-session jobs and write plans are in the window") {
       val s = spark
       import s.implicits._

@@ -103,6 +103,34 @@ class StarContractionSpec extends AnyFunSuite with Matchers with SparkFixture {
     }
   }
 
+  test("the fold route at exactly driverFoldMaxEdges input rows and the " +
+       "loop at one row more both equal the union-find model, with " +
+       "duplicates, self loops and null endpoints in the input") {
+    val s = spark
+    import s.implicits._
+    val rnd = new scala.util.Random(20261019L)
+    val pairs = Seq.fill(120)((rnd.nextInt(90).toLong, rnd.nextInt(90).toLong))
+    val input: Seq[(java.lang.Long, java.lang.Long)] =
+      (pairs ++ pairs.take(15) ++ Seq((5L, 5L), (91L, 91L)))
+        .map { case (a, b) => (Long.box(a), Long.box(b)) } ++
+        Seq((Long.box(7L), null), (null, Long.box(92L)), (null, null))
+    val rows = input.size
+    val want = model(pairs)
+    want should not be empty
+    def run(bound: Int): Map[Long, Long] = {
+      val (out, release) = ConnectedComponents
+        .starContractionReleasable(input.toDF("a", "b"), 32, bound)
+      val m = out.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      out.unpersist()
+      release()
+      m
+    }
+    run(rows) shouldBe want
+    ConnectedComponents.lastRounds.get() shouldBe 0
+    run(rows - 1) shouldBe want
+    ConnectedComponents.lastRounds.get() should be >= 1
+  }
+
   test("hash-range node ids (full signed Long range) contract without " +
        "arithmetic overflow") {
     // xxhash64 doc ids span the whole signed Long range; a Σ(a+b)
