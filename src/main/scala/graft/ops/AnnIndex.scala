@@ -3,8 +3,6 @@ package graft.ops
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.core.ParquetFooter
-
 /** Persisted, incrementally-maintained IVFADC index (Jégou/Douze/
   * Schmid, TPAMI 2011 §IV) over a versioned [[DimStore]] table — the
   * retrieval family's DIM-layer: train the coarse quantizer + product-
@@ -254,9 +252,8 @@ object AnnIndex {
     ()
   }
 
-  /** The frozen model as its persisted row set — shared by the inline
-    * build and the staged-rebuild flip so both publish byte-identical
-    * model tables. */
+  /** The frozen model as its persisted row set, the layout
+    * [[readModel]] parses back. */
   private def modelRowsDf(spark: SparkSession, model: Model,
                           dim: Int, m: Int, k: Int): DataFrame = {
     import spark.implicits._
@@ -534,15 +531,7 @@ object AnnIndex {
     * commit and the pointer flip leaves the tombstones committed but
     * unreferenced — the vector stays servable until the at-least-once
     * redelivery (idempotent: same pk, same LWW outcome) or any later
-    * flip publishes the newer codes version (AnnIndexSpec pins both).
-    *
-    * REFUSED while a staged rebuild is pending: the flip adopts
-    * staged codes + re-encoded pending appends wholesale, which would
-    * silently RESURRECT anything tombstoned during the build window
-    * (the staged corpus snapshot predates the delete). Same
-    * loud-over-wrong stance as the orphaned-rebuild guard; retry
-    * after the flip, or route deletes through the corpus before the
-    * rebuild trains. */
+    * flip publishes the newer codes version (AnnIndexSpec pins both). */
   def delete(spark: SparkSession, path: String, ids: DataFrame,
              idCol: String, ver: Long): Unit = {
     val ptr = resolvedPtr(spark, path)
@@ -550,14 +539,6 @@ object AnnIndex {
     if (!latestModelV.contains(ptr.modelV)) throw new IllegalStateException(
       s"ANN index at $path has an unpublished rebuild commit — construct " +
       "an Ingestor (which recovers orphaned rebuilds) before deleting")
-    val sroot = new org.apache.hadoop.fs.Path(stagingRoot(path))
-    val fs = hfs(spark, stagingRoot(path))
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty)
-      throw new IllegalStateException(
-        s"ANN index at $path has a staged rebuild in flight — its flip " +
-        "would resurrect rows tombstoned now; flip (or sweep) the " +
-        "staging dir first, or route the delete through " +
-        "Ingestor.ingestDelete (which spills it for the flip to re-apply)")
     val model = readModel(spark, path)
     // strictly greater, not merely different: a STALE version (a
     // takedown redelivered after a full rebuild re-floored the
@@ -583,8 +564,9 @@ object AnnIndex {
   }
 
   /** The tombstone commit itself — shared by the guarded standalone
-    * [[delete]] and [[Ingestor.ingestDelete]] (whose staging spill
-    * makes the guard unnecessary). */
+    * [[delete]] and [[Ingestor.ingestDelete]] (whose counter version
+    * is above the serving build by construction, and whose
+    * constructor already recovered any orphaned rebuild). */
   private def deleteImpl(spark: SparkSession, path: String,
       ids: DataFrame, idCol: String, ver: Long,
       crashAfter: Option[String]): Unit = {
@@ -639,24 +621,14 @@ object AnnIndex {
     * tombstoned snapshot (answers unchanged) until the purge is
     * re-run, which finds nothing left to delete on the latest version
     * and just completes the flip (idempotent roll-forward, the same
-    * redelivery-heals contract as delete/append). REFUSED while a
-    * staged rebuild is pending, like [[delete]]: the purge's pointer
-    * flip would race the staged flip's commit tail — and the rebuild
-    * is about to replace the codes table wholesale anyway. Returns
-    * the number of rows reclaimed. */
+    * redelivery-heals contract as delete/append). Returns the number
+    * of rows reclaimed. */
   def purgeTombstones(spark: SparkSession, path: String): Long = {
     val ptr = resolvedPtr(spark, path)
     val latestModelV = DimStore.currentVersion(modelPath(path))
     if (!latestModelV.contains(ptr.modelV)) throw new IllegalStateException(
       s"ANN index at $path has an unpublished rebuild commit — construct " +
       "an Ingestor (which recovers orphaned rebuilds) before purging")
-    val sroot = new org.apache.hadoop.fs.Path(stagingRoot(path))
-    val fs = hfs(spark, stagingRoot(path))
-    if (fs.exists(sroot) && fs.listStatus(sroot).nonEmpty)
-      throw new IllegalStateException(
-        s"ANN index at $path has a staged rebuild in flight — its flip " +
-        "replaces the codes table wholesale (purging now buys nothing " +
-        "and the pointer flips would race); flip or sweep staging first")
     // allowEmpty: a fully-tombstoned index (every remaining vector
     // taken down) must PURGE to an empty-but-readable codes table, not
     // wedge the maintenance cadence — maintain()'s docstring promises
@@ -670,15 +642,16 @@ object AnnIndex {
     purged
   }
 
-  /** Reconstruct a [[Model]] from its persisted row form (the
-    * [[modelRowsDf]] layout) — shared by [[readModel]] (pointer-pinned
-    * commit-log read) and the staged-rebuild flip (plain staging
-    * parquet read), so both deserialize bit-identically. */
-  private def parseModelRows(rows: Array[org.apache.spark.sql.Row],
-                             buildVer: Long, what: String): Model = {
+  /** The frozen model, reconstructed bit-exactly from the PUBLISHED
+    * (pointer-pinned) model snapshot — one bounded collect:
+    * |centroids| + m·k rows in the [[modelRowsDf]] layout. */
+  def readModel(spark: SparkSession, path: String): Model = {
+    val ptr = resolvedPtr(spark, path)
+    val rows = DimStore.read(spark, modelPath(path), ptr.modelV)
+      .select("key", "kind", "i1", "i2", "vals").collect()
     val shape = rows.find(_.getString(1) == "shape")
       .getOrElse(throw new IllegalStateException(
-        s"$what has no shape row — not a persisted ANN model"))
+        s"ANN index at $path has no shape row — not a persisted ANN model"))
     val dim = shape.getLong(2).toInt
     val m = shape.getLong(3).toInt
     val k = shape.getSeq[Double](4).head.toInt
@@ -692,17 +665,7 @@ object AnnIndex {
     val baseline = rows.find(_.getString(1) == "stats")
       .map(_.getSeq[Double](4).head).getOrElse(Double.NaN)
     Model(cents, ProductQuantizer.PqModel(dim, m, k, cbs), baseline,
-      buildVer)
-  }
-
-  /** The frozen model, reconstructed bit-exactly from the PUBLISHED
-    * (pointer-pinned) model snapshot — one bounded collect:
-    * |centroids| + m·k rows. */
-  def readModel(spark: SparkSession, path: String): Model = {
-    val ptr = resolvedPtr(spark, path)
-    val rows = DimStore.read(spark, modelPath(path), ptr.modelV)
-      .select("key", "kind", "i1", "i2", "vals").collect()
-    parseModelRows(rows, ptr.buildVer, s"ANN index at $path")
+      ptr.buildVer)
   }
 
   /** The PUBLISHED codes snapshot (pointer-pinned):
@@ -750,10 +713,10 @@ object AnnIndex {
     * [[purgeTombstones]] runs as part of this pass (BEFORE the layout
     * maintenance, so compaction measures the already-lean table).
     * Opt-in like `occupancyCheck` — the trigger check is one codes
-    * scan. Skipped quietly (purgedTombstones = 0) while a staged
-    * rebuild is in flight or the index carries an unpublished rebuild
-    * commit: the flip (or the Ingestor's recovery) reclaims wholesale
-    * there, and a maintenance cadence must not throw mid-stream. */
+    * scan. Skipped quietly (purgedTombstones = 0) while the index
+    * carries an unpublished rebuild commit: the Ingestor's recovery
+    * must roll that forward or back first, and a maintenance cadence
+    * must not throw mid-stream. */
   def maintain(spark: SparkSession, path: String,
                targetBucketBytes: Long = 256L * 1024 * 1024,
                targetFileBytes: Long = 128L * 1024 * 1024,
@@ -770,12 +733,9 @@ object AnnIndex {
     val purged =
       if (purgeTombstonesOver <= 0L) 0L
       else {
-        val sroot = new org.apache.hadoop.fs.Path(stagingRoot(path))
-        val fs = hfs(spark, stagingRoot(path))
-        val busy = fs.exists(sroot) && fs.listStatus(sroot).nonEmpty
         val published =
           DimStore.currentVersion(modelPath(path)).contains(ptr.modelV)
-        if (busy || !published) 0L
+        if (!published) 0L
         else if (fsck(spark, path).tombstones >= purgeTombstonesOver)
           purgeTombstones(spark, path)
         else 0L
@@ -823,16 +783,11 @@ object AnnIndex {
   }
 
   /** What one orchestrated ingest did: the batch's drift report, the
-    * model a triggered rebuild published (None when fit was fine, the
-    * policy is report-only, or a staged rebuild is still training),
-    * the [[Occupancy]] audit when this ingest was on the policy's
-    * check cadence, and — staged mode only — the error of a background
-    * build that FAILED (the append itself landed and the index keeps
-    * serving the old build; the caller decides whether to re-trigger
-    * or alert, instead of the stream dying on a rebuild-side fault). */
+    * model a triggered rebuild published (None when fit was fine or
+    * the policy is report-only), and the [[Occupancy]] audit when
+    * this ingest was on the policy's check cadence. */
   final case class Ingest(drift: IngestDrift, rebuilt: Option[Model],
-                          occupancy: Option[Occupancy] = None,
-                          rebuildFailed: Option[Throwable] = None)
+                          occupancy: Option[Occupancy] = None)
 
   /** When and how an [[Ingestor]] rebuilds — the DimRouter
     * [[graft.streaming.DimRouter.MaintenancePolicy]] shape for the
@@ -840,21 +795,6 @@ object AnnIndex {
     * triggering ingest (the synchronous maintenance window a
     * dim-scale index can afford); `false` only reports, for an
     * external maintenance window to act on.
-    *
-    * `stagedRebuild = true` (with `applyRebuild`) is the third mode —
-    * build-aside-then-flip: the triggering ingest only STARTS the
-    * rebuild; train + full re-encode run on a background thread as
-    * read-only Spark jobs landing in a plain staging directory (no
-    * commits — the single-maintainer contract holds because ingest()
-    * remains the only committer), while every ingest during the window
-    * keeps appending to the OLD index at its usual cost. The first
-    * ingest after staging completes pays only the COMMIT tail: model +
-    * codes commits from the pre-computed staging, re-encode of the
-    * batches that arrived during the window, one pointer flip. That
-    * removes the measured train+encode pause (SCALEPROBE: 19→85 s
-    * rebuild at 200k→1M vectors) from the micro-batch path — what a
-    * 100 TB corpus needs, since its rebuild window is hours, not a
-    * trigger interval.
     *
     * `occupancyCheckEvery = n` (> 0) audits [[occupancy]] every n-th
     * ingest and treats `retrainRecommended` (list balance past
@@ -866,110 +806,8 @@ object AnnIndex {
                                  rounds: Int, kmRounds: Int = 2,
                                  nBuckets: Int = 16,
                                  applyRebuild: Boolean = true,
-                                 stagedRebuild: Boolean = false,
                                  occupancyCheckEvery: Int = 0,
                                  occupancySkewFactor: Double = 4.0)
-
-  /** Hadoop FS handle for staging-path manipulation. */
-  private def hfs(spark: SparkSession, p: String) =
-    new org.apache.hadoop.fs.Path(p)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-
-  private def stagingRoot(path: String) = s"$path/_staging"
-  /** Marker written LAST by [[trainAndStage]]: a staging dir carrying
-    * it holds a complete (model, codes) artifact set a flip — or a
-    * restart's roll-forward — can publish. */
-  private val StagedOk = "_STAGED_OK"
-  /** Staging metadata written before [[StagedOk]]: the RESERVED build
-    * version baked into the staged codes files and the bucket fan-out
-    * they were laid out with — what lets the flip (possibly a
-    * restart's, under a re-configured policy) ADOPT the files
-    * as-written instead of rewriting the corpus through the commit
-    * log. */
-  private val StagedMeta = "_STAGED_META"
-
-  /** How far above the triggering ingest's counter a staged rebuild
-    * RESERVES its build version. Baking the version into the staged
-    * codes at train time is what makes the flip an O(metadata +
-    * pending) file adoption instead of an O(corpus) rewrite — but the
-    * version must still dominate every append committed during the
-    * build window, so the reservation leaves headroom for 2^20
-    * during-window batches (a week of 100ms micro-batches; a window
-    * that outlives it falls back to the rewrite commit, correct but
-    * corpus-priced). Versions are LWW ordinals, not sequence numbers
-    * — gaps are meaningless to every reader. */
-  private val VersionHeadroom = 1L << 20
-
-  private def writeSmall(spark: SparkSession, p: String, body: String): Unit = {
-    val out = hfs(spark, p).create(new org.apache.hadoop.fs.Path(p), true)
-    out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    out.close()
-  }
-
-  private def readStagedMeta(spark: SparkSession,
-                             dir: String): Option[(Long, Int)] = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/$StagedMeta")
-    val fs = hfs(spark, dir)
-    if (!fs.exists(p)) None
-    else {
-      val in = fs.open(p)
-      val body =
-        try new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8)
-        finally in.close()
-      val kv = body.linesIterator.flatMap { l =>
-        l.split("=", 2) match {
-          case Array(k, v) => Some(k -> v.trim)
-          case _ => None
-        }
-      }.toMap
-      for (v <- kv.get("ver"); b <- kv.get("buckets"))
-        yield (v.toLong, b.toInt)
-    }
-  }
-
-  /** Train + re-encode WITHOUT committing: everything [[buildImpl]]
-    * computes, landed under `stagingDir` instead of the commit log —
-    * `$stagingDir/model` (the [[modelRowsDf]] row form, build version
-    * resolved at flip time) and `$stagingDir/codes` written in the
-    * codes TABLE'S physical format (bucketed by the dim-store's own
-    * hash layout, `__batch_ver` pre-baked at the reserved version),
-    * then [[StagedMeta]] and the [[StagedOk]] marker. Staging in
-    * table format is what makes the flip adopt files instead of
-    * rewriting the corpus; everything the flip needs is DURABLE, so a
-    * crash between staging completion and the flip is resumable from
-    * disk on restart. Deterministic (same KMeans/PQ/encode path), so
-    * a flip over these artifacts publishes byte-identically to an
-    * inline [[buildTrained]] over the same corpus snapshot. */
-  private def trainAndStage(spark: SparkSession, corpus: DataFrame,
-      idCol: String, vCol: String, policy: RebuildPolicy,
-      stagingDir: String, reservedVer: Long): Unit = {
-    val cents = KMeans.train(corpus.select(col(idCol), col(vCol)),
-      idCol, vCol, policy.nLists, policy.kmRounds)
-    val lists = corpus
-      .withColumn("list_id", assign(cents, col(vCol)))
-      .select(col(idCol), col("list_id"),
-        residual(cents, col("list_id"), col(vCol)).as("__rv"))
-    val pq = ProductQuantizer.train(lists, idCol, "__rv",
-      policy.dim, policy.m, policy.k, policy.rounds)
-    val baseline = lists
-      .agg(avg(ProductQuantizer.quantizationError(col("__rv"), pq)))
-      .head().getDouble(0)
-    val model = Model(cents, pq, baseline, 0L)
-    modelRowsDf(spark, model, policy.dim, policy.m, policy.k)
-      .filter(col("kind") =!= "bver") // build version resolved at flip
-      .write.mode("overwrite").parquet(s"$stagingDir/model")
-    val bcol = DimStore.bucketColName
-    encodeWith(corpus, idCol, vCol, model)
-      .withColumn("__batch_ver", lit(reservedVer))
-      .withColumn(bcol, DimStore.bucketColumn("vec_id", policy.nBuckets))
-      .repartition(col(bcol))
-      .write.mode("overwrite").partitionBy(bcol)
-      .parquet(s"$stagingDir/codes")
-    writeSmall(spark, s"$stagingDir/$StagedMeta",
-      s"ver=$reservedVer\nbuckets=${policy.nBuckets}\n")
-    hfs(spark, stagingDir).create(
-      new org.apache.hadoop.fs.Path(s"$stagingDir/$StagedOk"), true).close()
-  }
 
   /** Orchestrated continuous ingest — the closure of [[append]]'s
     * drift recommendation into an actual maintenance action, so no
@@ -982,18 +820,12 @@ object AnnIndex {
     *  2. when the drift report recommends a rebuild — or, on the
     *     policy's cadence, the [[occupancy]] audit flags coarse-
     *     quantizer skew — and the policy applies it, [[buildTrained]]
-    *     runs over the caller's corpus supplier (inline mode), or a
-    *     background thread stages the train + re-encode and a later
-    *     ingest pays only the commit tail (staged mode; see
-    *     [[RebuildPolicy]]). The index stores CODES, not raw vectors,
-    *     so the corpus authority is the caller's embedding table. The
-    *     supplier is invoked ONCE per rebuild and must return a
-    *     CONSISTENT snapshot covering every batch ingested so far
-    *     (a versioned table read gives this for free); batches that
-    *     arrive while a staged build trains are SPILLED to the staging
-    *     dir as parquet at ingest time and re-encoded under the new
-    *     model at the flip, so none are lost to the rebuild's
-    *     full-replace commit — and a restart mid-window loses nothing;
+    *     runs inline over the caller's corpus supplier. The index
+    *     stores CODES, not raw vectors, so the corpus authority is the
+    *     caller's embedding table. The supplier is invoked ONCE per
+    *     rebuild and must return a CONSISTENT snapshot covering every
+    *     batch ingested so far (a versioned table read gives this for
+    *     free);
     *  3. the counter RE-FLOORS from the rebuild's version ceiling,
     *     so the next batch orders strictly above the rebuild while a
     *     REPLAYED pre-rebuild batch (redelivered at its old version)
@@ -1001,81 +833,13 @@ object AnnIndex {
     *     effects out, the K2 contract.
     *
     * Single-maintainer per index, like [[build]]/[[append]]: ingest()
-    * is the ONLY committer — the staged-rebuild thread runs read-only
-    * jobs into plain staging parquet and never touches a commit log. */
+    * and ingestDelete() are the index's only committers. */
   final class Ingestor(spark: SparkSession, path: String,
                        idCol: String, vCol: String,
                        policy: RebuildPolicy,
                        corpus: () => DataFrame) {
     private val nextVer = new java.util.concurrent.atomic.AtomicLong(0L)
     private var ingests = 0L
-
-    /** One in-flight staged rebuild: the background thread publishes
-      * `outcome` last (volatile), so `outcome.isDefined` observed from
-      * ingest() implies the staging parquet (model + codes + marker)
-      * is fully written. The thread's Spark jobs run in the
-      * `ann_rebuild` scheduler pool — when the session runs
-      * `spark.scheduler.mode=FAIR` (the documented deployment for a
-      * live-ingest index), the hours-long train/re-encode shares
-      * executors FAIRLY with micro-batch appends instead of queueing
-      * ahead of them FIFO; under the default FIFO scheduler the
-      * property is inert. Local properties are per-thread, so only the
-      * staging jobs land in the pool. */
-    private final class Staging(corpusSnap: DataFrame, val dir: String,
-                                val reservedVer: Long) {
-      val pendingSeq = new java.util.concurrent.atomic.AtomicLong(0L)
-      @volatile var outcome: Option[Either[Throwable, Unit]] = None
-      val thread: Thread = new Thread(
-        () => {
-          spark.sparkContext
-            .setLocalProperty("spark.scheduler.pool", "ann_rebuild")
-          try {
-            stagingDelay()
-            trainAndStage(spark, corpusSnap, idCol, vCol, policy, dir,
-              reservedVer)
-            outcome = Some(Right(()))
-          } catch {
-            // Record EVERY outcome — then rethrow fatals. A fatal JVM
-            // error (OutOfMemoryError, StackOverflowError) on the
-            // background train still propagates to the thread's
-            // uncaught-exception handler, but `outcome` no longer
-            // stays None forever: without the record, the main stream
-            // keeps committing with staging=Some wedged — every later
-            // ingest spills its batch to the pending dir unbounded
-            // and no rebuild can ever trigger again until a process
-            // restart. Recording first restores the wedge-free
-            // contract (the next ingest surfaces rebuildFailed and
-            // sweeps the debris) while the rethrow preserves the
-            // must-propagate intent.
-            case t: Throwable =>
-              outcome = Some(Left(t))
-              if (!scala.util.control.NonFatal(t)) throw t
-          }
-        },
-        s"ann-staged-rebuild-$path".replace('/', '-'))
-      thread.setDaemon(true)
-    }
-    private var staging: Option[Staging] = None
-    /** Test hook: runs first on the staged build's background thread —
-      * lets a spec hold the build window open deterministically (a
-      * real fixture-scale train can finish faster than the ingests the
-      * window is supposed to overlap). */
-    private[graft] var stagingDelay: () => Unit = () => ()
-    /** Test hook: simulates the process dying inside [[flipStaged]]
-      * after the named commit ("model" | "codes" | "pending") — pins
-      * the restart roll-forward in StreamingAnnIndexSpec. */
-    private[graft] var flipCrashAfter: Option[String] = None
-    /** Test hook: a TRANSIENT (non-fatal, process-survives) fault
-      * inside [[flipStaged]] after the named commit — one-shot, so
-      * the in-process recovery retry succeeds. Pins the
-      * flip-fault-does-not-wedge-the-stream contract. */
-    private[graft] var flipFaultAfter: Option[String] = None
-    private def maybeFault(at: String): Unit =
-      if (flipFaultAfter.contains(at)) {
-        flipFaultAfter = None
-        throw new RuntimeException(
-          s"injected transient flip fault after '$at' commit")
-      }
 
     // restart recovery BEFORE the counter floor: a rebuild that crashed
     // between its commits and its pointer flip must be rolled forward
@@ -1088,186 +852,6 @@ object AnnIndex {
     /** Test/monitoring hook: the version the next batch will commit
       * at. */
     private[graft] def peekVer: Long = nextVer.get()
-    /** Test/monitoring hook: a staged rebuild is training. */
-    private[graft] def stagingActive: Boolean = staging.isDefined
-    /** Test/monitoring hook: the in-flight staged build's artifacts
-      * are complete — the next ingest pays the commit tail. */
-    private[graft] def stagingReady: Boolean =
-      staging.exists(_.outcome.isDefined)
-    /** Test hook: block until the in-flight staged build's artifacts
-      * are ready (the flip still waits for the next ingest). */
-    private[graft] def awaitStaged(): Unit =
-      staging.foreach(_.thread.join())
-
-    private def fsPath(s: String) = new org.apache.hadoop.fs.Path(s)
-
-    /** During-window batches spilled by ingest(), in arrival order —
-      * re-read from the staging dir at flip (or restart) time. */
-    private def pendingDirs(dir: String): Seq[String] = {
-      val fs = hfs(spark, path)
-      val p = fsPath(s"$dir/pending")
-      if (!fs.exists(p)) Seq.empty
-      else fs.listStatus(p).toSeq
-        .filter(s => s.isDirectory && s.getPath.getName.startsWith("p"))
-        .flatMap(s => scala.util.Try(s.getPath.getName.drop(1).toLong)
-          .toOption.map(_ -> s.getPath.toString))
-        .sortBy(_._1).map(_._2)
-    }
-
-    /** Sweep a staging dir. The `_STAGED_OK` marker goes FIRST — a
-      * one-file delete is far more likely to succeed than the tree
-      * delete, and once the marker is gone a partially-swept dir can
-      * never be mistaken for a publishable build by a later restart's
-      * [[recoverOrphanedRebuild]] (leftover complete dirs are live
-      * ammunition, not just a space leak: absent the marker+freshness
-      * veto they would re-publish a stale model). A failed delete is
-      * LOUD (retried once, then logged) rather than swallowed. */
-    private def deleteStaging(dir: String): Unit = {
-      val fs = hfs(spark, path)
-      def attempt(): Unit = {
-        fs.delete(fsPath(s"$dir/$StagedOk"), false) // disarm first
-        fs.delete(fsPath(dir), true)
-        fs.delete(fsPath(stagingRoot(path)), false) // drop when now empty
-        ()
-      }
-      try attempt()
-      catch {
-        case _: java.io.IOException =>
-          try attempt()
-          catch {
-            case e: java.io.IOException =>
-              org.slf4j.LoggerFactory.getLogger(getClass).warn(
-                s"ANN staging sweep failed twice for $dir — leftover " +
-                s"debris is neutralized by the removed $StagedOk marker " +
-                s"and the recovery freshness veto, but the space leaks " +
-                s"until the next sweep", e)
-          }
-      }
-    }
-
-    /** Publish a completed staged build FROM DISK: commit the model,
-      * ADOPT the staged codes files into the commit log (they were
-      * written in the table's physical format at the RESERVED
-      * version, so the commit is O(files) metadata — hard links plus
-      * one manifest — not an O(corpus) rewrite), re-encode the
-      * spilled during-window batches, then ONE pointer flip — readers
-      * stay on the old index byte-identically until the flip.
-      * Everything read here is durable staging parquet, so the same
-      * code path serves the live flip and a restart's roll-forward,
-      * and a crash anywhere before the flip leaves only superseded
-      * debris. Re-running after a partial flip is safe AT THE SAME
-      * reserved version: both tables are full-replace commits and the
-      * pending upserts re-merge identical rows (deterministic LWW
-      * tie-break), so the retry converges on identical content.
-      *
-      * Adoption requires the reserved version to dominate every
-      * committed append. Under the single-maintainer contract the
-      * only commits that can sit above it are a crashed flip's own
-      * debris (reserved..reserved+pendings), so the check is
-      * `floor ≤ reserved + pendings + 1`; a window that somehow
-      * burned through the 2^20 headroom falls back to the
-      * corpus-priced rewrite commit — correct, just not
-      * metadata-cheap.
-      *
-      * `floor` is the next unclaimed build version. On the live
-      * ingest path the counter IS that number (floored at
-      * construction, advanced by every append/rebuild — single
-      * maintainer), so the flip never re-derives it with
-      * [[nextBuildVer]]'s max-over-the-codes-table scan: that agg is
-      * column-pruned but still O(corpus rows), the one corpus-sized
-      * term this flip exists to not pay. Recovery paths (counter not
-      * yet floored) pass the scanned value explicitly. */
-    private def flipStaged(dir: String,
-                           floorOverride: Option[Long] = None): Model = {
-      val meta = readStagedMeta(spark, dir)
-      val pending = pendingDirs(dir)
-      val floor = floorOverride.getOrElse(nextVer.get())
-      val adopted = meta.filter { case (rv, _) =>
-        floor <= rv + pending.size + 1L }
-      val buildVer = adopted.map(_._1).getOrElse(floor)
-      val modelRows = ParquetFooter.read(spark, s"$dir/model")
-        .select("key", "kind", "i1", "i2", "vals").collect()
-      val model = parseModelRows(modelRows, buildVer,
-        s"staged ANN rebuild at $dir")
-      // shape comes from the STAGED artifacts, not the (possibly
-      // re-configured after a restart) policy — the artifacts are the
-      // authority on what was trained
-      commitFull(spark, modelPath(path),
-        modelRowsDf(spark, model, model.pq.dim, model.pq.m, model.pq.k),
-        pk = "key", ver = buildVer, nBuckets = 4)
-      maybeCrash(flipCrashAfter, "model")
-      maybeFault("model")
-      adopted match {
-        case Some((_, buckets)) =>
-          DimStore.adoptFullReplace(spark, codesPath(path),
-            s"$dir/codes", buckets)
-        case None =>
-          // headroom exhausted (or a pre-meta staging dir): re-bake
-          // the staged content through the commit log at `floor` —
-          // the staged files carry the stale reserved version and the
-          // physical bucket column, both replaced here
-          val staged = ParquetFooter.read(spark, s"$dir/codes")
-            .drop(DimStore.bucketColName).drop("__batch_ver")
-          commitFull(spark, codesPath(path), staged,
-            pk = "vec_id", ver = buildVer,
-            nBuckets = meta.map(_._2).getOrElse(policy.nBuckets))
-      }
-      maybeCrash(flipCrashAfter, "codes")
-      maybeFault("codes")
-      // all spilled during-window batches re-encode in ONE LWW commit:
-      // per-ROW versions (buildVer + arrival index + 1) preserve the
-      // arrival order a sequence of per-batch upserts would — a vec_id
-      // re-ingested in a later pending wins by version, so the merged
-      // commit converges on the identical final state while the flip
-      // stays a constant number of commits however long the window
-      // was. Chunked so the union plan stays bounded under a
-      // pathological backlog.
-      val v = buildVer + pending.size
-      pending.zipWithIndex.map { case (pd, i) =>
-        val spilled = ParquetFooter.read(spark, pd)
-        // an append spill carries (idCol, vCol); a DELETE spill
-        // ([[ingestDelete]]) carries only the ids — replay it as
-        // tombstones so a takedown issued during the build window
-        // holds in the new build too. Types mirror encodeWith's
-        // output exactly (list_id long, codes int) so mixed chunks
-        // union cleanly, and per-row versions keep arrival order —
-        // a delete then re-ingest (or vice versa) of the same id
-        // converges exactly as the live-index LWW sequence did.
-        val rows =
-          if (spilled.columns.contains(vCol))
-            encodeWith(spilled, idCol, vCol, model)
-          else spilled.select(col(idCol).as("vec_id") +:
-            lit(TombstoneList.toLong).as("list_id") +:
-            model.pq.codeCols.map(c => lit(0).cast("int").as(c)): _*)
-        rows.withColumn("__batch_ver", lit(buildVer + i + 1L))
-      }.grouped(64).foreach { chunk =>
-        DimStore.upsert(spark, codesPath(path),
-          chunk.reduce(_ unionByName _),
-          pk = "vec_id", versionCol = "__batch_ver",
-          nBuckets = policy.nBuckets)
-      }
-      maybeCrash(flipCrashAfter, "pending")
-      // Disarm the staged dir BEFORE the pointer flip: with every
-      // commit landed, removing the one-file _STAGED_OK marker
-      // persists "this build is published" durably — so even if the
-      // post-flip tree sweep fails (or the process dies between here
-      // and the sweep), no later restart can mistake the leftover
-      // tree for an unpublished build. A crash between this delete
-      // and bumpPtr is still safe: recovery's complete=None branch
-      // rolls the committed (model, codes) pair forward by version
-      // witness, needing no staged artifacts. Best-effort — the
-      // recovery freshness veto is the backstop if even this one-file
-      // delete fails.
-      try { hfs(spark, path).delete(fsPath(s"$dir/$StagedOk"), false); () }
-      catch { case _: java.io.IOException => () }
-      bumpPtr(spark, path,
-        modelV = DimStore.currentVersion(modelPath(path)).get,
-        codesV = DimStore.currentVersion(codesPath(path)).get,
-        buildVer = buildVer)
-      nextVer.set(v + 1L)
-      deleteStaging(dir)
-      model
-    }
 
     /** Restart recovery: a rebuild that crashed AFTER committing to
       * the model/codes tables but BEFORE its pointer flip leaves the
@@ -1276,145 +860,54 @@ object AnnIndex {
       * state (merging would mix models). Constructing an Ingestor
       * repairs it:
       *
-      *  - a COMPLETE staging dir (the [[StagedOk]] marker) → the whole
-      *    flip re-runs from the durable artifacts at a fresh version
-      *    above the debris — the staged rebuild survives the restart,
-      *    spilled during-window batches included;
-      *  - no staging, but the codes full-replace landed (an INLINE
-      *    rebuild's crash after both commits) → roll forward: flip the
-      *    pointer to the committed pair;
-      *  - no staging and only the model commit landed → roll back: the
-      *    published model content is re-committed as the new latest
-      *    (one tiny-table rewrite), so the codes chain — which was
-      *    never touched — is appendable again.
+      *  - the codes full-replace landed (a crash after both commits)
+      *    → roll forward: flip the pointer to the committed pair;
+      *  - only the model commit landed → roll back: the published
+      *    model content is re-committed as the new latest (one
+      *    tiny-table rewrite), so the codes chain — which was never
+      *    touched — is appendable again.
       *
-      * A COMPLETE staging dir found under a HEALTHY pointer (a crash
-      * anywhere between staging completion and the flip's first
-      * commit — the widest restart window) is PUBLISHED, not swept:
-      * the artifacts are valid (pending spills cover every
-      * during-window batch, and nothing can have been ingested
-      * between crash and restart), and at the motivating scale the
-      * train they hold is hours of work.
-      *
-      * Incomplete staging dirs (a failed or crashed-mid-train build)
-      * are swept in every branch; on a healthy index with no staging
-      * debris recovery is two commit-log metadata reads and a
-      * no-op. */
-    private def recoverOrphanedRebuild(): Unit = {
-      val fs = hfs(spark, path)
-      val rootP = fsPath(stagingRoot(path))
-      def stagingDirs: Seq[String] =
-        if (!fs.exists(rootP)) Seq.empty
-        else fs.listStatus(rootP).toSeq.filter(_.isDirectory)
-          .map(_.getPath.toString)
-      def sweepAll(): Unit = stagingDirs.foreach(deleteStaging)
-      // FRESHNESS VETO: a complete staging dir is publishable ONLY if
-      // its reserved version still dominates every committed append —
-      // `nextBuildVer(scan) <= reservedVer + pendings + 1` holds for a
-      // build whose window covers everything committed (its pending
-      // spills ARE the post-snapshot batches), and fails the moment
-      // any append landed after the build was (or would have been)
-      // published: those rows are not in the dir's pending spills, so
-      // publishing would silently drop them and regress the model. A
-      // stale complete dir is reachable when a post-flip sweep failed
-      // (delete errors are best-effort on object stores); without the
-      // veto a later restart would re-publish it. No-meta dirs are
-      // never publishable from recovery (nothing proves their codes'
-      // baked version). The scan is O(corpus rows) column-pruned —
-      // recovery-path-only, the live flip never pays it.
-      def freshComplete(scanned: Long): Option[String] = stagingDirs
-        .filter(d => fs.exists(fsPath(s"$d/$StagedOk")))
-        .find(d => readStagedMeta(spark, d).exists { case (rv, _) =>
-          scanned <= rv + pendingDirs(d).size + 1L })
-      readPtr(spark, path) match {
-        case None => sweepAll() // nothing published: debris only
-        case Some(ptr) =>
-          val latestModel = DimStore.currentVersion(modelPath(path))
-          if (latestModel.forall(_ == ptr.modelV)) {
-            // healthy pointer: a complete FRESH staged build whose
-            // flip never started resumes here — publish it, then
-            // sweep whatever else is debris (stale complete dirs
-            // included: under a healthy pointer they are superseded)
-            val scanned = nextBuildVer(spark, path)
-            freshComplete(scanned).foreach(flipStaged(_, Some(scanned)))
-            sweepAll()
-          } else {
-            val scanned = nextBuildVer(spark, path)
-            freshComplete(scanned) match {
-              case Some(dir) =>
-                flipStaged(dir, Some(scanned))
-                sweepAll()
-              case None =>
-                val bver = DimStore.read(spark, modelPath(path))
-                  .filter(col("kind") === "bver")
-                  .select(col("i1")).collect().headOption.map(_.getLong(0))
-                val latestCodes = DimStore.currentVersion(codesPath(path))
-                val codesMax = DimStore.readIfExists(spark, codesPath(path))
-                  .map(_.agg(max(col("__batch_ver"))).head())
-                  .collect { case r if !r.isNullAt(0) => r.getLong(0) }
-                (bver, latestCodes) match {
-                  case (Some(b), Some(cv)) if codesMax.exists(_ >= b) =>
-                    // both commits landed: finish the flip
-                    bumpPtr(spark, path, latestModel.get, cv, b)
-                  case _ =>
-                    // model-only debris: restore the published content
-                    val pinned =
-                      DimStore.read(spark, modelPath(path), ptr.modelV)
-                    DimStore.rewrite(spark, modelPath(path), "key")(
-                      _ => pinned)
-                    bumpPtr(spark, path,
-                      DimStore.currentVersion(modelPath(path)).get,
-                      ptr.codesV, ptr.buildVer)
-                }
-                sweepAll()
-            }
+      * On a healthy index recovery is the pointer read plus one
+      * commit-log metadata read, and a no-op. */
+    private def recoverOrphanedRebuild(): Unit =
+      readPtr(spark, path).foreach { ptr =>
+        val latestModel = DimStore.currentVersion(modelPath(path))
+        if (!latestModel.forall(_ == ptr.modelV)) {
+          val bver = DimStore.read(spark, modelPath(path))
+            .filter(col("kind") === "bver")
+            .select(col("i1")).collect().headOption.map(_.getLong(0))
+          val latestCodes = DimStore.currentVersion(codesPath(path))
+          val codesMax = DimStore.readIfExists(spark, codesPath(path))
+            .map(_.agg(max(col("__batch_ver"))).head())
+            .collect { case r if !r.isNullAt(0) => r.getLong(0) }
+          (bver, latestCodes) match {
+            case (Some(b), Some(cv)) if codesMax.exists(_ >= b) =>
+              // both commits landed: finish the flip
+              bumpPtr(spark, path, latestModel.get, cv, b)
+            case _ =>
+              // model-only debris: restore the published content
+              val pinned = DimStore.read(spark, modelPath(path), ptr.modelV)
+              DimStore.rewrite(spark, modelPath(path), "key")(_ => pinned)
+              bumpPtr(spark, path,
+                DimStore.currentVersion(modelPath(path)).get,
+                ptr.codesV, ptr.buildVer)
           }
+        }
       }
-    }
 
-    /** Deletion through the CONTINUOUS path — the form that is safe
-      * at any time, including while a staged rebuild trains: the
-      * tombstones land on the live index immediately (the takedown
-      * takes effect NOW, at O(touched buckets)), and when a build
-      * window is open the id set is ALSO spilled into the same
-      * pending sequence the append spills ride — so the flip replays
-      * the delete against the new build in arrival order, instead of
-      * the full-replace commit resurrecting the row (the hazard the
-      * standalone [[AnnIndex.delete]] refuses on). At-least-once in,
-      * exactly-once effects out, like [[ingest]]: a crash between the
-      * live commit and the spill is healed by redelivering the
-      * delete, and a redelivered delete re-tombstones idempotently. */
-    def ingestDelete(ids: DataFrame): Unit = {
+    /** Deletion through the continuous path: [[AnnIndex.delete]]'s
+      * tombstone commit at the next counter version, so a takedown
+      * orders against this Ingestor's appends and rebuilds exactly as
+      * an [[ingest]] batch does — O(touched buckets), live at the
+      * pointer flip. At-least-once in, exactly-once effects out: a
+      * redelivered delete re-tombstones idempotently. */
+    def ingestDelete(ids: DataFrame): Unit =
       deleteImpl(spark, path, ids, idCol,
         ver = nextVer.getAndIncrement(), crashAfter = None)
-      maybeCrash(deleteCrashBeforeSpill, "spill")
-      staging.foreach { st =>
-        ids.select(col(idCol)).write.mode("overwrite")
-          .parquet(s"${st.dir}/pending/p${st.pendingSeq.getAndIncrement()}")
-      }
-    }
-
-    /** Crash injection for [[ingestDelete]]'s live-commit-then-spill
-      * window: `Some("spill")` dies AFTER the live tombstone commit
-      * (published and serving), BEFORE the pending spill — the exact
-      * point where a crashed-and-never-redelivered takedown would be
-      * resurrected by the flip. StreamingAnnIndexSpec pins the
-      * documented healing: redelivery re-tombstones idempotently AND
-      * lands the spill, so the flip replay converges. */
-    private[graft] var deleteCrashBeforeSpill: Option[String] = None
 
     def ingest(batch: DataFrame): Ingest = {
       val drift = append(spark, path, batch, idCol, vCol,
         ver = nextVer.getAndIncrement(), driftFactor = policy.driftFactor)
-      // durable pending spill: the flip — possibly in a LATER process
-      // after a restart — re-reads the batch from the staging dir, so
-      // no prior micro-batch's DataFrame is ever re-evaluated after
-      // its epoch committed (out of contract for streaming sources)
-      // and the window's pending set lives on disk, not in heap
-      staging.foreach { st =>
-        batch.select(col(idCol), col(vCol)).write.mode("overwrite")
-          .parquet(s"${st.dir}/pending/p${st.pendingSeq.getAndIncrement()}")
-      }
       ingests += 1L
       val occ =
         if (policy.occupancyCheckEvery > 0 &&
@@ -1423,63 +916,13 @@ object AnnIndex {
         else None
       val wantRebuild =
         drift.rebuildRecommended || occ.exists(_.retrainRecommended)
-      if (!policy.applyRebuild) Ingest(drift, None, occ)
-      else if (!policy.stagedRebuild) {
-        if (!wantRebuild) Ingest(drift, None, occ)
-        else {
-          val model = buildTrained(spark, path, corpus(), idCol, vCol,
-            policy.nLists, policy.dim, policy.m, policy.k, policy.rounds,
-            policy.kmRounds, policy.nBuckets)
-          nextVer.set(model.buildVer + 1L)
-          Ingest(drift, Some(model), occ)
-        }
-      } else staging match {
-        case Some(st) if st.outcome.isDefined =>
-          staging = None
-          st.outcome.get match {
-            case Right(()) =>
-              try Ingest(drift, Some(flipStaged(st.dir)), occ)
-              catch {
-                case t: InjectedCrash => throw t // simulated process death
-                case scala.util.control.NonFatal(t) =>
-                  // A flip-side fault (e.g. a transient FS error
-                  // between the model and codes commits) must not
-                  // wedge the stream: the append above landed, the
-                  // staging artifacts are durable, and any commit the
-                  // partial flip left behind is superseded debris.
-                  // Re-run the exact restart-recovery path a process
-                  // death would take — it re-publishes from the
-                  // staged artifacts and leaves the index appendable
-                  // (without this, every later ingest dies on
-                  // appendImpl's orphaned-rebuild guard until an
-                  // operator restarts the process). Only if the
-                  // retry ALSO fails does the batch error propagate.
-                  recoverOrphanedRebuild()
-                  nextVer.set(nextBuildVer(spark, path))
-                  Ingest(drift, Some(readModel(spark, path)), occ,
-                    rebuildFailed = Some(t))
-              }
-            case Left(t) =>
-              // a failed background build must not fail the stream —
-              // the append above landed and the old build keeps
-              // serving; surface the error and clean the debris
-              deleteStaging(st.dir)
-              Ingest(drift, None, occ, rebuildFailed = Some(t))
-          }
-        case None if wantRebuild =>
-          // staging keyed by the triggering counter value: unique per
-          // rebuild under the single-maintainer contract, and a crash
-          // leaves only an overwrite-safe plain-parquet dir behind.
-          // The build version is RESERVED here — far enough above the
-          // counter that every during-window append stays below it —
-          // so the staged codes bake it in and the flip adopts files
-          // instead of rewriting the corpus.
-          val st = new Staging(corpus(), s"${stagingRoot(path)}/b${peekVer}",
-            reservedVer = peekVer + VersionHeadroom)
-          staging = Some(st)
-          st.thread.start()
-          Ingest(drift, None, occ)
-        case _ => Ingest(drift, None, occ)
+      if (!policy.applyRebuild || !wantRebuild) Ingest(drift, None, occ)
+      else {
+        val model = buildTrained(spark, path, corpus(), idCol, vCol,
+          policy.nLists, policy.dim, policy.m, policy.k, policy.rounds,
+          policy.kmRounds, policy.nBuckets)
+        nextVer.set(model.buildVer + 1L)
+        Ingest(drift, Some(model), occ)
       }
     }
   }

@@ -150,12 +150,6 @@ object DimStore {
   private def bucketAligned(df: DataFrame, pk: String, n: Int): DataFrame =
     df.repartition(n, col(pk))
 
-  /** The store's physical bucketing expression and partition-column
-    * name — for builders laying out [[adoptFullReplace]] input in the
-    * table's exact on-disk format. */
-  private[ops] def bucketColumn(pk: String, n: Int): Column = bucketOf(pk, n)
-  private[ops] def bucketColName: String = BucketCol
-
   // -------------------------------------------------------------------
   // small-commit planning session. AQE executes every action stage by
   // stage — one Spark job per exchange materialization — so a
@@ -495,8 +489,7 @@ object DimStore {
   /** Per-generation file schema, cached forever: a generation is
     * IMMUTABLE once renamed into `_gens`, and every data file in one
     * carries the same schema (each write path lands exactly one
-    * DataFrame per generation; [[adoptFullReplace]] contracts the same
-    * of its builder). So ONE footer read per generation — driver-side,
+    * DataFrame per generation). So ONE footer read per generation — driver-side,
     * no Spark job — replaces the `mergeSchema` scan the snapshot
     * readers used to pay per READ: a distributed footer-merge job over
     * every selected file, ~0.1–0.5 s per read at the ~50 ms job floor
@@ -1200,65 +1193,6 @@ object DimStore {
         attempt += 1
         if (attempt > 50) throw new java.util.ConcurrentModificationException(
           s"lost the rebucket commit race $attempt times at $path")
-      }
-    }
-  }
-
-  /** ADOPT a pre-bucketed directory tree as the FULL content of the
-    * table — one commit of O(files) METADATA, no data rewrite: the
-    * Delta add-file pattern, for a builder that already laid its
-    * output out in this store's physical format
-    * (`__bucket=k/part-*.parquet`, files carrying every table column
-    * except the bucket, which the dir name encodes — exactly what
-    * `df.write.partitionBy(bucketColName)` produces). The caller owns
-    * three invariants the normal write paths enforce physically: rows
-    * bucketed by `pmod(hash(pk), buckets)` ([[bucketColumn]]), at
-    * most one row per pk, and file schemas matching the table's.
-    *
-    * The staged tree is CLONED into the generation — hard links on
-    * posix, so the commit costs directory metadata however many bytes
-    * the table holds, and the SOURCE stays intact for crash-retry (a
-    * crash anywhere leaves the table at its old version plus at worst
-    * an unreferenced generation for vacuum, the standard crash
-    * contract). A remote fs pays a real copy (the cloneTree trade the
-    * root projection already documents); an HDFS deployment that
-    * can't afford it would rename-adopt and accept that a pre-commit
-    * crash consumes the staging. Optimistic loser-retries commit like
-    * every other committer; a fan-out different from the current
-    * manifest's is recorded per manifest, exactly as [[rebucket]]
-    * does. */
-  private[ops] def adoptFullReplace(spark: SparkSession, path: String,
-                                    stagedDir: String, buckets: Int): Unit = {
-    val fs = new Path(path).getFileSystem(spark.sparkContext.hadoopConfiguration)
-    recover(spark, fs, path)
-    val st = store(path)
-    var attempt = 0
-    var done = false
-    while (!done) {
-      val v = currentVersion(path).map(_ + 1L).getOrElse(1L)
-      st.mkdirs(gensDir(path))
-      val nonce = java.util.UUID.randomUUID().toString.take(8)
-      val genName = f"g$v%020d-$nonce"
-      val tmp = s"${gensDir(path)}/.w-$genName"
-      st.deleteTree(tmp)
-      st.cloneTree(stagedDir, tmp)
-      st.rename(tmp, s"${gensDir(path)}/$genName")
-      val dirs = bucketDirsOf(path, genName)
-      if (dirs.isEmpty) {
-        st.deleteTree(s"${gensDir(path)}/$genName")
-        throw new IllegalArgumentException(
-          s"nothing to adopt at $stagedDir (no $BucketCol= dirs)")
-      }
-      val m = Manifest(v, buckets, dirs.map(_ -> genName).toMap)
-      if (tryCommit(path, m)) {
-        writeBucketCount(fs, path, buckets)
-        syncView(spark, path)
-        done = true
-      } else {
-        st.deleteTree(s"${gensDir(path)}/$genName")
-        attempt += 1
-        if (attempt > 50) throw new java.util.ConcurrentModificationException(
-          s"lost the adopt commit race $attempt times at $path")
       }
     }
   }

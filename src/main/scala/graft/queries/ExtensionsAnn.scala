@@ -1110,8 +1110,8 @@ private[queries] trait ExtensionsAnn { this: Extensions.type =>
   // pattern) and serves x12's inverted-list top-10 chain from the
   // TRAINED centroids. This pins that trained-quantizer serving — not
   // just fixture-row serving — is bit-reproducible across engines,
-  // which is what lets a drift-triggered rebuild (AnnIndex.Ingestor)
-  // replace the quantizer in production without a behavioral seam.
+  // which is what lets AnnIndex.Ingestor's drift-triggered rebuild (an
+  // inline buildTrained) replace the quantizer without a behavioral seam.
   // Scale shape: identical to x12 (centroid state is k·dim doubles —
   // kilobytes — collected once and shipped as literals; assignment is
   // a pure narrow map; the probe join broadcasts).

@@ -8,8 +8,9 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * the standard technique Spark extension libraries use — the whole
   * extension API (strategies, rules) exchanges LogicalPlans, but the
   * only sanctioned DataFrame constructor from a plan lives behind
-  * `private[sql]`. Besides that call, only the Column ⇄ Expression pair
-  * and the listener-bus drain below reach anything internal. */
+  * `private[sql]`. Besides that call, only the Column ⇄ Expression pair,
+  * the listener-bus drain and the cache-entry count below reach
+  * anything internal. */
 object GraftPlanBridge {
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
     classic.Dataset.ofRows(
@@ -30,4 +31,9 @@ object GraftPlanBridge {
     * (`private[spark]`), so counters read afterwards
     * (`graft.core.RunCounters`) cover all the work before the call. */
   def drainListeners(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
+
+  /** Entries in the shared `CacheManager` (the list itself is
+    * `private`): a `persist` adds one, its `unpersist` removes it. */
+  def cachedEntries(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession].sharedState.cacheManager.numCachedEntries
 }

@@ -425,8 +425,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
   }
 
   test("delete crash window: committed but invisible until redelivery " +
-       "flips; and deletes are REFUSED while a staged rebuild is " +
-       "in flight") {
+       "flips") {
     val s = spark
     import s.implicits._
     val path = Files.createTempDirectory("ann_del_crash").toString + "/idx"
@@ -445,21 +444,12 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     // at-least-once redelivery lands it (idempotent LWW) and flips
     AnnIndex.delete(s, path, Seq(victim).toDF("vec_id"), "vec_id", ver = 2L)
     AnnIndex.codes(s, path).filter($"vec_id" === victim).count() shouldBe 0L
-
-    // staged-rebuild guard: any pending staging dir refuses deletes
-    // loudly (the flip would adopt pre-delete codes wholesale)
-    val staging = java.nio.file.Paths.get(path, "_staging", "g1")
-    Files.createDirectories(staging)
-    val ex = the[IllegalStateException] thrownBy
-      AnnIndex.delete(s, path, Seq(victim).toDF("vec_id"), "vec_id", 3L)
-    ex.getMessage should include("staged rebuild")
   }
 
   test("purgeTombstones: dead rows reclaimed between rebuilds — serve " +
        "answers byte-identical, snapshot bytes shrink, the purge commit " +
-       "is O(tombstoned buckets), history keeps the tombstones, a " +
-       "committed-but-unflipped purge rolls forward, and a staged " +
-       "rebuild refuses it") {
+       "is O(tombstoned buckets), history keeps the tombstones, and a " +
+       "committed-but-unflipped purge rolls forward") {
     val s = spark
     import s.implicits._
     val path = Files.createTempDirectory("ann_purge").toString + "/idx"
@@ -555,17 +545,6 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     AnnIndex.fsck(s, path).tombstones shouldBe 0L
     answers() shouldBe served3
     AnnIndex.fsck(s, path).consistent shouldBe true
-
-    // a staged rebuild in flight refuses the standalone purge loudly —
-    // and the maintain policy SKIPS it quietly (a streaming cadence
-    // must not throw; the flip reclaims wholesale anyway)
-    val staging = java.nio.file.Paths.get(path, "_staging", "g1")
-    Files.createDirectories(staging)
-    val ex = the[IllegalStateException] thrownBy
-      AnnIndex.purgeTombstones(s, path)
-    ex.getMessage should include("staged rebuild")
-    AnnIndex.maintain(s, path, purgeTombstonesOver = 1L)
-      .purgedTombstones shouldBe 0L
   }
 
   test("a zero-error baseline never recommends a rebuild for " +

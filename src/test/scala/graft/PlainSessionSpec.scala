@@ -65,14 +65,14 @@ class PlainSessionSpec extends AnyFunSuite with Matchers with SparkFixture {
     plain.conf.getAll shouldBe before
   }
 
-  /** Files under `src/main/scala` that match any of `calls`, except `owner`. */
+  /** Files under `src/main/scala` that match any of `calls`, except `owner` (none if empty). */
   private def callersOutside(owner: String, calls: String*): Seq[String] = {
     val root = Paths.get("src/main/scala")
     assert(Files.isDirectory(root), s"run from the repository root (${root.toAbsolutePath})")
     val patterns = calls.map(_.r.unanchored)
     Using.resource(Files.walk(root))(_.iterator().asScala
       .filter(_.toString.endsWith(".scala"))
-      .filterNot(_.endsWith(Paths.get(owner)))
+      .filterNot(p => owner.nonEmpty && p.endsWith(Paths.get(owner)))
       .filter { p => val src = Files.readString(p); patterns.exists(_.matches(src)) }
       .map(root.relativize(_).toString).toSeq.sorted)
   }
@@ -84,6 +84,13 @@ class PlainSessionSpec extends AnyFunSuite with Matchers with SparkFixture {
   test("src/main attaches Spark and query-execution listeners only in RunCounters") {
     callersOutside("graft/core/RunCounters.scala",
       """addSparkListener\(""", """listenerManager\.register\(""") shouldBe empty
+  }
+
+  test("src/main starts no thread of its own and assigns no scheduler pool") {
+    // every Spark job runs on the caller's thread: work from a thread
+    // graft starts would race the caller's commits and escape the
+    // caller's RunCounters window
+    callersOutside(owner = "", """new Thread\(""", """spark\.scheduler\.pool""") shouldBe empty
   }
 
   /** Files allowed a schema-less parquet read outside `ParquetFooter`,

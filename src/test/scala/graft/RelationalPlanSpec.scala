@@ -3,7 +3,9 @@ package graft
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
-import graft.queries.{Registry, Relational}
+import org.apache.spark.sql.GraftPlanBridge
+
+import graft.queries.{Extensions, Registry, Relational}
 
 /** Smoke + physical-plan assertions: the plans must be the ones we'd
   * want at 100 TB, not just any plan that returns rows (builder prompt:
@@ -31,8 +33,11 @@ class RelationalPlanSpec extends AnyFunSuite with Matchers with SparkFixture {
       withClue(s"${q.name}: ") {
         if (!mayBeEmpty(q.name)) assert(n > 0, "expected rows")
         val after = sessionSnapshot()
+        // an RDD is held weakly by getPersistentRDDs: one that is only
+        // gone afterwards was collected, which says nothing of this query
         val changed = (before.keySet ++ after.keySet).toSeq.sorted
           .filter(k => before.get(k) != after.get(k))
+          .filterNot(k => k.startsWith("persistent rdd ") && !after.contains(k))
         assert(changed.isEmpty, s"left its session changed: ${changed.mkString(", ")}")
       }
     }
@@ -40,9 +45,13 @@ class RelationalPlanSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   /** What a query must leave as it found it on the session it runs on,
     * keyed by what it is: conf entries, planner strategies, temporary
-    * views and the function registry (temporary functions). */
+    * views, the function registry (temporary functions) and cached
+    * data. Cached data is read after the registry's own bounded caches
+    * are released, so what is left is what a query persisted and
+    * never unpersisted. */
   private def sessionSnapshot(): Map[String, String] = {
     val s = spark
+    Extensions.clearPersistedIntermediates()
     // Tables.load sets this sticky flag when an events fixture stores
     // `ts` as TIMESTAMP(NANOS): the scan reads the conf at execution,
     // so it cannot be restored after the load (no current fixture does)
@@ -51,7 +60,10 @@ class RelationalPlanSpec extends AnyFunSuite with Matchers with SparkFixture {
       Map("extraStrategies" ->
         s.experimental.extraStrategies.map(_.getClass.getName).mkString(",")) ++
       s.sessionState.catalog.getTempViewNames().map(v => s"temp view $v" -> "") ++
-      s.sessionState.functionRegistry.listFunction().map(f => s"function $f" -> "")
+      s.sessionState.functionRegistry.listFunction().map(f => s"function $f" -> "") ++
+      Map("cache manager entries" -> GraftPlanBridge.cachedEntries(s).toString) ++
+      s.sparkContext.getPersistentRDDs.map { case (id, rdd) =>
+        s"persistent rdd $id" -> String.valueOf(rdd.name) }
   }
 
   test("registry names are unique and every query has an oracle") {

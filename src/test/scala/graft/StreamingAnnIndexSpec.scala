@@ -8,6 +8,7 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 import org.scalatest.matchers.should.Matchers
 
+import graft.core.RunCounters
 import graft.ops.AnnIndex
 
 /** Top-level for the encoder. */
@@ -154,513 +155,56 @@ class StreamingAnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture 
     codeSet(AnnIndex.codes(s, path)) shouldBe
       codeSet(AnnIndex.codes(s, freshPath))
     AnnIndex.fsck(s, path).consistent shouldBe true
-  }
 
-  test("staged rebuild: the build window never blocks ingest — the old " +
-       "index keeps serving, during-window batches stay searchable and " +
-       "survive the flip, and the flipped index equals an inline " +
-       "rebuild over the same snapshot") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_staged").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val oldBuildVer = AnnIndex.readModel(s, path).buildVer
-
-    // the corpus snapshot a real pipeline would read at rebuild start
-    val snapshot = seed ++ rows(60 until 90) ++ drifted(1000 until 1060)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v",
-      AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4, dim = 64,
-        m = 4, k = 4, rounds = 1, kmRounds = 1, stagedRebuild = true),
-      corpus = () => snapshot.toDF())
-    // hold the build window open until the during-window ingest has
-    // been asserted — at fixture scale the train can otherwise finish
-    // before the window's ingests even run
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    ingestor.stagingDelay = () => gate.await()
-
-    // in-distribution: no trigger, no staging
-    val r1 = ingestor.ingest(rows(60 until 90).toDF())
-    r1.rebuilt shouldBe None
-    ingestor.stagingActive shouldBe false
-
-    // drift: the triggering ingest only STARTS the build — no rebuild
-    // ran inside this call, the pointer still names the old build
-    val r2 = ingestor.ingest(drifted(1000 until 1060).toDF())
-    r2.drift.rebuildRecommended shouldBe true
-    r2.rebuilt shouldBe None
-    ingestor.stagingActive shouldBe true
-    AnnIndex.readModel(s, path).buildVer shouldBe oldBuildVer
-
-    // a batch ARRIVING DURING THE WINDOW: appended to the old index at
-    // append cost (searchable immediately, degraded precision), and
-    // tracked for re-encode at the flip
-    val during = rows(200 until 210)
-    val r3 = ingestor.ingest(during.toDF())
-    r3.rebuilt shouldBe None
-    AnnIndex.readModel(s, path).buildVer shouldBe oldBuildVer
-    val servedIds = AnnIndex.codes(s, path)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    (200L until 210L).foreach(id => servedIds should contain(id))
-
-    gate.countDown()
-    ingestor.awaitStaged()
-    // artifacts ready; readers STILL on the old build until an ingest
-    // pays the commit tail
-    AnnIndex.readModel(s, path).buildVer shouldBe oldBuildVer
-    // capture the staged codes part-files: the flip must ADOPT these
-    // into the commit log (names and sizes preserved under _gens —
-    // O(metadata), the add-file pattern), not rewrite the corpus
-    // (which would mint fresh part-file names)
-    def partFiles(root: String): Set[(String, Long)] = {
-      import scala.jdk.CollectionConverters._
-      val p = java.nio.file.Paths.get(root)
-      if (!Files.exists(p)) Set.empty
-      else {
-        val w = Files.walk(p)
-        try w.iterator().asScala
-          .filter(f => f.getFileName.toString.startsWith("part-"))
-          .map(f => (f.getFileName.toString, Files.size(f))).toSet
-        finally w.close()
-      }
+    // a takedown through the Ingestor after the rebuild: the tombstone
+    // commits at the counter version, above the rebuilt rows, so a
+    // served neighbour of a drifted query leaves the answers
+    val query = Seq(VecRow(-1L, vec(1000L).map(_ * 5.0))).toDF()
+    def served(): Set[Long] = {
+      val model = AnnIndex.readModel(s, path)
+      AnnIndex.adcTopK(s, path,
+        AnnIndex.queryProbes(query, "vec_id", "v", model, nProbes = 4),
+        model, k = 10).select($"vec_id").as[Long].collect().toSet
     }
-    val stagedCodesFiles = {
-      import scala.jdk.CollectionConverters._
-      val st = Files.list(java.nio.file.Paths.get(s"$path/_staging"))
-      val dirs = try st.iterator().asScala.toSeq finally st.close()
-      dirs.map(d => partFiles(s"$d/codes")).reduce(_ ++ _)
+    val victim = served().max
+    val tombVer = ingestor.peekVer
+    ingestor.ingestDelete(Seq(victim).toDF("vec_id"))
+    served() should not contain victim
+    AnnIndex.fsck(s, path).consistent shouldBe true
+    ingestor.peekVer should be > tombVer
+    graft.ops.DimStore.read(s, s"$path/codes")
+      .filter($"vec_id" === victim).select($"__batch_ver").as[Long]
+      .collect() shouldBe Array(tombVer)
+  }
+
+  test("constructing an Ingestor on a healthy index scans the committed " +
+       "versions once: its job count is one pointer read plus one max " +
+       "agg per table") {
+    val s = spark
+    import s.implicits._
+    val path = Files.createTempDirectory("ann_ctor_scan").toString + "/idx"
+    val seed = rows(0 until 60).toDF()
+    val built = AnnIndex.buildTrained(s, path, seed, "vec_id", "v",
+      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
+    val (ingestor, ctor) = RunCounters.window(s)(
+      new AnnIndex.Ingestor(s, path, "vec_id", "v",
+        AnnIndex.RebuildPolicy(nLists = 4, dim = 64, m = 4, k = 4,
+          rounds = 1, kmRounds = 1),
+        corpus = () => seed))
+    ingestor.peekVer shouldBe built.buildVer + 1L
+    // the same reads, issued directly: the pointer row, then
+    // max(__batch_ver) over the model and the codes table
+    val (_, ptrRead) = RunCounters.window(s)(
+      graft.ops.DimStore.read(s, s"$path/ptr")
+        .filter($"k" === "current").collect())
+    val (_, scan) = RunCounters.window(s)(Seq("model", "codes").foreach {
+      t => graft.ops.DimStore.read(s, s"$path/$t")
+        .agg(max($"__batch_ver")).head()
+    })
+    withClue(s"pointer read ${ptrRead.jobs} jobs, version scan " +
+        s"${scan.jobs} jobs: ") {
+      ctor.jobs shouldBe ptrRead.jobs + scan.jobs
     }
-    stagedCodesFiles should not be empty
-
-    // the flip ingest: commit tail only (no train/encode of the
-    // snapshot in this call) — publishes the staged build plus every
-    // during-window batch re-encoded under the new model
-    val flipBatch = rows(300 until 310)
-    val r4 = ingestor.ingest(flipBatch.toDF())
-    // the staged files were adopted verbatim into the codes table's
-    // generation store
-    val genFiles = partFiles(s"$path/codes/_gens")
-    stagedCodesFiles.subsetOf(genFiles) shouldBe true
-    val rebuilt = r4.rebuilt.getOrElse(fail("flip did not publish"))
-    rebuilt.buildVer should be > oldBuildVer
-    ingestor.stagingActive shouldBe false
-    // counter floors above the flip's catch-up appends (2 pending)
-    ingestor.peekVer shouldBe rebuilt.buildVer + 2L + 1L
-
-    // equivalence oracle: inline rebuild over the same snapshot, then
-    // the during-window batches appended under the new model
-    val refPath = Files.createTempDirectory("ann_staged_ref").toString + "/idx"
-    val ref = AnnIndex.buildTrained(s, refPath, snapshot.toDF(),
-      "vec_id", "v", nLists = 4, dim = 64, m = 4, k = 4, rounds = 1,
-      kmRounds = 1)
-    AnnIndex.append(s, refPath, during.toDF(), "vec_id", "v",
-      ver = ref.buildVer + 1L)
-    AnnIndex.append(s, refPath, flipBatch.toDF(), "vec_id", "v",
-      ver = ref.buildVer + 2L)
-    val m = AnnIndex.readModel(s, path)
-    m.centroids shouldBe ref.centroids
-    m.pq.codebooks.flatten.flatten.toSeq shouldBe
-      ref.pq.codebooks.flatten.flatten.toSeq
-    codeSet(AnnIndex.codes(s, path)) shouldBe
-      codeSet(AnnIndex.codes(s, refPath))
-    AnnIndex.fsck(s, path).consistent shouldBe true
-    // staging debris is gone
-    new java.io.File(s"$path/_staging").exists() shouldBe false
-  }
-
-  test("ingestDelete: a takedown issued DURING the build window lands " +
-       "on the live index immediately AND survives the flip (spilled " +
-       "and replayed as tombstones); delete-then-reingest ordering " +
-       "holds through the flip; redelivery is idempotent") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_del_staged").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val snapshot = seed ++ drifted(1000 until 1060)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v",
-      AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4, dim = 64,
-        m = 4, k = 4, rounds = 1, kmRounds = 1, stagedRebuild = true),
-      corpus = () => snapshot.toDF())
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    ingestor.stagingDelay = () => gate.await()
-
-    // outside a build window: ingestDelete is a plain live tombstone
-    ingestor.ingestDelete(Seq(5L).toDF("vec_id"))
-    AnnIndex.codes(s, path).filter($"vec_id" === 5L).count() shouldBe 0L
-
-    // drift opens the window
-    val r = ingestor.ingest(drifted(1000 until 1060).toDF())
-    r.drift.rebuildRecommended shouldBe true
-    ingestor.stagingActive shouldBe true
-
-    // during the window: delete 7 (in the rebuild snapshot!), then
-    // delete 8 and RE-INGEST it — the re-ingest must win
-    ingestor.ingestDelete(Seq(7L, 8L).toDF("vec_id"))
-    AnnIndex.codes(s, path).filter($"vec_id".isin(7L, 8L)).count() shouldBe 0L
-    ingestor.ingest(rows(8 until 9).toDF())
-    AnnIndex.codes(s, path).filter($"vec_id" === 8L).count() shouldBe 1L
-    // redelivered delete of 7 (at-least-once): idempotent on live
-    ingestor.ingestDelete(Seq(7L).toDF("vec_id"))
-
-    gate.countDown()
-    ingestor.awaitStaged()
-    // the flip replays the spilled pendings in arrival order over the
-    // full-replace: 7 stays deleted (the snapshot held it — without
-    // the replay the flip would resurrect it), 8's re-ingest wins, 5
-    // was deleted BEFORE the window so the caller's snapshot is the
-    // authority there (it still carries 5 here — documented contract)
-    ingestor.ingest(rows(300 until 310).toDF())
-    ingestor.stagingActive shouldBe false
-    val served = AnnIndex.codes(s, path)
-      .select("vec_id").collect().map(_.getLong(0)).toSet
-    served should not contain 7L
-    served should contain(8L)
-    served should contain(5L) // resurrected BY THE SNAPSHOT, not a bug:
-    // pre-window deletes must be applied to the corpus the supplier
-    // returns (the documented corpus-authority contract)
-    AnnIndex.fsck(s, path).consistent shouldBe true
-    AnnIndex.fsck(s, path).tombstones should be >= 1L
-  }
-
-  test("ingestDelete crash between the live commit and the pending " +
-       "spill: the window is REAL (an un-redelivered takedown is " +
-       "resurrected by the flip) and at-least-once redelivery heals it " +
-       "(re-tombstones idempotently, lands the spill, flip converges)") {
-    val s = spark
-    import s.implicits._
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    val snapshot = seed ++ drifted(1000 until 1060)
-
-    // run the same crashed-delete-during-window sequence twice: once
-    // WITHOUT redelivery (pinning that the crash window genuinely
-    // loses the delete at the flip — the documented at-least-once
-    // hazard), once WITH (pinning the documented healing)
-    def run(tag: String, redeliver: Boolean): Set[Long] = {
-      val path = Files.createTempDirectory(s"ann_delcrash_$tag")
-        .toString + "/idx"
-      AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-        nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-      val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v",
-        AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4, dim = 64,
-          m = 4, k = 4, rounds = 1, kmRounds = 1, stagedRebuild = true),
-        corpus = () => snapshot.toDF())
-      val gate = new java.util.concurrent.CountDownLatch(1)
-      ingestor.stagingDelay = () => gate.await()
-      ingestor.ingest(drifted(1000 until 1060).toDF()) // opens the window
-      ingestor.stagingActive shouldBe true
-
-      // the takedown dies AFTER the live tombstone commit, BEFORE the
-      // pending spill (a transient spill-write fault; the stream
-      // retries the batch)
-      ingestor.deleteCrashBeforeSpill = Some("spill")
-      an[graft.ops.AnnIndex.InjectedCrash] should be thrownBy
-        ingestor.ingestDelete(Seq(7L).toDF("vec_id"))
-      ingestor.deleteCrashBeforeSpill = None
-      // the live commit LANDED and serves: 7 is dead on the old index
-      AnnIndex.codes(s, path).filter($"vec_id" === 7L).count() shouldBe 0L
-
-      if (redeliver) ingestor.ingestDelete(Seq(7L).toDF("vec_id"))
-      // still dead on the live index either way
-      AnnIndex.codes(s, path).filter($"vec_id" === 7L).count() shouldBe 0L
-
-      gate.countDown()
-      ingestor.awaitStaged()
-      ingestor.ingest(rows(300 until 310).toDF()) // pays the flip
-      ingestor.stagingActive shouldBe false
-      AnnIndex.fsck(s, path).consistent shouldBe true
-      AnnIndex.codes(s, path)
-        .select("vec_id").collect().map(_.getLong(0)).toSet
-    }
-
-    // no redelivery: the spill never landed, so the flip's
-    // full-replace (snapshot holds 7) resurrects it — the crash
-    // window is real, not a vacuous pin
-    run("bare", redeliver = false) should contain(7L)
-    // redelivered: idempotent re-tombstone + spill → the flip replays
-    // the delete and 7 stays dead through the new build
-    run("heal", redeliver = true) should not contain 7L
-  }
-
-  test("staged rebuild survives a mid-flip crash: append refuses the " +
-       "orphaned-commit state, and a NEW Ingestor (the restart) rolls " +
-       "the flip forward from the durable staging artifacts — spilled " +
-       "during-window batches included") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_flip_crash").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val oldBuildVer = AnnIndex.readModel(s, path).buildVer
-
-    val snapshot = seed ++ rows(60 until 90) ++ drifted(1000 until 1060)
-    val policy = AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4,
-      dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1,
-      stagedRebuild = true)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v", policy,
-      corpus = () => snapshot.toDF())
-    // hold the build window open so the during-window batch really
-    // lands inside it (fixture-scale trains finish in milliseconds)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    ingestor.stagingDelay = () => gate.await()
-    ingestor.ingest(rows(60 until 90).toDF())
-    ingestor.ingest(drifted(1000 until 1060).toDF()) // triggers staging
-    val during = rows(200 until 210)
-    ingestor.ingest(during.toDF()) // spilled to the staging dir
-    gate.countDown()
-    ingestor.awaitStaged()
-
-    // the flip ingest dies AFTER the codes full-replace commit, BEFORE
-    // the pending re-encodes and the pointer — the exact window where
-    // the tables' latest versions carry NEW-model content while the
-    // pointer still pins the old build
-    ingestor.flipCrashAfter = Some("codes")
-    val flipBatch = rows(300 until 310)
-    an[graft.ops.AnnIndex.InjectedCrash] should be thrownBy
-      ingestor.ingest(flipBatch.toDF())
-    // readers are untouched (pointer never moved)...
-    AnnIndex.readModel(s, path).buildVer shouldBe oldBuildVer
-    // ...but a raw append must REFUSE: merging into the debris codes
-    // version would mix old-model rows into new-model codes
-    an[IllegalStateException] should be thrownBy
-      AnnIndex.append(s, path, rows(400 until 405).toDF(), "vec_id", "v",
-        ver = 999L)
-
-    // the restart: a fresh Ingestor detects the orphaned rebuild and
-    // re-runs the whole flip from the durable staging artifacts
-    val restarted = new AnnIndex.Ingestor(s, path, "vec_id", "v", policy,
-      corpus = () => snapshot.toDF())
-    val m = AnnIndex.readModel(s, path)
-    m.buildVer should be > oldBuildVer
-    AnnIndex.fsck(s, path).consistent shouldBe true
-    new java.io.File(s"$path/_staging").exists() shouldBe false
-
-    // equivalence oracle: inline rebuild over the same snapshot plus
-    // the spilled batches appended under the new model — the crashed
-    // flip batch included (it was spilled before the crash)
-    val refPath = Files.createTempDirectory("ann_flip_ref").toString + "/idx"
-    val ref = AnnIndex.buildTrained(s, refPath, snapshot.toDF(),
-      "vec_id", "v", nLists = 4, dim = 64, m = 4, k = 4, rounds = 1,
-      kmRounds = 1)
-    AnnIndex.append(s, refPath, during.toDF(), "vec_id", "v",
-      ver = ref.buildVer + 1L)
-    AnnIndex.append(s, refPath, flipBatch.toDF(), "vec_id", "v",
-      ver = ref.buildVer + 2L)
-    m.centroids shouldBe ref.centroids
-    codeSet(AnnIndex.codes(s, path)) shouldBe
-      codeSet(AnnIndex.codes(s, refPath))
-    // and the recovered ingestor keeps ingesting above everything
-    restarted.ingest(rows(500 until 505).toDF())
-    AnnIndex.fsck(s, path).consistent shouldBe true
-  }
-
-  test("a crash BETWEEN staging completion and the flip's first commit " +
-       "(healthy pointer, complete artifacts — the widest restart " +
-       "window) resumes on restart: the new Ingestor publishes the " +
-       "finished staged build instead of discarding the train") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_preflip_crash").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val oldBuildVer = AnnIndex.readModel(s, path).buildVer
-
-    val snapshot = seed ++ rows(60 until 90) ++ drifted(1000 until 1060)
-    val policy = AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4,
-      dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1,
-      stagedRebuild = true)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v", policy,
-      corpus = () => snapshot.toDF())
-    // hold the build window open so the during-window batch really
-    // lands inside it (fixture-scale trains finish in milliseconds)
-    val gate = new java.util.concurrent.CountDownLatch(1)
-    ingestor.stagingDelay = () => gate.await()
-    ingestor.ingest(rows(60 until 90).toDF())
-    ingestor.ingest(drifted(1000 until 1060).toDF()) // triggers staging
-    val during = rows(200 until 210)
-    ingestor.ingest(during.toDF()) // spilled to the staging dir
-    gate.countDown()
-    ingestor.awaitStaged()
-    // artifacts complete, pointer healthy, flip never ran — the
-    // process "dies" here (the first ingestor is simply abandoned)
-    AnnIndex.readModel(s, path).buildVer shouldBe oldBuildVer
-
-    val restarted = new AnnIndex.Ingestor(s, path, "vec_id", "v", policy,
-      corpus = () => snapshot.toDF())
-    // construction published the staged build — train NOT re-paid,
-    // spilled during-window batch re-encoded under the new model
-    val m = AnnIndex.readModel(s, path)
-    m.buildVer should be > oldBuildVer
-    AnnIndex.fsck(s, path).consistent shouldBe true
-    new java.io.File(s"$path/_staging").exists() shouldBe false
-    val refPath = Files.createTempDirectory("ann_preflip_ref").toString + "/idx"
-    val ref = AnnIndex.buildTrained(s, refPath, snapshot.toDF(),
-      "vec_id", "v", nLists = 4, dim = 64, m = 4, k = 4, rounds = 1,
-      kmRounds = 1)
-    AnnIndex.append(s, refPath, during.toDF(), "vec_id", "v",
-      ver = ref.buildVer + 1L)
-    m.centroids shouldBe ref.centroids
-    codeSet(AnnIndex.codes(s, path)) shouldBe
-      codeSet(AnnIndex.codes(s, refPath))
-    // and the restarted ingestor orders above everything
-    restarted.ingest(rows(500 until 505).toDF())
-    AnnIndex.fsck(s, path).consistent shouldBe true
-  }
-
-  test("a STALE complete staging dir (a failed post-flip sweep) is " +
-       "SWEPT on restart, never re-published: the freshness veto " +
-       "detects the appends committed after the build's window and " +
-       "refuses a publication that would silently drop them") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_stale_stage").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val snapshot = seed ++ drifted(1000 until 1060)
-    val policy = AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4,
-      dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1,
-      stagedRebuild = true)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v", policy,
-      corpus = () => snapshot.toDF())
-    ingestor.ingest(drifted(1000 until 1060).toDF()) // triggers staging
-    ingestor.awaitStaged()
-
-    // snapshot the COMPLETE staging dir (artifacts + meta + marker) —
-    // the bytes a failed post-flip tree delete would leave behind
-    val stagingRoot = java.nio.file.Paths.get(s"$path/_staging")
-    val stagedDir = Files.list(stagingRoot).iterator().next()
-    val aside = Files.createTempDirectory("ann_stale_copy")
-      .resolve(stagedDir.getFileName)
-    def copyTree(from: java.nio.file.Path, to: java.nio.file.Path): Unit = {
-      val it = Files.walk(from).iterator()
-      while (it.hasNext) {
-        val p = it.next()
-        val t = to.resolve(from.relativize(p).toString)
-        if (Files.isDirectory(p)) Files.createDirectories(t)
-        else { Files.createDirectories(t.getParent); Files.copy(p, t); () }
-      }
-    }
-    copyTree(stagedDir, aside)
-
-    // the flip publishes the build, then appends land AFTER it — rows
-    // a stale re-publication would silently drop
-    val flipped = ingestor.ingest(rows(60 until 70).toDF())
-      .rebuilt.getOrElse(fail("staged build did not flip"))
-    ingestor.ingest(rows(70 until 80).toDF())
-    AnnIndex.codes(s, path).count() shouldBe 140L
-
-    // simulate the failed sweep: the complete dir reappears verbatim
-    copyTree(aside, stagingRoot.resolve(stagedDir.getFileName))
-
-    // restart: the veto MUST refuse — nextBuildVer(scan) now exceeds
-    // reservedVer + pendings + 1 — and sweep the dir as debris
-    val restarted = new AnnIndex.Ingestor(s, path, "vec_id", "v", policy,
-      corpus = () => snapshot.toDF())
-    AnnIndex.readModel(s, path).buildVer shouldBe flipped.buildVer
-    AnnIndex.codes(s, path).count() shouldBe 140L // post-flip rows kept
-    new java.io.File(s"$path/_staging").exists() shouldBe false
-    AnnIndex.fsck(s, path).consistent shouldBe true
-    restarted.ingest(rows(80 until 85).toDF())
-    AnnIndex.codes(s, path).count() shouldBe 145L
-    AnnIndex.fsck(s, path).consistent shouldBe true
-  }
-
-  test("a FATAL error on the staging thread is RECORDED, not a wedge: " +
-       "the next ingest surfaces it as rebuildFailed, the debris is " +
-       "swept, and a later drift re-triggers a rebuild") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_fatal_stage").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val oldBuildVer = AnnIndex.readModel(s, path).buildVer
-    val snapshot = seed ++ drifted(1000 until 1060)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v",
-      AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4, dim = 64,
-        m = 4, k = 4, rounds = 1, kmRounds = 1, stagedRebuild = true),
-      corpus = () => snapshot.toDF())
-    // a LinkageError is fatal to NonFatal — pre-fix, outcome stayed
-    // None forever: staging=Some wedged, every later batch spilled to
-    // pending unbounded, no rebuild could ever trigger again
-    ingestor.stagingDelay =
-      () => throw new AbstractMethodError("injected fatal train error")
-
-    ingestor.ingest(drifted(1000 until 1030).toDF()) // triggers staging
-    ingestor.awaitStaged()
-    val r = ingestor.ingest(drifted(1030 until 1060).toDF())
-    r.rebuildFailed.map(_.getMessage) shouldBe
-      Some("injected fatal train error")
-    r.rebuilt shouldBe None
-    AnnIndex.readModel(s, path).buildVer shouldBe oldBuildVer
-    new java.io.File(s"$path/_staging").exists() shouldBe false
-    // un-wedged: the still-drifting stream re-triggers and completes
-    ingestor.stagingDelay = () => ()
-    ingestor.ingest(drifted(1000 until 1030).toDF()) // re-triggers
-    ingestor.awaitStaged()
-    ingestor.ingest(drifted(1030 until 1060).toDF())
-      .rebuilt should not be empty
-    AnnIndex.fsck(s, path).consistent shouldBe true
-  }
-
-  test("a TRANSIENT flip fault self-heals in-process: the batch " +
-       "reports the fault, the staged build still publishes (from the " +
-       "durable artifacts), and the stream is NOT wedged") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_flip_fault").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val oldBuildVer = AnnIndex.readModel(s, path).buildVer
-
-    val snapshot = seed ++ drifted(1000 until 1060)
-    val policy = AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4,
-      dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1,
-      stagedRebuild = true)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v", policy,
-      corpus = () => snapshot.toDF())
-    ingestor.ingest(drifted(1000 until 1060).toDF()) // triggers staging
-    ingestor.awaitStaged()
-    // the flip ingest hits a transient fault AFTER the model commit —
-    // the exact window that used to orphan the index until a process
-    // restart (every subsequent append throwing IllegalStateException)
-    ingestor.flipFaultAfter = Some("model")
-    val r = ingestor.ingest(rows(300 until 310).toDF())
-    r.rebuildFailed.map(_.getMessage) shouldBe
-      Some("injected transient flip fault after 'model' commit")
-    // ...but the in-process recovery re-published from the durable
-    // staging artifacts: the rebuild landed in the SAME call
-    val m = r.rebuilt.getOrElse(fail("recovery did not publish"))
-    m.buildVer should be > oldBuildVer
-    AnnIndex.fsck(s, path).consistent shouldBe true
-    new java.io.File(s"$path/_staging").exists() shouldBe false
-    // the stream keeps flowing — no wedge, no restart needed
-    ingestor.ingest(rows(400 until 405).toDF()).rebuildFailed shouldBe None
-    AnnIndex.codes(s, path).count() shouldBe 135L
-    AnnIndex.fsck(s, path).consistent shouldBe true
   }
 
   test("restart recovery repairs an orphaned INLINE rebuild too: " +
@@ -714,45 +258,6 @@ class StreamingAnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture 
     AnnIndex.append(s, path, rows(90 until 95).toDF(), "vec_id", "v",
       ver = AnnIndex.readModel(s, path).buildVer + 100L)
     AnnIndex.codes(s, path).count() shouldBe 85L
-  }
-
-  test("a FAILED staged build does not fail the stream: the append " +
-       "lands, the error is returned (not thrown), the staging debris " +
-       "is cleaned, and the next drift re-triggers") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_staged_fail").toString + "/idx"
-    def drifted(ids: Range): Seq[VecRow] =
-      ids.map(i => VecRow(i.toLong, vec(i.toLong).map(_ * 5.0)))
-    val seed = rows(0 until 60)
-    AnnIndex.buildTrained(s, path, seed.toDF(), "vec_id", "v",
-      nLists = 4, dim = 64, m = 4, k = 4, rounds = 1, kmRounds = 1)
-    val oldBuildVer = AnnIndex.readModel(s, path).buildVer
-    val snapshot = seed ++ drifted(1000 until 1060)
-    val ingestor = new AnnIndex.Ingestor(s, path, "vec_id", "v",
-      AnnIndex.RebuildPolicy(driftFactor = 2.0, nLists = 4, dim = 64,
-        m = 4, k = 4, rounds = 1, kmRounds = 1, stagedRebuild = true),
-      corpus = () => snapshot.toDF())
-    ingestor.stagingDelay = () => sys.error("injected train failure")
-
-    ingestor.ingest(drifted(1000 until 1030).toDF()) // triggers staging
-    ingestor.awaitStaged()
-    val r = ingestor.ingest(drifted(1030 until 1060).toDF())
-    // the failure surfaced, the batch itself landed, old build serves
-    r.rebuildFailed.map(_.getMessage) shouldBe Some("injected train failure")
-    r.rebuilt shouldBe None
-    AnnIndex.readModel(s, path).buildVer shouldBe oldBuildVer
-    AnnIndex.codes(s, path).count() shouldBe 120L
-    // no debris accumulates across repeated failures
-    new java.io.File(s"$path/_staging").exists() shouldBe false
-    // with the fault gone, the still-drifting stream re-triggers and
-    // completes the rebuild end-to-end
-    ingestor.stagingDelay = () => ()
-    ingestor.ingest(drifted(1000 until 1030).toDF()) // re-triggers
-    ingestor.awaitStaged()
-    val done = ingestor.ingest(drifted(1030 until 1060).toDF())
-    done.rebuilt should not be empty
-    AnnIndex.fsck(s, path).consistent shouldBe true
   }
 
   test("occupancy-triggered rebuild: coarse-quantizer skew fires the " +
