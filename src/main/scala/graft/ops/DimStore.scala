@@ -250,21 +250,6 @@ object DimStore {
     hadoopRouted.remove(prefix); ()
   }
 
-  /** Test hook, object-store edition: table-path prefixes whose log IO
-    * runs through an [[ExternalLogStore]] (coordinator-claimed commits
-    * over raw overwrite-PUT storage — the S3-class route), so the
-    * third LogStore implementation is exercisable without an object
-    * store. A real deployment would route on the `s3:` scheme with a
-    * DynamoDB-backed coordinator configured per table root. */
-  private val externalRouted =
-    new java.util.concurrent.ConcurrentHashMap[String, LogStore]()
-  private[graft] def routeLogViaExternal(prefix: String, st: LogStore): Unit = {
-    externalRouted.put(prefix, st); ()
-  }
-  private[graft] def unrouteLogViaExternal(prefix: String): Unit = {
-    externalRouted.remove(prefix); ()
-  }
-
   /** Routing-table prefix match on a PATH boundary: `/a/b` captures
     * `/a/b` and `/a/b/...`, never the sibling `/a/bc` — a raw
     * startsWith would silently send a sibling table's commits through
@@ -274,19 +259,15 @@ object DimStore {
 
   /** The [[LogStore]] for a table path: posix (hard-link claim) for
     * local paths, Hadoop (no-overwrite-rename claim) for any remote
-    * scheme, external (coordinator claim) where routed. Per-path, so
-    * one JVM can serve every kind of table at once. */
+    * scheme or a [[routeLogViaHadoop]] prefix. Per-path, so one JVM can
+    * serve both kinds of table at once. */
   private def store(path: String): LogStore = {
     import scala.jdk.CollectionConverters._
-    externalRouted.asScala.collectFirst {
-      case (pre, st) if routeMatches(pre, path) => st
-    }.getOrElse {
-      val scheme = new Path(path).toUri.getScheme
-      val posix = scheme == null || scheme == "file"
-      if (posix && !hadoopRouted.asScala.exists(routeMatches(_, path)))
-        PosixLogStore
-      else HadoopLogStore
-    }
+    val scheme = new Path(path).toUri.getScheme
+    val posix = scheme == null || scheme == "file"
+    if (posix && !hadoopRouted.asScala.exists(routeMatches(_, path)))
+      PosixLogStore
+    else HadoopLogStore
   }
 
   private def commitsDir(path: String) = s"$path/_commits"

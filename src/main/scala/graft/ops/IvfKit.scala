@@ -7,7 +7,7 @@ import graft.functions.{IvfCoarseRank, IvfNative, IvfResidual, VecCosineD}
 
 /** The ONE formulation of IVF coarse assignment shared by the query
   * layer (x12/x75, `queries/Extensions`) and the persisted index
-  * ([[AnnIndex]] — build, append, and probe ranking). The staged
+  * ([[AnnIndex]] — build assignment and probe ranking). The staged
   * index answers byte-identically to the self-contained pipeline
   * ONLY because both sides rank through these exact expressions
   * (left-to-right folds, same tie-break, same zero-norm guard), so

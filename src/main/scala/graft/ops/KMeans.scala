@@ -26,9 +26,10 @@ object KMeans {
 
   /** Train `k` centroids over `vCol` (`array<double>`) by `rounds`
     * Lloyd iterations; returns (centroid id 0..k-1, vector) in the
-    * [[AnnIndex]]/[[IvfKit]] shape. `rounds = 0` returns the seeds —
-    * exactly the "caller-picked corpus rows" quantizer, which is what
-    * makes this a strict generalization of the fixture-id override. */
+    * shape [[AnnIndex.buildTrained]] and [[IvfKit]] consume. `rounds =
+    * 0` returns the seeds — exactly the "caller-picked corpus rows"
+    * quantizer, which is what makes this a strict generalization of
+    * the fixture-id override. */
   def train(df: DataFrame, idCol: String, vCol: String, k: Int,
             rounds: Int): Seq[(Long, Seq[Double])] = {
     val seeds = df.orderBy(col(idCol)).limit(k)

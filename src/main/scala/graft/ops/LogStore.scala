@@ -29,17 +29,6 @@ import org.apache.hadoop.fs.permission.FsPermission
   *    filesystems whose no-overwrite rename is check-then-act (the
   *    local fs), an in-JVM lock per target serializes claimants, the
   *    same single-JVM contract as Delta's `LocalLogStore`.
-  *  - [[ExternalLogStore]] (S3-class object storage — no atomic
-  *    rename-if-absent at all): the claim is a CONDITIONAL PUT into an
-  *    external [[CommitCoordinator]] (DynamoDB in Delta's published
-  *    S3-multi-cluster recipe; pluggable here), with the object store
-  *    itself only ever asked for what it actually has — atomic
-  *    whole-object overwrite PUTs. The coordinator entry is the commit
-  *    point; readers complete any claimed-but-unmaterialized write
-  *    they encounter, so a committer crash between claim and target
-  *    PUT can never lose or hide a committed version. Routed per table
-  *    path via [[DimStore.routeLogViaExternal]] (a real deployment
-  *    would key on the `s3:` scheme plus a configured coordinator).
   *
   * `FileContext` rather than `FileSystem` for the metadata ops: the
   * local `FileSystem` is checksummed (every write grows a `.crc`
@@ -327,378 +316,4 @@ private[graft] object HadoopLogStore extends LogStore {
         false, true, conf))
       throw new java.io.IOException(s"copy $src -> $dst failed")
   }
-}
-
-/** The external coordination seam an object-store commit log needs —
-  * the role DynamoDB plays in Delta's published S3 multi-cluster
-  * LogStore: ONE atomic conditional-insert primitive plus lookups.
-  * Implementations must make [[putIfAbsent]] linearizable across every
-  * concurrent committer they claim to support. */
-private[graft] trait CommitCoordinator {
-  /** Atomic conditional insert: record key → value iff key is absent.
-    * Returns false when another claimant's entry already exists. */
-  def putIfAbsent(key: String, value: String): Boolean
-  def get(key: String): Option[String]
-  /** Every (key, value) whose key starts with `prefix`. */
-  def list(prefix: String): Seq[(String, String)]
-  /** Atomic conditional update: set key → value iff key is PRESENT,
-    * returning whether it was. An unconditional update would let a
-    * completer resurrect an entry a concurrent delete just removed
-    * (DynamoDB expresses this as a conditional write, same as the
-    * insert). */
-  def updateIfPresent(key: String, value: String): Boolean
-  def remove(key: String): Unit
-}
-
-/** In-process coordinator: linearizable for any number of threads in
-  * one JVM — the unit-test stand-in for the external service. */
-private[graft] final class InMemoryCommitCoordinator extends CommitCoordinator {
-  private val m = new java.util.concurrent.ConcurrentHashMap[String, String]()
-  def putIfAbsent(key: String, value: String): Boolean =
-    m.putIfAbsent(key, value) == null
-  def get(key: String): Option[String] = Option(m.get(key))
-  def list(prefix: String): Seq[(String, String)] = {
-    import scala.jdk.CollectionConverters._
-    m.entrySet().asScala.filter(_.getKey.startsWith(prefix))
-      .map(e => (e.getKey, e.getValue)).toVector
-  }
-  def updateIfPresent(key: String, value: String): Boolean =
-    m.computeIfPresent(key, (_, _) => value) != null
-  def remove(key: String): Unit = { m.remove(key); () }
-}
-
-/** File-backed coordinator: one file per key (name = sha-256 of the
-  * key, key stored inside), conditional insert via the posix
-  * hard-link claim — linearizable across PROCESSES on one box, the
-  * cross-process stand-in for DynamoDB in this sandbox. O(entries)
-  * listings are fine at commit-log cardinality. */
-private[graft] final class FileCommitCoordinator(root: String) extends CommitCoordinator {
-  private def keyFile(key: String): String = {
-    val md = java.security.MessageDigest.getInstance("SHA-256")
-    root + "/" + md.digest(key.getBytes(StandardCharsets.UTF_8))
-      .map("%02x".format(_)).mkString
-  }
-  private def entries: Seq[(String, String)] =
-    // skip dot-prefixed names: writeAtomic/createIfAbsent stage their
-    // in-flight temps as `.…` files in this same dir, and reading a
-    // half-written temp would surface a phantom (key, truncated-value)
-    // pair to a concurrent lister; real key files are sha-256 hex
-    PosixLogStore.list(root).filterNot(_.startsWith(".")).flatMap { n =>
-      try {
-        val body = PosixLogStore.readString(s"$root/$n")
-        val i = body.indexOf('\n')
-        if (i < 0) None else Some((body.substring(0, i), body.substring(i + 1)))
-      } catch { case _: java.io.IOException => None }
-    }
-  def putIfAbsent(key: String, value: String): Boolean =
-    PosixLogStore.createIfAbsent(keyFile(key), s"$key\n$value")
-  def get(key: String): Option[String] =
-    try {
-      val body = PosixLogStore.readString(keyFile(key))
-      Some(body.substring(body.indexOf('\n') + 1))
-    } catch { case _: java.io.IOException => None }
-  def list(prefix: String): Seq[(String, String)] =
-    entries.filter(_._1.startsWith(prefix))
-  def updateIfPresent(key: String, value: String): Boolean =
-    // check-then-write: a remove landing inside the gap re-creates the
-    // entry — a narrower stand-in for DynamoDB's genuinely atomic
-    // conditional write, same honesty class as HadoopLogStore's
-    // in-JVM-only local-fs atomicity (both documented, neither is the
-    // production route)
-    if (!PosixLogStore.exists(keyFile(key))) false
-    else { PosixLogStore.writeAtomic(keyFile(key), s"$key\n$value"); true }
-  def remove(key: String): Unit = PosixLogStore.delete(keyFile(key))
-}
-
-/** Simulated S3-class object store: atomic whole-object overwrite PUT,
-  * GET, LIST, DELETE — and NOTHING else. [[createIfAbsent]] throws
-  * (S3 has no atomic create-if-absent; that is the entire reason
-  * [[ExternalLogStore]] exists), and [[rename]] is what an object
-  * store's "rename" actually is: copy then delete, NOT atomic. Local-
-  * fs-backed so the object-store route is exercisable in tests; using
-  * posix primitives internally to IMPLEMENT an atomic PUT is fair —
-  * S3 gives that guarantee natively. */
-private[graft] object ObjectStoreSim extends LogStore {
-  def exists(p: String): Boolean = PosixLogStore.exists(p)
-  def isDir(p: String): Boolean = PosixLogStore.isDir(p)
-  def mkdirs(p: String): Unit = PosixLogStore.mkdirs(p)
-  def list(p: String): Seq[String] = PosixLogStore.list(p)
-  def readString(p: String): String = PosixLogStore.readString(p)
-  def writeAtomic(p: String, body: String): Unit =
-    PosixLogStore.writeAtomic(p, body)
-  def createIfAbsent(p: String, body: String): Boolean =
-    throw new UnsupportedOperationException(
-      "object store has no atomic create-if-absent — commit through " +
-      "ExternalLogStore's coordinator claim")
-  def delete(p: String): Unit = PosixLogStore.delete(p)
-  def deleteTree(p: String): Unit = PosixLogStore.deleteTree(p)
-  def rename(src: String, dst: String): Unit = {
-    // copy-then-delete, the only "rename" an object store has. Safe
-    // for the data path (generation dirs become visible only via the
-    // manifest commit); never used for the commit claim.
-    if (exists(dst))
-      throw new java.io.IOException(s"rename target exists: $dst")
-    val from = Paths.get(new HPath(src).toUri.getPath match {
-      case null => src; case q => q })
-    val to = Paths.get(new HPath(dst).toUri.getPath match {
-      case null => dst; case q => q })
-    if (Files.isDirectory(from)) {
-      val w = Files.walk(from)
-      try {
-        import scala.jdk.CollectionConverters._
-        w.iterator().asScala.toVector.foreach { f =>
-          val t = to.resolve(from.relativize(f).toString)
-          if (Files.isDirectory(f)) Files.createDirectories(t)
-          else {
-            Files.createDirectories(t.getParent)
-            Files.copy(f, t, StandardCopyOption.REPLACE_EXISTING)
-          }
-        }
-      } finally w.close()
-    } else {
-      Files.createDirectories(to.getParent)
-      Files.copy(from, to, StandardCopyOption.REPLACE_EXISTING)
-    }
-    PosixLogStore.deleteTree(src)
-  }
-  def identity(p: String): AnyRef = PosixLogStore.identity(p)
-  def modifiedMs(p: String): Long = PosixLogStore.modifiedMs(p)
-  def treeBytes(p: String): Long = PosixLogStore.treeBytes(p)
-  /** Object stores have no hard links — a clone is a real copy. */
-  def cloneTree(src: String, dst: String): Unit = {
-    val from = Paths.get(new HPath(src).toUri.getPath match {
-      case null => src; case q => q })
-    val to = Paths.get(new HPath(dst).toUri.getPath match {
-      case null => dst; case q => q })
-    val w = Files.walk(from)
-    try {
-      import scala.jdk.CollectionConverters._
-      w.iterator().asScala.toVector.foreach { f =>
-        val t = to.resolve(from.relativize(f).toString)
-        if (Files.isDirectory(f)) Files.createDirectories(t)
-        else {
-          Files.createDirectories(t.getParent)
-          Files.copy(f, t, StandardCopyOption.REPLACE_EXISTING)
-        }
-      }
-    } finally w.close()
-  }
-}
-
-/** Delta's published external-LogStore pattern (the
-  * `BaseExternalLogStore`/`S3DynamoDBLogStore` recipe) over a raw
-  * object store: the commit claim is a conditional put into the
-  * [[CommitCoordinator]], and the object store is only ever asked for
-  * atomic overwrite PUTs.
-  *
-  * Commit protocol for [[createIfAbsent]]:
-  *  1. PUT the body at a temp object next to the target.
-  *  2. Conditional-insert (target → pending:temp) into the
-  *     coordinator. THIS is the commit point: exactly one of N
-  *     concurrent claimants wins, losers delete their temp and report
-  *     a lost race.
-  *  3. PUT the body at the target, mark the entry complete, delete
-  *     the temp.
-  * A crash between 2 and 3 leaves a committed-but-unmaterialized
-  * version; every read-side operation first COMPLETES any pending
-  * entry it touches (copy temp → target, mark complete), so the
-  * committed version is never lost and never invisible — the
-  * listing-consistency rule of Delta's S3 recipe. Entries live as
-  * long as their target (removed on manifest delete/vacuum); a real
-  * DynamoDB deployment would add TTL expiry for completed entries. */
-private[graft] object ExternalLogStore {
-  /** Age past which an unreferenced `.commit-tmp-` object is debris a
-    * listing may sweep — generous against clock skew and slow PUTs. */
-  private[graft] val TmpTtlMs: Long = 15L * 60 * 1000
-  /** Age past which a COMPLETED coordinator entry expires (the
-    * documented DynamoDB-TTL analogue): once the target object is
-    * durably materialized, the entry's only job is done, and without
-    * expiry coordinator state grows with log LIFETIME instead of
-    * in-flight commits. Safety rests on two facts: (a) recovery only
-    * ever acts on `pending:` entries, so an expired completed entry
-    * can never resurrect anything (vacuumed versions included), and
-    * (b) [[ExternalLogStore.createIfAbsent]] probes the base store
-    * for the target before claiming, so create-if-absent semantics
-    * survive the entry's absence. Generous against clock skew; a
-    * real DynamoDB deployment sets this as the item TTL. */
-  private[graft] val CompleteTtlMs: Long = 15L * 60 * 1000
-}
-
-private[graft] final class ExternalLogStore(
-    base: LogStore, coord: CommitCoordinator,
-    completeTtlMs: Long = ExternalLogStore.CompleteTtlMs) extends LogStore {
-  private val Complete = "complete"
-  private val TmpPrefix = ".commit-tmp-"
-
-  private def isPending(v: String): Boolean = v.startsWith("pending:")
-  /** Completion stamps carry their wall time so listings can expire
-    * them; the legacy bare `complete` (no timestamp) parses as
-    * inexpirable — never swept, only ever a pre-TTL artifact. */
-  private def completeStamp(): String =
-    s"$Complete:${System.currentTimeMillis()}"
-  private def completedAtOf(v: String): Option[Long] =
-    if (isPending(v)) None
-    else v.split(':') match {
-      case Array(_, ts) => ts.toLongOption
-      case _ => None
-    }
-
-  private def parentOf(p: String): String = {
-    val i = p.lastIndexOf('/')
-    require(i > 0, s"no parent: $p")
-    p.substring(0, i)
-  }
-  private def nameOf(p: String): String = p.substring(p.lastIndexOf('/') + 1)
-
-  /** Complete a claimed-but-unmaterialized commit in place. Any
-    * number of readers may race each other (and the original
-    * committer) here: a concurrent completer can materialize the
-    * target and retire the temp BETWEEN this reader's existence
-    * checks, so a missing temp is re-checked against the coordinator
-    * and target before being declared corruption — only a
-    * still-pending claim with BOTH objects absent is a real loss. */
-  private def recoverEntry(p: String): Unit = {
-    val v0 = coord.get(p)
-    if (v0.exists(isPending)) {
-      val tmp = v0.get.stripPrefix("pending:")
-      var concurrentlyRemoved = false
-      if (!base.exists(p)) {
-        val body =
-          try { if (base.exists(tmp)) Some(base.readString(tmp)) else None }
-          catch { case _: java.io.IOException => None } // temp retired mid-read
-        body match {
-          case Some(b) => base.writeAtomic(p, b)
-          case None =>
-            val now = coord.get(p)
-            if (now.exists(isPending) && !base.exists(p))
-              throw new java.io.IOException(
-                s"commit $p claimed but neither target nor temp $tmp exists")
-            // a concurrent delete() may have removed the entry outright;
-            // re-marking it Complete would resurrect a deleted version
-            concurrentlyRemoved = now.isEmpty
-        }
-      }
-      if (!concurrentlyRemoved && !coord.updateIfPresent(p, completeStamp())) {
-        // the entry vanished between our pending read and the
-        // completion mark — a concurrent delete() of this version.
-        // delete() removes the target BEFORE the entry, so any target
-        // object present now is OUR rematerialization from the temp;
-        // leaving it would resurrect the deleted version as a live
-        // object in the base listing.
-        if (base.exists(p)) base.delete(p)
-      }
-      if (base.exists(tmp)) base.delete(tmp)
-    }
-  }
-
-  /** Steps 1–2 only — the "crashed after the commit point" state, for
-    * crash-window tests. Returns whether the claim won. */
-  private[graft] def claimOnly(p: String, body: String): Boolean = {
-    val tmp = s"${parentOf(p)}/$TmpPrefix${java.util.UUID.randomUUID().toString.take(8)}"
-    base.writeAtomic(tmp, body)
-    if (coord.putIfAbsent(p, s"pending:$tmp")) true
-    else { base.delete(tmp); false }
-  }
-
-  /** Winner-path completion: unlike [[recoverEntry]] (which only knows
-    * the temp path), the winner still holds the BODY in memory — so a
-    * temp that vanished between the claim and this step (a concurrent
-    * listing TTL-sweeping it during a long stall) is rematerialized
-    * directly instead of surfacing as a poisoned committed version
-    * every later reader throws on. The concurrent-delete guard mirrors
-    * recoverEntry's: if the entry vanished before the completion mark,
-    * a delete() of this version raced us — remove the target we just
-    * wrote rather than resurrect the deleted version. */
-  private def completeAsWinner(p: String, body: String): Unit = {
-    val tmp = coord.get(p) match {
-      case Some(v) if isPending(v) => Some(v.stripPrefix("pending:"))
-      case _ => None
-    }
-    if (!base.exists(p)) base.writeAtomic(p, body)
-    if (!coord.updateIfPresent(p, completeStamp())) {
-      if (base.exists(p)) base.delete(p)
-    }
-    tmp.filter(base.exists).foreach(base.delete)
-  }
-
-  def createIfAbsent(p: String, body: String): Boolean =
-    // probe the base store FIRST: a completed entry may have TTL-expired
-    // from the coordinator while its target object lives on — claiming
-    // then would "win" and overwrite a committed version. (recoverEntry
-    // inside exists() also completes any pending claim in passing, so
-    // the probe sees claimed-but-unmaterialized commits too.)
-    if (exists(p)) false
-    else if (claimOnly(p, body)) {
-      // we won: materialize the target and retire the temp, from the
-      // in-memory body (the temp is only the durability bridge between
-      // the PUT and the claim — the coordinator never references a
-      // body that isn't durably stored somewhere).
-      completeAsWinner(p, body)
-      true
-    } else {
-      // lost the race — make sure the winner's version is visible
-      // before reporting it (the winner may have crashed mid-publish)
-      recoverEntry(p)
-      false
-    }
-
-  def exists(p: String): Boolean = { recoverEntry(p); base.exists(p) }
-  def isDir(p: String): Boolean = base.isDir(p)
-  def mkdirs(p: String): Unit = base.mkdirs(p)
-
-  /** Listing = object-store listing ∪ coordinator entries under the
-    * directory (completed in passing) — an object-store LIST alone may
-    * miss a claimed-but-unmaterialized commit. Listings also sweep
-    * temp DEBRIS: a writer that crashed between its temp PUT and the
-    * coordinator claim strands a `.commit-tmp-` object nothing
-    * references; any such object older than [[ExternalLogStore.TmpTtlMs]]
-    * and not named by a pending entry is deleted (Delta's TTL rule —
-    * the age bound is what keeps an in-flight writer's seconds-old
-    * temp safe from a concurrent lister). */
-  def list(p: String): Seq[String] = {
-    val pend = coord.list(p + "/")
-      .filter { case (k, _) => !nameOf(k).isEmpty && parentOf(k) == p }
-    pend.foreach { case (k, _) => recoverEntry(k) }
-    // expire COMPLETED entries past the TTL (the DynamoDB-TTL
-    // analogue): their target is durably materialized, recovery never
-    // acts on non-pending entries, and createIfAbsent probes the base
-    // store before claiming — so expiry bounds coordinator state at
-    // O(in-flight commits) without any correctness surface. Only
-    // entries whose stamp carries a parseable time age out.
-    pend.foreach { case (k, v) =>
-      completedAtOf(v).foreach { ts =>
-        if (System.currentTimeMillis() - ts > completeTtlMs) coord.remove(k)
-      }
-    }
-    val names = base.list(p)
-    val referenced = pend.map(_._2).collect {
-      case v if isPending(v) => nameOf(v.stripPrefix("pending:"))
-    }.toSet
-    names.filter(_.startsWith(TmpPrefix))
-      .filterNot(referenced)
-      .foreach { n =>
-        val f = s"$p/$n"
-        try {
-          if (System.currentTimeMillis() - base.modifiedMs(f) >
-              ExternalLogStore.TmpTtlMs)
-            base.delete(f)
-        } catch { case _: java.io.IOException => () }
-      }
-    (names.filterNot(_.startsWith(TmpPrefix)) ++
-      pend.map { case (k, _) => nameOf(k) }).distinct
-  }
-
-  def readString(p: String): String = { recoverEntry(p); base.readString(p) }
-  def writeAtomic(p: String, body: String): Unit = base.writeAtomic(p, body)
-  def delete(p: String): Unit = { base.delete(p); coord.remove(p) }
-  def deleteTree(p: String): Unit = {
-    base.deleteTree(p)
-    coord.list(p + "/").foreach { case (k, _) => coord.remove(k) }
-    coord.remove(p)
-  }
-  def rename(src: String, dst: String): Unit = base.rename(src, dst)
-  def identity(p: String): AnyRef = { recoverEntry(p); base.identity(p) }
-  def modifiedMs(p: String): Long = { recoverEntry(p); base.modifiedMs(p) }
-  def treeBytes(p: String): Long = base.treeBytes(p)
-  def cloneTree(src: String, dst: String): Unit = base.cloneTree(src, dst)
 }

@@ -47,8 +47,8 @@ object ProductQuantizer {
 
   /** L2² of `v`'s m-th slice against EVERY centroid of one codebook,
     * as a k-array column — one native codegen'd (x−y)² left-fold per
-    * codeword ([[graft.functions.PqSubspaceDist2]]), so assignment,
-    * error, and ADC share one compiled kernel. The per-codeword
+    * codeword ([[graft.functions.PqSubspaceDist2]]), so assignment
+    * and ADC share one compiled kernel. The per-codeword
     * unrolled `slice`+`zip_with` forms this replaces computed the
     * same doubles in the same order (bit-identity pinned by
     * IvfRouteSpec's driver references) but paid interpreted HOF eval
@@ -56,24 +56,41 @@ object ProductQuantizer {
     * livelocked Catalyst's runtime CSE setup past k≈16 (SCALEPROBE
     * round 15). */
   /** One `Broadcast` of the flat-primitive codebook payload per
-    * codebook-array INSTANCE per context — same round-17 payload
-    * policy as [[IvfKit.centroidBc]]: the plan carries an O(1) handle,
-    * executors fetch the k×subDim doubles once, and assignment/error/
-    * ADC over the same model share one payload. */
+    * codebook CONTENT per context — same round-17 payload policy as
+    * [[IvfKit.centroidBc]]: the plan carries an O(1) handle, executors
+    * fetch the k×subDim doubles once, and assignment and ADC over the
+    * same model share one payload.
+    *
+    * Keyed by the codebook's bits, not by array instance: a query that
+    * trains per run (x72, x75) builds equal codebooks as new arrays
+    * each run. The handle's identity hash is part of
+    * [[graft.functions.PqSubspaceDist2]]'s semantic hash, and
+    * whole-stage CSE orders the equal-height `pq_subspace_dist2`
+    * subexpressions of [[nearest]] by that hash, so a fresh handle
+    * renumbers the generated variables and Janino compiles the stage
+    * again. Bounded to the 64 most recently used codebooks (k×subDim
+    * doubles each). */
+  private type CbKey = (Int, Vector[Long])
+  private type CbEntry = (org.apache.spark.SparkContext,
+    org.apache.spark.broadcast.Broadcast[graft.functions.IvfNative.CodebookPayload])
   private val cbCache =
-    new java.util.WeakHashMap[AnyRef, (org.apache.spark.SparkContext,
-      org.apache.spark.broadcast.Broadcast[graft.functions.IvfNative.CodebookPayload])]()
+    new java.util.LinkedHashMap[CbKey, CbEntry](16, 0.75f, true) {
+      override def removeEldestEntry(e: java.util.Map.Entry[CbKey, CbEntry]): Boolean =
+        size() > 64
+    }
 
   private def codebookBc(cb: Array[Array[Double]])
       : org.apache.spark.broadcast.Broadcast[graft.functions.IvfNative.CodebookPayload] =
     cbCache.synchronized {
       val sc = org.apache.spark.sql.SparkSession.active.sparkContext
-      val hit = cbCache.get(cb)
+      val key = (cb.length,
+        cb.iterator.flatMap(_.iterator).map(java.lang.Double.doubleToRawLongBits).toVector)
+      val hit = cbCache.get(key)
       if (hit != null && (hit._1 eq sc) && !sc.isStopped) hit._2
       else {
         val bc = sc.broadcast(graft.functions.IvfNative.codebookPayload(
           cb.toIndexedSeq.map(_.toIndexedSeq)))
-        cbCache.put(cb, (sc, bc))
+        cbCache.put(key, (sc, bc))
         bc
       }
     }
@@ -150,19 +167,6 @@ object ProductQuantizer {
       .groupBy(col("m"), col("cluster"), col("pos"))
       .agg(sum(col("__x").cast(SumDec)).as("sx"), count(lit(1)).as("n"))
   }
-
-  /** Σ over subspaces of the squared distance to the NEAREST centroid
-    * — the quantization (reconstruction) error of encoding `v` under
-    * the model, via `array_min` over the same distance array
-    * [[nearest]] ranks, so error and assignment can never disagree.
-    * The per-corpus mean of this is the model-fit statistic the
-    * freeze/maintain contract monitors: appended batches whose mean
-    * error drifts far above the build-time baseline are drawn from a
-    * distribution the frozen codebooks no longer cover. */
-  def quantizationError(v: Column, model: PqModel): Column =
-    (0 until model.m).map { mi =>
-      array_min(dist2Arr(v, mi, model.subDim, model.codebooks(mi)))
-    }.reduce(_ + _)
 
   /** Append `pq_code0..pq_code{m-1}` int columns — the stored index. */
   def encode(df: DataFrame, vCol: String, model: PqModel): DataFrame =

@@ -966,8 +966,8 @@ private[queries] trait ExtensionsAnn { this: Extensions.type =>
   // requires — x75 deliberately remains the self-contained pipeline
   // (it IS the training/encode price, and its oracle grades that
   // machinery); x78 grades that the staged index answers
-  // byte-identically (same oracle), and AnnIndexSpec pins incremental
-  // maintenance (per-batch append == full re-encode) on top.
+  // byte-identically (same oracle), and AnnIndexSpec pins the build,
+  // delete and purge crash windows on top.
   lazy val x78 = Q(
     "x78_ivfadc_staged",
     (s, dir) => {
@@ -1110,8 +1110,8 @@ private[queries] trait ExtensionsAnn { this: Extensions.type =>
   // pattern) and serves x12's inverted-list top-10 chain from the
   // TRAINED centroids. This pins that trained-quantizer serving — not
   // just fixture-row serving — is bit-reproducible across engines,
-  // which is what lets AnnIndex.Ingestor's drift-triggered rebuild (an
-  // inline buildTrained) replace the quantizer without a behavioral seam.
+  // which is what lets a rebuild through buildTrained replace the
+  // quantizer without a behavioral seam.
   // Scale shape: identical to x12 (centroid state is k·dim doubles —
   // kilobytes — collected once and shipped as literals; assignment is
   // a pure narrow map; the probe join broadcasts).
@@ -1208,7 +1208,8 @@ private[queries] trait ExtensionsAnn { this: Extensions.type =>
   // above the query range, plus one id the index never held — the
   // harmless no-op contract), then the bounded tombstone purge
   // ([[graft.ops.AnnIndex.purgeTombstones]] — O(tombstoned buckets),
-  // no rebuild), then the same ADC top-10 serve as x78. Grades
+  // no rebuild), then the same ADC top-10 serve as x78. Delete and
+  // purge are the only index mutations between rebuilds. Grades
   // cross-engine what only specs pinned until now: a deleted vector is
   // unservable and PHYSICAL reclamation changes no surviving answer.
   // The oracle re-derives the full x75/x78 train/encode/score chain

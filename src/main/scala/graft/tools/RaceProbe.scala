@@ -20,14 +20,6 @@ import org.apache.spark.sql.functions._
   *    final value (no batch's effects dropped). Prints one JSON line;
   *    exits nonzero on violation.
   *
-  * Route: set `RACE_ROUTE=external` to run the same race through the
-  * object-store LogStore — commits claimed via a shared
-  * [[graft.ops.FileCommitCoordinator]] at `<path>.coord` over the raw
-  * overwrite-PUT [[graft.ops.ObjectStoreSim]] — so the coordinator's
-  * cross-process conditional insert is the only arbiter, exactly the
-  * role DynamoDB plays in the S3 deployment. Default: posix hard-link
-  * route.
-  *
   * Drive it: `sbt package`, then two parallel spark-submit `write`
   * invocations followed by one `check` (see SCALEPROBE.md).
   */
@@ -35,12 +27,6 @@ object RaceProbe {
   def main(args: Array[String]): Unit = {
     val mode = args(0)
     val path = args(1)
-    if (sys.env.get("RACE_ROUTE").contains("external")) {
-      val coord = new graft.ops.FileCommitCoordinator(s"$path.coord")
-      graft.ops.PosixLogStore.mkdirs(s"$path.coord")
-      graft.ops.DimStore.routeLogViaExternal(path,
-        new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord))
-    }
     val spark = graft.core.GraftSession.builder("RaceProbe", cores = 8).getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
     import spark.implicits._

@@ -8,9 +8,9 @@ import org.scalatest.matchers.should.Matchers
 
 import graft.ops.AnnIndex
 
-/** The persisted ANN index: built once, maintained incrementally,
-  * answering identically to the self-contained per-invocation
-  * pipeline. */
+/** The persisted ANN index: built once, changed between rebuilds only
+  * by tombstones, answering identically to the self-contained
+  * per-invocation pipeline. */
 class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
 
   private val Cents = Seq(10L, 20L, 30L, 40L)
@@ -50,126 +50,17 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     direct should not be empty
   }
 
-  test("incremental append == full re-encode under the frozen model; " +
-       "a re-ingested vector LWW-replaces its row") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_idx").toString + "/idx"
-    // build on a prefix (must contain the coarse centroid ids), then
-    // maintain with two later batches
-    val base = e.filter($"vec_id" < 300)
-    val b1 = e.filter($"vec_id" >= 300 && $"vec_id" < 400)
-    val b2 = e.filter($"vec_id" >= 400)
-    val model = AnnIndex.build(s, path, base, "vec_id", "v",
-      centroidIds = Cents, dim = 64, m = 4, k = 4, rounds = 1)
-    AnnIndex.append(s, path, b1, "vec_id", "v", ver = 2L)
-    AnnIndex.append(s, path, b2, "vec_id", "v", ver = 3L)
-    // staged rows == one-shot encode of the FULL corpus with the same
-    // frozen model: per-batch maintenance loses nothing and encodes
-    // nothing differently
-    codeRows(AnnIndex.codes(s, path)) shouldBe
-      codeRows(AnnIndex.encodeWith(e, "vec_id", "v", model))
-    // the frozen model round-trips bit-exactly through the store
-    val m2 = AnnIndex.readModel(s, path)
-    m2.centroids shouldBe model.centroids
-    m2.pq.codebooks.flatten.flatten.toSeq shouldBe
-      model.pq.codebooks.flatten.flatten.toSeq
-    // re-ingest vec 5 with changed content at a newer version: its
-    // row is re-encoded and replaces the old one (LWW), everything
-    // else untouched
-    val updated = e.filter($"vec_id" === 5L)
-      .select($"vec_id", reverse($"v").as("v"))
-    AnnIndex.append(s, path, updated, "vec_id", "v", ver = 4L)
-    val after = AnnIndex.codes(s, path)
-    codeRows(after.filter($"vec_id" === 5L)) shouldBe
-      codeRows(AnnIndex.encodeWith(updated, "vec_id", "v", model))
-    codeRows(after.filter($"vec_id" =!= 5L)) shouldBe
-      codeRows(AnnIndex.encodeWith(e.filter($"vec_id" =!= 5L),
-        "vec_id", "v", model))
-  }
-
-  test("ingest drift: an in-distribution batch reports fit ≈ baseline; " +
-       "an out-of-distribution batch recommends a rebuild — and still " +
-       "lands (searchable at degraded precision)") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_drift").toString + "/idx"
-    val model = AnnIndex.build(s, path, e.filter($"vec_id" < 400),
-      "vec_id", "v", centroidIds = Cents, dim = 64, m = 4, k = 4,
-      rounds = 1)
-    model.baselineErr should be > 0.0
-    // in-distribution: the held-out tail of the same fixture
-    val ok = AnnIndex.append(s, path, e.filter($"vec_id" >= 400),
-      "vec_id", "v", ver = 2L)
-    ok.rebuildRecommended shouldBe false
-    ok.ratio should be < 2.0
-    // out-of-distribution: scale the vectors 5× — residual magnitudes
-    // (and with them quantization error) blow up ~25× past anything
-    // the frozen codebooks were trained to cover
-    val shifted = e.filter($"vec_id" >= 400)
-      .select(($"vec_id" + 10000L).as("vec_id"),
-        transform($"v", x => x * 5.0).as("v"))
-    val bad = AnnIndex.append(s, path, shifted, "vec_id", "v", ver = 3L)
-    bad.rebuildRecommended shouldBe true
-    bad.ratio should be > 2.0
-    // the drifted rows are IN the index (nothing dropped while the
-    // rebuild is pending)
-    AnnIndex.codes(s, path).filter($"vec_id" >= 10000L).count() shouldBe
-      e.filter($"vec_id" >= 400).count()
-    // empty batch: no commit effect needed, NaN fit, no recommendation
-    val none = AnnIndex.append(s, path, e.filter($"vec_id" < 0),
-      "vec_id", "v", ver = 4L)
-    none.rebuildRecommended shouldBe false
-    none.batchMeanErr.isNaN shouldBe true
-    // baseline round-trips through the model table
-    AnnIndex.readModel(s, path).baselineErr shouldBe model.baselineErr
-  }
-
-  test("maintenance is O(touched buckets): a one-vector append's commit " +
-       "generation holds one bucket dir, not the table fan-out") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_idx_g").toString + "/idx"
-    AnnIndex.build(s, path, e, "vec_id", "v",
-      centroidIds = Cents, dim = 64, m = 4, k = 4, rounds = 1,
-      nBuckets = 16)
-    AnnIndex.append(s, path, e.filter($"vec_id" === 7L), "vec_id", "v",
-      ver = 2L)
-    val gens = java.nio.file.Paths.get(path, "codes", "_gens")
-    val v2gens = {
-      val l = Files.list(gens)
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala.map(_.getFileName.toString)
-          .filter(_.startsWith(f"g${2L}%020d")).toVector
-      } finally l.close()
-    }
-    v2gens.size shouldBe 1
-    val buckets = {
-      val l = Files.list(gens.resolve(v2gens.head))
-      try {
-        import scala.jdk.CollectionConverters._
-        l.iterator().asScala.map(_.getFileName.toString)
-          .count(_.startsWith("__bucket="))
-      } finally l.close()
-    }
-    buckets shouldBe 1
-  }
-
   test("a rebuild on an existing index path REPLACES both tables: no " +
        "old/new row mixing, dropped vectors gone, and a replayed " +
        "pre-rebuild append cannot resurrect stale rows") {
     val s = spark
     import s.implicits._
     val path = Files.createTempDirectory("ann_rebuild").toString + "/idx"
-    AnnIndex.build(s, path, e.filter($"vec_id" < 300), "vec_id", "v",
+    AnnIndex.build(s, path, e.filter($"vec_id" < 400), "vec_id", "v",
       centroidIds = Cents, dim = 64, m = 4, k = 4, rounds = 1)
-    AnnIndex.append(s, path,
-      e.filter($"vec_id" >= 300 && $"vec_id" < 400), "vec_id", "v",
-      ver = 2L)
-    // drift-triggered rebuild: different corpus slice (0..99 dropped),
-    // different coarse centroids — everything about the old model/
-    // codes must be replaced, not merged
+    // rebuild: different corpus slice (0..99 dropped), different
+    // coarse centroids — everything about the old model/codes must be
+    // replaced, not merged
     val corpus2 = e.filter($"vec_id" >= 100 && $"vec_id" < 500)
     val cents2 = Seq(110L, 120L, 130L, 140L)
     val model2 = AnnIndex.build(s, path, corpus2, "vec_id", "v",
@@ -186,57 +77,7 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     val expect = codeRows(AnnIndex.encodeWith(corpus2, "vec_id", "v", model2))
     codeRows(AnnIndex.codes(s, path)) shouldBe expect
     AnnIndex.codes(s, path).filter($"vec_id" < 100).count() shouldBe 0L
-    // a REPLAYED pre-rebuild append (old batch version, mutated
-    // content) loses LWW against the rebuilt rows
-    val replay = corpus2.filter($"vec_id" === 150L)
-      .select($"vec_id", transform($"v", x => -x).as("v"))
-    AnnIndex.append(s, path, replay, "vec_id", "v", ver = 2L)
-    codeRows(AnnIndex.codes(s, path)) shouldBe expect
     AnnIndex.fsck(s, path).consistent shouldBe true
-  }
-
-  test("index maintenance rides the dim-store policy: per-append " +
-       "fragmentation heals, history vacuums, and answers are unchanged") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_maint").toString + "/idx"
-    val model = AnnIndex.build(s, path, e.filter($"vec_id" < 300),
-      "vec_id", "v", centroidIds = Cents, dim = 64, m = 4, k = 4,
-      rounds = 1, nBuckets = 4)
-    // 8 small appends: one commit generation each — the streaming
-    // accretion shape the policy exists for
-    (0 until 8).foreach { i =>
-      AnnIndex.append(s, path,
-        e.filter($"vec_id" >= 300 + i * 25 && $"vec_id" < 325 + i * 25),
-        "vec_id", "v", ver = (i + 2).toLong)
-    }
-    val before = codeRows(AnnIndex.codes(s, path))
-    // report-only: the tiny fixture at default byte targets reads as
-    // over-fanned-out, so the policy has a recommendation — and
-    // recommends without committing
-    val h0 = graft.ops.DimStore.history(path + "/codes")
-    val m0 = AnnIndex.maintain(s, path, maxFilesPerBucket = 2,
-      apply = false)
-    (m0.codes.rebucketTo.isDefined || m0.codes.compactRecommended) shouldBe true
-    graft.ops.DimStore.history(path + "/codes") shouldBe h0
-    // applied + vacuum: layout heals, history prunes, content identical
-    val m1 = AnnIndex.maintain(s, path, maxFilesPerBucket = 2,
-      vacuumKeepLast = 1, vacuumGraceMillis = 0L, occupancyCheck = true)
-    m1.codes.applied should not be empty
-    // the balance audit rides along WHEN ASKED FOR (it scans the codes
-    // table, so layout-only maintenance defaults it off): this
-    // fixture's lists are all populated, nowhere near the threshold
-    m0.occupancy shouldBe None // default: no audit, no extra scan
-    val occ1 = m1.occupancy.getOrElse(fail("requested audit missing"))
-    occ1.nLists shouldBe Cents.size
-    occ1.rows shouldBe before.size.toLong
-    codeRows(AnnIndex.codes(s, path)) shouldBe before
-    graft.ops.DimStore.history(path + "/codes").size shouldBe 1
-    // the frozen model survives its vacuum bit-exactly
-    val m2 = AnnIndex.readModel(s, path)
-    m2.centroids shouldBe model.centroids
-    m2.pq.codebooks.flatten.flatten.toSeq shouldBe
-      model.pq.codebooks.flatten.flatten.toSeq
   }
 
   test("buildTrained: the trained coarse quantizer serves the full " +
@@ -255,11 +96,9 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     m2.centroids shouldBe model.centroids
     m2.pq.codebooks.flatten.flatten.toSeq shouldBe
       model.pq.codebooks.flatten.flatten.toSeq
-    // incremental maintenance under the trained quantizer loses nothing
-    AnnIndex.append(s, path, e.filter($"vec_id" >= 300), "vec_id", "v",
-      ver = 2L)
+    // the staged codes are exactly a full encode under the trained model
     codeRows(AnnIndex.codes(s, path)) shouldBe
-      codeRows(AnnIndex.encodeWith(e, "vec_id", "v", model))
+      codeRows(AnnIndex.encodeWith(base, "vec_id", "v", model))
     // and the staged scoring tail answers k rows per query from it
     val probes = AnnIndex.queryProbes(e.filter($"vec_id" <= 2),
       "vec_id", "v", m2, nProbes = 2)
@@ -289,8 +128,8 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     val top1 = topK()
     top1 should not be empty
 
-    // a drift-triggered rebuild (new corpus, new centroids) that dies
-    // after EACH of its table commits, before the pointer flip
+    // a rebuild (new corpus, new centroids) that dies after EACH of
+    // its table commits, before the pointer flip
     val corpus2 = e.filter($"vec_id" >= 100 && $"vec_id" < 500)
     val cents2 = Seq(110L, 120L, 130L, 140L)
     for (crashAt <- Seq("model", "codes")) {
@@ -309,6 +148,13 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
       // the audit finds NOTHING on the crash path — atomicity made the
       // window invisible, fsck is a consistency audit, not a detector
       AnnIndex.fsck(s, path).consistent shouldBe true
+      // but the tombstone writers refuse an index whose model table
+      // holds an unpublished rebuild commit: tombstones merged into
+      // the new-model codes would publish a model mix at the next flip
+      an[IllegalStateException] should be thrownBy
+        AnnIndex.delete(s, path, Seq(5L), ver = 100L)
+      an[IllegalStateException] should be thrownBy
+        AnnIndex.purgeTombstones(s, path)
     }
 
     // the retried rebuild publishes whole (strictly above the debris)
@@ -318,6 +164,9 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     codeRows(AnnIndex.codes(s, path)) shouldBe
       codeRows(AnnIndex.encodeWith(corpus2, "vec_id", "v", model2))
     AnnIndex.fsck(s, path).consistent shouldBe true
+    // and the published rebuild takes deletes again
+    AnnIndex.delete(s, path, Seq(150L), ver = model2.buildVer + 1L)
+    AnnIndex.codes(s, path).filter($"vec_id" === 150L).count() shouldBe 0L
   }
 
   test("fresh-path crash publishes NOTHING: readers see 'no index', " +
@@ -337,29 +186,6 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
       centroidIds = Cents, dim = 64, m = 4, k = 4, rounds = 1)
     codeRows(AnnIndex.codes(s, path)) shouldBe
       codeRows(AnnIndex.encodeWith(corpus, "vec_id", "v", model))
-    AnnIndex.fsck(s, path).consistent shouldBe true
-  }
-
-  test("an append crash before the pointer flip leaves the batch " +
-       "committed but invisible; at-least-once redelivery lands it") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_atomic_app").toString + "/idx"
-    val base = e.filter($"vec_id" < 300)
-    val b1 = e.filter($"vec_id" >= 300 && $"vec_id" < 400)
-    val model = AnnIndex.build(s, path, base, "vec_id", "v",
-      centroidIds = Cents, dim = 64, m = 4, k = 4, rounds = 1)
-    val before = codeRows(AnnIndex.codes(s, path))
-    an[graft.ops.AnnIndex.InjectedCrash] should be thrownBy
-      AnnIndex.appendCrashing(s, path, b1, "vec_id", "v", ver = 2L)
-    // committed to the codes log, but unpublished: readers see the
-    // pre-append snapshot, and the audit is clean
-    codeRows(AnnIndex.codes(s, path)) shouldBe before
-    AnnIndex.fsck(s, path).consistent shouldBe true
-    // the redelivered batch re-merges idempotently and publishes
-    AnnIndex.append(s, path, b1, "vec_id", "v", ver = 2L)
-    codeRows(AnnIndex.codes(s, path)) shouldBe
-      codeRows(AnnIndex.encodeWith(base.unionByName(b1), "vec_id", "v", model))
     AnnIndex.fsck(s, path).consistent shouldBe true
   }
 
@@ -401,9 +227,6 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     AnnIndex.codes(s, path).count() shouldBe rowsBefore - 1L
     AnnIndex.adcTopK(s, path, probes, model, 10)
       .select($"vec_id").as[Long].collect().toSet should not contain victim
-    // occupancy never counts dead rows
-    AnnIndex.occupancy(s, path, skewFactor = 100.0).rows shouldBe
-      rowsBefore - 1L
     // fsck: clean, tombstones surfaced (present id + harmless no-op)
     val f = AnnIndex.fsck(s, path)
     f.consistent shouldBe true
@@ -414,14 +237,6 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     AnnIndex.delete(s, path, Seq(victim, 999999L).toDF("vec_id"),
       "vec_id", ver = 2L)
     AnnIndex.fsck(s, path).tombstones shouldBe 2L
-
-    // a re-ingest at a LATER version wins the LWW merge and revives
-    AnnIndex.append(s, path, e.filter($"vec_id" === victim),
-      "vec_id", "v", ver = 3L)
-    AnnIndex.codes(s, path).filter($"vec_id" === victim).count() shouldBe 1L
-    AnnIndex.adcTopK(s, path, probes, model, 10)
-      .select($"vec_id").as[Long].collect().toSet should contain(victim)
-    AnnIndex.fsck(s, path).tombstones shouldBe 1L // only the no-op left
   }
 
   test("delete crash window: committed but invisible until redelivery " +
@@ -530,102 +345,5 @@ class AnnIndexSpec extends AnyFunSuite with Matchers with SparkFixture {
     AnnIndex.fsck(s, path).tombstones shouldBe 0L
     answers() shouldBe served2
     AnnIndex.fsck(s, path).consistent shouldBe true
-
-    // the MAINTAIN policy route: below threshold → no purge; at
-    // threshold → purge runs inside the pass and the answers hold
-    val victim3 = AnnIndex.codes(s, path)
-      .select($"vec_id").as[Long].head()
-    AnnIndex.delete(s, path, Seq(victim3).toDF("vec_id"), "vec_id", ver = 4L)
-    val served3 = answers()
-    AnnIndex.maintain(s, path, purgeTombstonesOver = 2L)
-      .purgedTombstones shouldBe 0L // 1 tombstone < threshold 2
-    AnnIndex.fsck(s, path).tombstones shouldBe 1L
-    AnnIndex.maintain(s, path, purgeTombstonesOver = 1L)
-      .purgedTombstones shouldBe 1L
-    AnnIndex.fsck(s, path).tombstones shouldBe 0L
-    answers() shouldBe served3
-    AnnIndex.fsck(s, path).consistent shouldBe true
-  }
-
-  test("a zero-error baseline never recommends a rebuild for " +
-       "double-noise batches, and an append tying the build version " +
-       "is rejected") {
-    val s = spark
-    import s.implicits._
-    val path = Files.createTempDirectory("ann_zero_base").toString + "/idx"
-    // corpus = exactly the coarse centroids: every residual is the
-    // zero vector, so the trained codebooks reproduce the build
-    // corpus perfectly and baselineErr is exactly 0.0
-    val model = AnnIndex.build(s, path, e.filter($"vec_id".isin(Cents: _*)),
-      "vec_id", "v", centroidIds = Cents, dim = 64, m = 4, k = 4,
-      rounds = 1)
-    model.baselineErr shouldBe 0.0
-    model.buildVer shouldBe 1L
-    // an append at the build's own version would make new-vs-rebuilt
-    // survival a LWW hash tie-break — rejected loudly
-    an[IllegalArgumentException] should be thrownBy
-      AnnIndex.append(s, path, e.filter($"vec_id" === 10L),
-        "vec_id", "v", ver = 1L)
-    // ulp-perturbed copies of the centroids: quantization error is
-    // nonzero but double-precision noise — a naive batchErr/0.0 ratio
-    // would be Infinity and spuriously demand a rebuild
-    val noise = e.filter($"vec_id".isin(Cents: _*))
-      .select(($"vec_id" + 1000L).as("vec_id"),
-        transform($"v", x => x + lit(1e-13)).as("v"))
-    val ok = AnnIndex.append(s, path, noise, "vec_id", "v", ver = 2L)
-    ok.rebuildRecommended shouldBe false
-    ok.buildVer shouldBe 1L
-    // genuine drift on the same zero baseline IS still caught
-    val drifted = e.filter($"vec_id".isin(Cents: _*))
-      .select(($"vec_id" + 2000L).as("vec_id"),
-        transform($"v", x => x * 5.0).as("v"))
-    val bad = AnnIndex.append(s, path, drifted, "vec_id", "v", ver = 3L)
-    bad.rebuildRecommended shouldBe true
-    bad.ratio.isPosInfinity shouldBe true
-  }
-
-  test("occupancy audit: a skewed coarse quantizer is flagged for " +
-       "re-train; a balanced one is not") {
-    val s = spark
-    import s.implicits._
-    // four well-separated anchor directions; the corpus piles 91 of
-    // 100 vectors onto anchor 0 — the hot-list shape a stale coarse
-    // quantizer produces when the corpus distribution narrows (at
-    // 100 TB the hot list's probe IS a partial corpus scan)
-    def anchor(a: Int, id: Long): Seq[Double] =
-      Seq.tabulate(64)(i =>
-        (if (i % 4 == a) 1.0 else 0.02) +
-          1e-3 * math.sin(id.toDouble * (i + 1)))
-    val skewed = (
-      (0 until 4).map(a => VecRow(a.toLong, anchor(a, a.toLong))) ++
-      (4 until 95).map(i => VecRow(i.toLong, anchor(0, i.toLong))) ++
-      (95 until 101).map(i => VecRow(i.toLong, anchor(1 + i % 3, i.toLong)))
-    ).toDF()
-    val skewPath = Files.createTempDirectory("ann_occ_skew").toString + "/idx"
-    AnnIndex.build(s, skewPath, skewed, "vec_id", "v",
-      centroidIds = Seq(0L, 1L, 2L, 3L), dim = 64, m = 4, k = 4,
-      rounds = 1)
-    val occ = AnnIndex.occupancy(s, skewPath, skewFactor = 3.0)
-    occ.nLists shouldBe 4
-    occ.rows shouldBe 101L
-    occ.maxRows should be >= 92L // anchor-0 list: 91 piles + centroid 0
-    occ.maxMeanRatio should be > 3.0
-    occ.retrainRecommended shouldBe true
-    // and the report rides maintain() — the cadence hook a streaming
-    // deployment actually runs
-    AnnIndex.maintain(s, skewPath, occupancyCheck = true,
-        occupancySkewFactor = 3.0)
-      .occupancy.exists(_.retrainRecommended) shouldBe true
-
-    // balanced control: same corpus spread evenly over the anchors
-    val balanced = (0 until 100).map(i =>
-      VecRow(i.toLong, anchor(i % 4, i.toLong))).toDF()
-    val balPath = Files.createTempDirectory("ann_occ_bal").toString + "/idx"
-    AnnIndex.build(s, balPath, balanced, "vec_id", "v",
-      centroidIds = Seq(0L, 1L, 2L, 3L), dim = 64, m = 4, k = 4,
-      rounds = 1)
-    val bal = AnnIndex.occupancy(s, balPath, skewFactor = 3.0)
-    bal.maxMeanRatio should be < 1.5
-    bal.retrainRecommended shouldBe false
   }
 }

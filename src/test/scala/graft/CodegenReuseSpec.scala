@@ -37,6 +37,19 @@ class CodegenReuseSpec extends AnyFunSuite with Matchers with SparkFixture {
     runQ(spark) shouldBe 0
   }
 
+  test("a query that trains PQ codebooks on every run (x72) compiles no " +
+       "class on its later runs") {
+    // each run builds equal codebooks as new arrays; a fresh broadcast
+    // handle per run reorders the generated code's common
+    // subexpressions and so compiles the stage again
+    val x72 = queries.Registry.byName("x72_pq_ann")
+    def run(): Long = compilesOf(
+      x72.run(spark, sf0001).write.format("noop").mode("overwrite").save())
+    run()
+    run() shouldBe 0
+    run() shouldBe 0
+  }
+
   test("re-planning the query on a DimStore commit session compiles no class") {
     runQ(spark)
     // with per-session artifact isolation the child's executors load

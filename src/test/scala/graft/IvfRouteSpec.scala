@@ -108,21 +108,16 @@ class IvfRouteSpec extends AnyFunSuite with Matchers with SparkFixture {
     }
 
     val got = ProductQuantizer.encode(df, "v", model)
-      .withColumn("err", ProductQuantizer.quantizationError(col("v"), model))
       .withColumn("lut", ProductQuantizer.adcLut(col("v"), model))
       .collect().map { r =>
         (r.getLong(0),
           (0 until m).map(mi => r.getInt(r.fieldIndex(s"pq_code$mi"))),
-          r.getDouble(r.fieldIndex("err")),
           r.getSeq[Seq[Double]](r.fieldIndex("lut")))
       }.sortBy(_._1)
 
-    got.foreach { case (id, codes, err, lut) =>
+    got.foreach { case (id, codes, lut) =>
       val v = rows(id.toInt)._2
       codes shouldBe (0 until m).map(refNearest(v, _))
-      // quantizationError = Σ_mi min_k dist2 — same fold, exact
-      err shouldBe (0 until m).map(mi =>
-        model.codebooks(mi).map(refDist2(v, mi, _)).min).sum
       // executor-side LUT == the driver loop (the adcLutRows contract,
       // exercised here at k=32)
       lut shouldBe ProductQuantizer.adcLutRows(v.toArray, model)

@@ -612,172 +612,6 @@ class VersionedStoreSpec extends AnyFunSuite with Matchers with SparkFixture {
     } finally DimStore.unrouteLogViaHadoop(root)
   }
 
-  test("LogStore seam, object-store route: the commit/race/compact/vacuum/" +
-       "time-travel matrix holds through ExternalLogStore — coordinator-" +
-       "claimed commits over raw overwrite-PUT storage") {
-    val s = spark
-    import s.implicits._
-    val root = Files.createTempDirectory("vs_ext").toString
-    val path = root + "/dim"
-    // file-backed coordinator (the cross-process DynamoDB stand-in)
-    // over the object-store simulator, which REFUSES create-if-absent
-    // and has only copy+delete "rename" — nothing in the protocol may
-    // lean on a primitive S3 doesn't have
-    val coord = new graft.ops.FileCommitCoordinator(
-      Files.createTempDirectory("vs_ext_coord").toString)
-    // completeTtlMs = -1: completed entries expire on the very next
-    // listing — the whole matrix below runs with TTL expiry ACTIVE at
-    // its most aggressive, so nothing in the protocol can depend on a
-    // completed entry outliving its commit
-    val ext = new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord,
-      completeTtlMs = -1L)
-    DimStore.routeLogViaExternal(root, ext)
-    try {
-      DimStore.upsert(s, path,
-        Seq((1L, "alice", 10L), (2L, "bob", 10L)).toDF("id", "name", "ver"),
-        "id", "ver", nBuckets = 4)
-      DimStore.upsert(s, path,
-        Seq((1L, "alice2", 20L), (3L, "carol", 20L)).toDF("id", "name", "ver"),
-        "id", "ver")
-      DimStore.history(path) shouldBe Seq(1L, 2L)
-      DimStore.read(s, path).select("id", "name").as[(Long, String)]
-        .collect().sorted shouldBe
-        Seq((1L, "alice2"), (2L, "bob"), (3L, "carol"))
-      DimStore.read(s, path, asOf = 1L).select("id", "name").as[(Long, String)]
-        .collect().sorted shouldBe Seq((1L, "alice"), (2L, "bob"))
-      // concurrent committers: the coordinator's conditional put must
-      // admit exactly one winner per version, losers retry
-      val threads = (1 to 4).map { t =>
-        new Thread(() => {
-          (1 to 3).foreach { i =>
-            DimStore.upsert(s, path,
-              Seq((t * 100L + i, s"w$t-$i", i.toLong)).toDF("id", "name", "ver"),
-              "id", "ver")
-          }
-        })
-      }
-      threads.foreach(_.start())
-      threads.foreach(_.join())
-      DimStore.history(path) shouldBe (1L to 14L)
-      val got = DimStore.read(s, path).select("id", "name")
-        .as[(Long, String)].collect().toMap
-      got.size shouldBe 15
-      for (t <- 1 to 4; i <- 1 to 3) got(t * 100L + i) shouldBe s"w$t-$i"
-      // maintenance commits ride the same protocol
-      DimStore.compact(s, path)
-      DimStore.rebucket(s, path, "id", newBuckets = 8)
-      DimStore.rewrite(s, path, "id")(df => df.filter($"id" < 100))
-      DimStore.history(path) shouldBe (1L to 17L)
-      DimStore.read(s, path).count() shouldBe 3
-      DimStore.read(s, path, asOf = 16L).count() shouldBe 15
-      DimStore.vacuum(s, path, keepLast = 2, graceMillis = 0L) should be > 0
-      DimStore.history(path) shouldBe Seq(16L, 17L)
-      DimStore.read(s, path).count() shouldBe 3
-      an[IllegalArgumentException] should be thrownBy
-        DimStore.read(s, path, asOf = 1L).collect()
-      // root projection equals the snapshot (object-store clone = copy)
-      s.read.parquet(path).select("id", "name").as[(Long, String)]
-        .collect().toSet shouldBe
-        DimStore.read(s, path).select("id", "name").as[(Long, String)]
-          .collect().toSet
-    } finally DimStore.unrouteLogViaExternal(root)
-  }
-
-  test("ExternalLogStore crash window: a commit claimed in the coordinator " +
-       "but never materialized is completed by ANY later reader — the " +
-       "committed version can neither be lost nor stay invisible") {
-    val dir = Files.createTempDirectory("ext_crash").toString
-    val coord = new graft.ops.InMemoryCommitCoordinator
-    val ext = new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord)
-    graft.ops.ObjectStoreSim.mkdirs(dir)
-    // normal write-read roundtrip
-    ext.createIfAbsent(s"$dir/a", "body-a") shouldBe true
-    ext.readString(s"$dir/a") shouldBe "body-a"
-    ext.createIfAbsent(s"$dir/a", "other") shouldBe false
-    ext.readString(s"$dir/a") shouldBe "body-a"
-    // crash after the commit point (claim recorded, target never PUT):
-    // the object store alone shows nothing...
-    ext.claimOnly(s"$dir/b", "body-b") shouldBe true
-    graft.ops.ObjectStoreSim.exists(s"$dir/b") shouldBe false
-    // ...but a fresh reader sharing the coordinator sees AND completes
-    // it through every read-side surface
-    val reader = new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord)
-    reader.list(dir) should contain("b")
-    reader.readString(s"$dir/b") shouldBe "body-b"
-    graft.ops.ObjectStoreSim.exists(s"$dir/b") shouldBe true
-    // a racing claimant of the same path loses to the crashed winner
-    // and the winner's body survives
-    reader.createIfAbsent(s"$dir/b", "usurper") shouldBe false
-    reader.readString(s"$dir/b") shouldBe "body-b"
-    // N concurrent claimants of one fresh path: exactly one wins
-    val wins = new java.util.concurrent.atomic.AtomicInteger
-    val ts = (1 to 8).map { t =>
-      new Thread(() => {
-        if (ext.createIfAbsent(s"$dir/c", s"t$t")) { wins.incrementAndGet(); () }
-      })
-    }
-    ts.foreach(_.start())
-    ts.foreach(_.join())
-    wins.get() shouldBe 1
-    // the raw object store refuses the primitive it doesn't have
-    an[UnsupportedOperationException] should be thrownBy
-      graft.ops.ObjectStoreSim.createIfAbsent(s"$dir/z", "x")
-    // temp-debris sweep: a writer that crashed BEFORE its coordinator
-    // claim strands an unreferenced .commit-tmp- object. An aged one
-    // is swept by the next listing; a fresh one (possibly an in-flight
-    // writer's) survives; the pending entry's temp ('b''s, before its
-    // recovery above) was never sweepable because the entry referenced
-    // it.
-    graft.ops.ObjectStoreSim.writeAtomic(s"$dir/.commit-tmp-old", "junk")
-    java.nio.file.Files.setLastModifiedTime(
-      java.nio.file.Paths.get(s"$dir/.commit-tmp-old"),
-      java.nio.file.attribute.FileTime.fromMillis(
-        System.currentTimeMillis() - 16L * 60 * 1000))
-    graft.ops.ObjectStoreSim.writeAtomic(s"$dir/.commit-tmp-fresh", "inflight")
-    val listed = reader.list(dir)
-    listed should not contain ".commit-tmp-old"
-    listed should not contain ".commit-tmp-fresh" // temps never listed
-    graft.ops.ObjectStoreSim.exists(s"$dir/.commit-tmp-old") shouldBe false
-    graft.ops.ObjectStoreSim.exists(s"$dir/.commit-tmp-fresh") shouldBe true
-  }
-
-  test("coordinator completed-entry TTL: completed entries expire so " +
-       "coordinator state is bounded by in-flight commits; expiry " +
-       "neither breaks create-if-absent nor resurrects a vacuumed " +
-       "version") {
-    val dir = Files.createTempDirectory("ext_ttl").toString
-    val coord = new graft.ops.InMemoryCommitCoordinator
-    // -1: expire completed entries on the very next listing
-    val ext = new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord,
-      completeTtlMs = -1L)
-    graft.ops.ObjectStoreSim.mkdirs(dir)
-    ext.createIfAbsent(s"$dir/a", "body-a") shouldBe true
-    coord.list(s"$dir/").size shouldBe 1
-    // the listing sweeps the completed entry; the committed object
-    // itself is untouched and keeps serving
-    ext.list(dir) should contain("a")
-    coord.list(s"$dir/") shouldBe empty
-    ext.readString(s"$dir/a") shouldBe "body-a"
-    // create-if-absent SEMANTICS survive the entry's absence: the
-    // base-store probe rejects a re-claim of a committed path (without
-    // it, a "winning" claim would overwrite the committed body)
-    ext.createIfAbsent(s"$dir/a", "usurper") shouldBe false
-    ext.readString(s"$dir/a") shouldBe "body-a"
-    // a PENDING entry is never expired: claim without materializing,
-    // list — the entry must survive the sweep and complete normally
-    ext.claimOnly(s"$dir/b", "body-b") shouldBe true
-    ext.list(dir) should contain("b")
-    ext.readString(s"$dir/b") shouldBe "body-b"
-    // vacuum semantics with expiry: delete a committed version whose
-    // entry already expired — nothing anywhere can resurrect it
-    ext.delete(s"$dir/a")
-    ext.list(dir) should not contain "a"
-    ext.exists(s"$dir/a") shouldBe false
-    coord.list(s"$dir/").count(_._1 == s"$dir/a") shouldBe 0
-    // and later listings still never bring it back
-    ext.list(dir) should not contain "a"
-  }
-
   test("rebucket: fan-out evolution as a commit — reads agree before and " +
        "after, time travel crosses the boundary, later upserts are " +
        "O(touched) at the NEW fan-out, shrink removes orphan root dirs") {
@@ -864,103 +698,5 @@ class VersionedStoreSpec extends AnyFunSuite with Matchers with SparkFixture {
       .select("id", "name", "ver").as[(Long, String, Long)].collect().toSet
     viaRoot shouldBe viaManifest
     viaRoot.size shouldBe 10
-  }
-
-  test("the file-backed coordinator's listing skips in-flight dot temps — " +
-       "a half-written writeAtomic staging file never surfaces as a " +
-       "phantom entry to a concurrent lister") {
-    val root = Files.createTempDirectory("coord_dots").toString
-    val c = new graft.ops.FileCommitCoordinator(root)
-    c.putIfAbsent("t/_commits/00000000000000000001.json",
-      "pending:x") shouldBe true
-    // what a concurrent update's temp looks like mid-write: a
-    // dot-prefixed file whose body parses as a (key, value) pair for
-    // a version that was never committed
-    Files.write(Paths.get(root, ".tmp-halfway"),
-      "t/_commits/00000000000000000002.json\npending:phantom"
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    c.list("t/_commits/").map(_._1) shouldBe
-      Seq("t/_commits/00000000000000000001.json")
-    c.get("t/_commits/00000000000000000001.json") shouldBe Some("pending:x")
-  }
-
-  test("a completer racing a concurrent delete() cannot resurrect the " +
-       "deleted version — neither as a coordinator entry nor as a " +
-       "rematerialized target object") {
-    val dir = Files.createTempDirectory("ext_del_race").toString
-    val inner = new graft.ops.InMemoryCommitCoordinator
-    val p = s"$dir/00000001"
-    // interpose on get(): the first pending read hands back the claim,
-    // then a delete() of the version lands BEFORE the reader finishes
-    // completing it — the exact interleaving where an unconditional
-    // complete-mark resurrects the entry (and the temp-rematerialized
-    // target) of a version that no longer exists
-    var extRef: graft.ops.ExternalLogStore = null
-    val coord = new graft.ops.CommitCoordinator {
-      private var armed = true
-      def putIfAbsent(k: String, v: String) = inner.putIfAbsent(k, v)
-      def get(k: String): Option[String] = {
-        val r = inner.get(k)
-        if (armed && k == p && r.exists(_.startsWith("pending:"))) {
-          armed = false
-          extRef.delete(p) // concurrent delete: target (absent), entry
-        }
-        r
-      }
-      def list(prefix: String) = inner.list(prefix)
-      def updateIfPresent(k: String, v: String) = inner.updateIfPresent(k, v)
-      def remove(k: String) = inner.remove(k)
-    }
-    val ext = new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord)
-    extRef = ext
-    graft.ops.ObjectStoreSim.mkdirs(dir)
-    // createIfAbsent claims, then completes through recoverEntry — the
-    // injected delete() fires inside that completion
-    ext.createIfAbsent(p, "body") shouldBe true
-    inner.get(p) shouldBe None                       // entry stays deleted
-    graft.ops.ObjectStoreSim.exists(p) shouldBe false // target stays deleted
-    ext.list(dir) shouldBe Seq.empty                 // no phantom version
-  }
-
-  test("recoverEntry tolerates a concurrent completer: readers racing the " +
-       "materialize window of a claimed commit never see a spurious " +
-       "failure on a healthy log") {
-    val dir = Files.createTempDirectory("ext_recover_race").toString
-    val coord = new graft.ops.InMemoryCommitCoordinator
-    val ext = new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord)
-    graft.ops.ObjectStoreSim.mkdirs(dir)
-    val errs = new java.util.concurrent.ConcurrentLinkedQueue[Throwable]
-    val stop = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val hiClaimed = new java.util.concurrent.atomic.AtomicInteger(0)
-    // 4 readers hammer the freshest claimed version through the
-    // read-side recovery path while the committer materializes it —
-    // the pending→complete transition (target PUT, entry marked,
-    // temp retired) races every one of them
-    val readers = (1 to 4).map { _ =>
-      new Thread(() => {
-        val r = new graft.ops.ExternalLogStore(graft.ops.ObjectStoreSim, coord)
-        while (!stop.get()) {
-          val hi = hiClaimed.get()
-          if (hi > 0) {
-            val p = f"$dir/$hi%08d"
-            try { if (r.exists(p)) { r.readString(p); () } }
-            catch { case t: Throwable => errs.add(t); () }
-          }
-        }
-      })
-    }
-    readers.foreach(_.start())
-    (1 to 300).foreach { i =>
-      val p = f"$dir/$i%08d"
-      // claim first so readers can see the pending state, then
-      // complete through the normal read path, racing them
-      ext.claimOnly(p, s"body-$i") shouldBe true
-      hiClaimed.set(i)
-      ext.readString(p) shouldBe s"body-$i"
-    }
-    stop.set(true)
-    readers.foreach(_.join())
-    import scala.jdk.CollectionConverters._
-    errs.asScala.toList shouldBe Nil
   }
 }
